@@ -20,11 +20,24 @@ from pyspark.sql import DataFrame, SparkSession
 
 from puregraphdb_spark.sources.registry import TABLES, load_table
 
+
+def _default_driver_memory() -> str:
+    """Half the machine's physical memory, capped at 24g: a heap larger
+    than the machine lets the JVM grow until the kernel kills it."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return "24g"
+    return f"{max(1 << 10, min(24 << 10, (phys >> 20) // 2))}m"
+
+
 _DEFAULT_CONF = {
     # local-mode JVM heap: the 1g default stalls GC on array-heavy
     # operators (collect_set adjacency, broadcasts). Applied only when
     # WE create the session; no effect on an already-running JVM.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+    # SPARK_GRAFT_DRIVER_MEM overrides the machine-derived default.
+    "spark.driver.memory": (os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                            or _default_driver_memory()),
     # AQE: runtime re-optimization — coalesce post-shuffle partitions,
     # split skewed join partitions, demote/promote broadcast at runtime.
     "spark.sql.adaptive.enabled": "true",

@@ -1900,7 +1900,8 @@ def mann_whitney_u(events: DataFrame, ref_type: str = "purchase",
     #   Σ_A avg2 = Σ_v ca·avg2,  Σ_rows (t²−1) = Σ_v (t³−t),
     #   n_a = Σ_v ca,  n_b = Σ_v (t − ca)
     # — all exact bigint arithmetic, so the results are bit-identical
-    # to the per-row window form (pinned in test_r15_optimizations).
+    # to the per-row window form (pinned in tests/test_round14_operators.py::
+    # test_mann_whitney_value_grain_equals_per_row_window).
     per_v = (
         a.unionByName(b)
         .groupBy("pair", "v")

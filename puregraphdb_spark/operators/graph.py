@@ -10,15 +10,18 @@ DataFrame-native implementation of the same algorithm family:
 - ``degrees``          — in/out/total degree
 - ``aggregate_messages`` — the graph-parallel primitive (GraphX
                           mapReduceTriplets, OSDI'14 §4)
-- ``pregel``           — superstep loop with lineage checkpointing
-- ``connected_components``, ``pagerank``, ``label_propagation``
+- ``pregel``           — the superstep loop: one checkpoint job per
+                          superstep, convergence observed on that job
+- ``connected_components``, ``pagerank``, ``label_propagation``,
+  ``hits``, ``shortest_paths``, ``k_core`` — expressed over ``pregel``
 - ``triangle_count``   — canonical-edge join counting
 
-Scale posture: vertex-cut partitioning is approximated by hash
-partitioning edges on src (and relying on AQE for skew); every
-superstep is join + partial-agg + join, all JVM-side. Lineage is cut
-via localCheckpoint every ``checkpoint_interval`` supersteps —
-without it, iterative DataFrame plans grow unboundedly (SURVEY §3 EP3).
+Scale posture: ``pregel`` materializes the algorithm's edge relation
+once per call, hash-partitioned on src, and each superstep's new vertex
+state once, keyed on id. The checkpoint keeps that partitioning, so a
+superstep's joins between edges and state are co-partitioned: the
+message aggregation is its only shuffle. The checkpoint also cuts
+lineage, so no plan grows past one superstep (SURVEY §3 EP3).
 """
 
 from __future__ import annotations
@@ -27,18 +30,24 @@ import re
 import warnings
 from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from puregraphdb_spark.sources.registry import load_table
+
+_FLAT_CHECKPOINT_WARNED = False
+
+#: Random-walk steps between lineage cuts. A walk step adds one join
+#: to the state's plan; 16 steps keep the analyzed plan under ~60k
+#: characters for the uniform and the biased node2vec sampler alike.
+_WALK_STEPS_PER_CUT = 16
 
 #: One motif term: optional ``!`` negation,
 #: ``(name?[:idpred]?)-[name?[:pred]?]->(name?[:idpred]?)`` with
 #: optional edge-attribute (``[e:w>=2]`` / ``[:w>=2]``) and vertex-id
 #: (``(b:id%50=0)``) predicates, or a variable-length hop spec
 #: ``(a)-[*..k]->(b)`` / ``(a)-[*m..k]->(b)``.
-_FLAT_CHECKPOINT_WARNED = False
-
 _MOTIF_TERM = re.compile(
     r"^(?P<neg>!)?\s*"
     r"\((?P<src>[A-Za-z_]\w*)?(?:\s*:\s*(?P<spred>[^)]+))?\)\s*-\s*"
@@ -93,8 +102,8 @@ def _pred_column(pred: str, cols: dict[str, Column],
 
 
 def flat_checkpoint(df: DataFrame) -> DataFrame:
-    """localCheckpoint with INHERITED-STATS STRIPPING — the correct
-    lineage cut for iterative DataFrame loops.
+    """Eager localCheckpoint WITHOUT inherited statistics — the lineage
+    cut for iterative DataFrame loops.
 
     ``Dataset.localCheckpoint`` deliberately preserves the child
     plan's Catalyst statistics (originStats), so a checkpoint chained
@@ -106,21 +115,27 @@ def flat_checkpoint(df: DataFrame) -> DataFrame:
     Toom-Cook multiplications on million-digit integers (jstack: all
     CPU in java.math.BigInteger.multiply), exploding per-round
     planning time 0.6 s → 30–190 s on flat data, flat lineage, flat
-    plans. Rebuilding the DataFrame over the SAME materialized
-    InternalRow RDD resets the stats to the size-unknown default; the
+    plans. Re-wrapping the SAME checkpointed relation without origin
+    statistics resets the estimate to the size-unknown default, so the
     loop stays flat (27 rounds in 19 s where the stock checkpoint
-    chain needed 20+ minutes), and join strategy selection is
-    unaffected in practice because AQE re-plans joins from RUNTIME
-    shuffle sizes, not the static estimate. Falls back to the plain
-    checkpoint if the internal constructor is unavailable.
+    chain needed 20+ minutes). The relation keeps its output
+    partitioning: a state hash-partitioned on its key joins a relation
+    partitioned the same way without a shuffle. Falls back to the
+    plain checkpoint if the internal constructor is unavailable.
     """
     ck = df.localCheckpoint(eager=True)
     try:
         spark = ck.sparkSession
-        jdf = ck._jdf
-        fresh = spark._jsparkSession.internalCreateDataFrame(
-            jdf.queryExecution().toRdd(), jdf.schema(), False)
-        return DataFrame(fresh, spark)
+        jss = spark._jsparkSession
+        rel = ck._jdf.queryExecution().analyzed()  # the LogicalRDD
+        none = spark._jvm.scala.Option.empty()
+        flat = rel.copy(rel.output(), rel.rdd(), rel.outputPartitioning(),
+                        rel.outputOrdering(), rel.isStreaming(),
+                        rel.stream(), jss, none, none)
+        return DataFrame(
+            spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+                jss, flat),
+            spark)
     except Exception:  # pragma: no cover - version-dependent internal
         # ADVICE r7: the silent fallback reintroduces the BigInt-stats
         # planning blowup this function exists to fix (0.6 s → 190 s
@@ -130,7 +145,7 @@ def flat_checkpoint(df: DataFrame) -> DataFrame:
         if not _FLAT_CHECKPOINT_WARNED:
             _FLAT_CHECKPOINT_WARNED = True
             warnings.warn(
-                "flat_checkpoint: internalCreateDataFrame unavailable; "
+                "flat_checkpoint: LogicalRDD.copy unavailable; "
                 "falling back to plain localCheckpoint. Iterative loops "
                 "may hit the checkpoint-inherited BigInt-stats planning "
                 "blowup (~30x/round slowdown) on this Spark version.",
@@ -138,6 +153,12 @@ def flat_checkpoint(df: DataFrame) -> DataFrame:
                 stacklevel=2,
             )
         return ck
+
+
+def _release(checkpoint: DataFrame) -> None:
+    """Drop the blocks of a ``flat_checkpoint`` result. Only for a
+    checkpoint nothing will read again."""
+    checkpoint._jdf.queryExecution().analyzed().rdd().unpersist(True)
 
 
 def _local_ktruss_finish(edges: list[tuple], need: int) -> list[tuple]:
@@ -174,13 +195,6 @@ def _local_ktruss_finish(edges: list[tuple], need: int) -> list[tuple]:
                     if sup[key] < need:
                         q.append(key)
     return [(u, v, sup[(u, v)]) for u, v in sorted(alive)]
-
-
-def _plan_chars(df: DataFrame) -> int:
-    """Size of the analyzed logical plan — the lineage-growth metric
-    the iterative loops checkpoint on (cheap: analysis only, no
-    optimizer run, no job)."""
-    return len(df._jdf.queryExecution().analyzed().toString())
 
 
 class Graph:
@@ -679,67 +693,79 @@ class Graph:
 
     def pregel(
         self,
+        edges: DataFrame,
         initial: Callable[[DataFrame], DataFrame],
-        superstep: Callable[["Graph", DataFrame, int], DataFrame],
-        converged: Callable[[DataFrame, DataFrame], bool],
+        step: Callable[[DataFrame, DataFrame], DataFrame],
+        changed: Column | None = None,
         max_iter: int = 20,
-        checkpoint_interval: int = 5,
-        max_plan_chars: int = 150_000,
     ) -> DataFrame:
-        """Driver-side superstep loop over vertex state DataFrames.
+        """The superstep loop every iterative algorithm here runs on.
 
-        - ``initial(vertices) -> state`` (must keep the id column)
-        - ``superstep(graph, state, i) -> new state``
-        - ``converged(old, new) -> bool`` (may run a count() action)
+        - ``edges`` — the relation messages travel along, src → dst;
+          materialized once per call, hash-partitioned on src.
+        - ``initial(edges) -> state`` — the vertex state keyed on
+          ``id`` (several rows per id are allowed), built from the
+          graph's vertices or from the materialized edges.
+        - ``step(edges, state) -> new state`` — one superstep. It may
+          add helper columns for ``changed`` to read; the loop keeps
+          only the state's own columns.
+        - ``changed`` — a per-row predicate over the step's output. The
+          loop stops after the first superstep in which no row
+          satisfies it; ``None`` runs all ``max_iter`` supersteps.
 
-        Lineage is cut with localCheckpoint every ``checkpoint_interval``
-        supersteps. Ancestor states are unpersisted only AFTER a real
-        materialization point (a checkpoint, or the final count) — never
-        before, which would silently turn every persist into a no-op and
-        recompute the full ancestry per superstep. Between
-        materialization points supersteps stay lazy: one job per
-        checkpoint window, not one per superstep. The returned state is
-        materialized and persisted — the caller owns its unpersist.
+        Each superstep is ONE job: an eager ``flat_checkpoint``
+        materializes the new state, and the changed-row count is an
+        Observation on that same job. Every plan is therefore one
+        superstep deep, and the checkpoint keeps the state partitioned
+        on id, so the next superstep joins edges and state without
+        shuffling either. The loop releases each state once its
+        successor is materialized, and the edges at the end: only the
+        returned state, itself a checkpoint, survives the call.
 
-        Lineage is ALSO cut whenever the analyzed plan outgrows
-        ``max_plan_chars`` (VERDICT r4: map-typed state can accumulate
-        dozens of broadcasts inside one fixed-cadence window —
-        shortest_paths hit 62) — so plan size stays bounded regardless
-        of what the superstep body builds, and the returned state's
-        plan is itself capped the same way.
+        The graph's edges usually feed both ``edges`` and, through the
+        vertices, the initial state. Unless they are cached already,
+        the loop caches them while it runs, so however they are
+        derived, the derivation runs once per call.
         """
-        state = initial(self.vertices).persist()
-        state.count()  # materialize
-        pending: list[DataFrame] = []  # persisted ancestors awaiting drop
-        for i in range(max_iter):
-            new_state = superstep(self, state, i)
-            if ((i + 1) % checkpoint_interval == 0
-                    or _plan_chars(new_state) > max_plan_chars):
-                new_state = new_state.localCheckpoint(eager=True)  # action
-                for s in pending:
-                    s.unpersist()
-                pending.clear()
-            else:
-                new_state = new_state.persist()
-            done = converged(state, new_state)  # may run an action
-            pending.append(state)
-            state = new_state
-            if done:
-                break
-        state.count()  # materialize the final state before dropping parents
-        if _plan_chars(state) > 30_000:
-            # cap the RETURNED plan too (it may sit mid-window carrying
-            # several supersteps of lineage) — cheap: partitions come
-            # straight from the persisted cache, and downstream
-            # composition then starts from a flat scan instead of the
-            # superstep tree (graph_shortest_paths carried 62 broadcasts
-            # into its final plan before this, VERDICT r4)
-            state = state.localCheckpoint(eager=True)
-        for s in pending:
-            s.unpersist()
+        cached = self.edges.storageLevel == StorageLevel.NONE
+        if cached:
+            self.edges.persist()
+        held: list[DataFrame] = []  # checkpoints released on the way out
+        try:
+            edges = flat_checkpoint(edges.repartition("src"))
+            held.append(edges)
+            state = initial(edges)
+            for _ in range(max_iter):
+                new = step(edges, state)
+                if changed is not None:
+                    obs = Observation()
+                    new = new.observe(obs, F.count_if(changed).alias("n"))
+                new = flat_checkpoint(new.select(*state.columns))
+                if len(held) > 1:
+                    _release(held.pop())
+                held.append(new)
+                state = new
+                if changed is not None and obs.get["n"] == 0:
+                    break
+            if len(held) > 1:
+                held.pop()  # the result survives the call
+            else:  # no superstep ran: detach from the edges
+                state = flat_checkpoint(state)
+        finally:
+            for ck in held:
+                _release(ck)
+            if cached:
+                self.edges.unpersist(blocking=True)
         return state
 
     # -- algorithms ----------------------------------------------------------
+
+    def _undirected(self) -> DataFrame:
+        """Both directions of every edge, as (src, dst)."""
+        return self.edges.select("src", "dst").unionByName(
+            self.edges.select(F.col("dst").alias("src"),
+                              F.col("src").alias("dst"))
+        )
 
     def connected_components(self, max_iter: int = 50) -> DataFrame:
         """Min-vertex-id label propagation to fixpoint → (id, component).
@@ -750,39 +776,51 @@ class Graph:
         converges in fewer rounds at extreme diameters; plain propagation
         is the GraphX baseline and is shuffle-per-round identical here.)
         """
-        undirected = self.edges.select("src", "dst").unionByName(
-            self.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        def step(e: DataFrame, state: DataFrame) -> DataFrame:
+            msgs = (
+                e.join(state, e.src == state.id)
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.min("component").alias("nbr_min"))
+            )
+            return state.join(msgs, "id", "left").select(
+                "id",
+                F.least("component", F.coalesce("nbr_min", "component"))
+                .alias("component"),
+                F.col("component").alias("__old"),
+            )
+
+        return self.pregel(
+            self._undirected(),
+            lambda e: self.vertices.select(
+                "id", F.col("id").alias("component")),
+            step,
+            changed=F.col("component") != F.col("__old"),
+            max_iter=max_iter,
         )
 
-        def initial(v: DataFrame) -> DataFrame:
-            return v.select("id", F.col("id").alias("component"))
-
-        def step(g: Graph, state: DataFrame, i: int) -> DataFrame:
-            msgs = (
-                undirected.join(state, undirected.src == state.id)
-                .select(F.col("dst").alias("id"), F.col("component").alias("msg"))
-                .groupBy("id")
-                .agg(F.min("msg").alias("nbr_min"))
+    def _rank_walk(self, edges: DataFrame, contrib: Column,
+                   initial: Column, teleport: Column,
+                   reset_prob: float, max_iter: int) -> DataFrame:
+        """The PageRank power iteration → (id, pagerank): a superstep
+        sums ``contrib`` over ``edges`` ⋈ state into each dst, and
+        rank = teleport + (1-reset) · that sum (0 without in-edges)."""
+        def step(e: DataFrame, state: DataFrame) -> DataFrame:
+            in_sum = (
+                e.join(state, e.src == state.id)
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.sum(contrib).alias("in_sum"))
             )
-            return (
-                state.join(msgs, "id", "left")
-                .select(
-                    "id",
-                    F.least(F.col("component"), F.coalesce("nbr_min", "component")).alias("component"),
-                )
+            return state.select("id").join(in_sum, "id", "left").select(
+                "id",
+                (teleport + F.lit(1.0 - reset_prob)
+                 * F.coalesce("in_sum", F.lit(0.0))).alias("pagerank"),
             )
 
-        def converged(old: DataFrame, new: DataFrame) -> bool:
-            changed = (
-                old.alias("o")
-                .join(new.alias("n"), "id")
-                .filter(F.col("o.component") != F.col("n.component"))
-                .limit(1)
-                .count()
-            )
-            return changed == 0
-
-        return self.pregel(initial, step, converged, max_iter=max_iter)
+        return self.pregel(
+            edges,
+            lambda e: self.vertices.select("id", initial.alias("pagerank")),
+            step, max_iter=max_iter,
+        )
 
     def pagerank(self, reset_prob: float = 0.15, max_iter: int = 10,
                  weight_col: str | None = None) -> DataFrame:
@@ -801,47 +839,19 @@ class Graph:
         """
         if weight_col is None:
             pre = self.out_degrees()
-            contrib_expr = F.col("pagerank") / F.col("out_degree")
+            contrib = F.col("pagerank") / F.col("out_degree")
             keep = ["src", "dst", "out_degree"]
         else:
             pre = self.edges.groupBy(F.col("src").alias("id")).agg(
                 F.sum(weight_col).alias("w_out")
             )
-            contrib_expr = (
+            contrib = (
                 F.col("pagerank") * F.col(weight_col) / F.col("w_out")
             )
             keep = ["src", "dst", weight_col, "w_out"]
-        edges = (
-            self.edges.join(pre, self.edges.src == pre.id)
-            .select(*keep)
-            .persist()
-        )
-
-        def initial(v: DataFrame) -> DataFrame:
-            return v.select("id", F.lit(1.0).alias("pagerank"))
-
-        def step(g: Graph, state: DataFrame, i: int) -> DataFrame:
-            contribs = (
-                edges.join(state, edges.src == state.id)
-                .select(
-                    F.col("dst").alias("id"),
-                    contrib_expr.alias("contrib"),
-                )
-                .groupBy("id")
-                .agg(F.sum("contrib").alias("in_sum"))
-            )
-            return (
-                g.vertices.select("id")
-                .join(contribs, "id", "left")
-                .select(
-                    "id",
-                    (F.lit(reset_prob) + F.lit(1.0 - reset_prob) * F.coalesce("in_sum", F.lit(0.0))).alias("pagerank"),
-                )
-            )
-
-        result = self.pregel(initial, step, lambda o, n: False, max_iter=max_iter)
-        edges.unpersist()
-        return result
+        edges = self.edges.join(pre, self.edges.src == pre.id).select(*keep)
+        return self._rank_walk(edges, contrib, F.lit(1.0),
+                               F.lit(reset_prob), reset_prob, max_iter)
 
     def hits(self, max_iter: int = 10) -> DataFrame:
         """HITS (Kleinberg hubs & authorities) → (id, hub, authority).
@@ -858,8 +868,6 @@ class Graph:
         (graphs with no edges in one direction) normalize to 0 rather
         than dividing by zero.
         """
-        edges = self.edges.select("src", "dst").persist()
-
         def _l2_normalized(scores: DataFrame, col: str) -> DataFrame:
             norm = scores.agg(
                 F.sqrt(F.sum(F.col(col) * F.col(col))).alias("__norm"))
@@ -873,71 +881,65 @@ class Graph:
                 )
             )
 
-        def initial(v: DataFrame) -> DataFrame:
-            return v.select(
-                "id", F.lit(1.0).alias("hub"), F.lit(1.0).alias("authority"))
-
-        def step(g: Graph, state: DataFrame, i: int) -> DataFrame:
+        def step(e: DataFrame, state: DataFrame) -> DataFrame:
+            ids = state.select("id")
             auth_raw = (
-                edges.join(state, edges.src == state.id)
+                e.join(state, e.src == state.id)
                 .groupBy(F.col("dst").alias("id"))
                 .agg(F.sum("hub").alias("authority"))
             )
             auth = _l2_normalized(
-                g.vertices.select("id")
-                .join(auth_raw, "id", "left")
+                ids.join(auth_raw, "id", "left")
                 .select("id", F.coalesce("authority", F.lit(0.0))
                         .alias("authority")),
                 "authority",
             )
             hub_raw = (
-                edges.join(auth, edges.dst == auth.id)
+                e.join(auth, e.dst == auth.id)
                 .groupBy(F.col("src").alias("id"))
                 .agg(F.sum("authority").alias("hub"))
             )
             hub = _l2_normalized(
-                g.vertices.select("id")
-                .join(hub_raw, "id", "left")
+                ids.join(hub_raw, "id", "left")
                 .select("id", F.coalesce("hub", F.lit(0.0)).alias("hub")),
                 "hub",
             )
             return hub.join(auth, "id").select("id", "hub", "authority")
 
-        result = self.pregel(initial, step, lambda o, n: False,
-                             max_iter=max_iter)
-        edges.unpersist()
-        return result
+        return self.pregel(
+            self.edges.select("src", "dst"),
+            lambda e: self.vertices.select(
+                "id", F.lit(1.0).alias("hub"), F.lit(1.0).alias("authority")),
+            step, max_iter=max_iter,
+        )
 
     def label_propagation(self, max_iter: int = 5) -> DataFrame:
         """Community detection: adopt the most frequent neighbor label
-        (ties → smaller label). Returns (id, label)."""
-        undirected = self.edges.select("src", "dst").unionByName(
-            self.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-
-        def initial(v: DataFrame) -> DataFrame:
-            return v.select("id", F.col("id").alias("label"))
-
-        def step(g: Graph, state: DataFrame, i: int) -> DataFrame:
-            counts = (
-                undirected.join(state, undirected.src == state.id)
-                .groupBy(F.col("dst").alias("vid"), "label")
-                .agg(F.count("*").alias("cnt"))
-            )
-            from pyspark.sql import Window
-
-            w = Window.partitionBy("vid").orderBy(F.desc("cnt"), "label")
+        (ties → smaller label), until no label changes or ``max_iter``
+        supersteps. Returns (id, label). The per-vertex pick is one
+        aggregate, min over (−count, label): no sort."""
+        def step(e: DataFrame, state: DataFrame) -> DataFrame:
             best = (
-                counts.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") == 1)
-                .select(F.col("vid").alias("id"), F.col("label").alias("new_label"))
+                e.join(state, e.src == state.id)
+                .groupBy(F.col("dst").alias("id"), "label")
+                .agg(F.count("*").alias("cnt"))
+                .groupBy("id")
+                .agg(F.min(F.struct((-F.col("cnt")).alias("c"),
+                                    F.col("label").alias("l")))
+                     .alias("best"))
             )
-            return (
-                state.join(best, "id", "left")
-                .select("id", F.coalesce("new_label", "label").alias("label"))
+            return state.join(best, "id", "left").select(
+                "id", F.coalesce("best.l", "label").alias("label"),
+                F.col("label").alias("__old"),
             )
 
-        return self.pregel(initial, step, lambda o, n: False, max_iter=max_iter)
+        return self.pregel(
+            self._undirected(),
+            lambda e: self.vertices.select("id", F.col("id").alias("label")),
+            step,
+            changed=F.col("label") != F.col("__old"),
+            max_iter=max_iter,
+        )
 
     def strongly_connected_components(self, max_iter: int = 25,
                                       max_outer: int = 10) -> DataFrame:
@@ -1042,35 +1044,38 @@ class Graph:
     def k_core(self, k: int, max_iter: int = 30) -> DataFrame:
         """The k-core: vertices of the maximal subgraph where every
         vertex has undirected degree ≥ k → (id, degree) with the degree
-        measured INSIDE the core. Iterative peeling: drop vertices with
-        degree < k, re-filter edges to surviving endpoints, repeat to
-        fixpoint. Each round is one degree aggregation + two semi joins
-        over the shrinking edge set; lineage cut per round.
+        measured INSIDE the core. Iterative peeling over ``pregel``:
+        the state is each surviving vertex's degree. In a superstep
+        only the vertices below k send messages — one per edge, to
+        every neighbor — and leave; each survivor's degree drops by
+        the messages it receives. Stops when no vertex is below k.
         """
+        def step(e: DataFrame, state: DataFrame) -> DataFrame:
+            leaving = state.filter(F.col("degree") < k)
+            lost = (
+                e.join(leaving, e.src == leaving.id, "left_semi")
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.count("*").alias("lost"))
+            )
+            return (
+                state.filter(F.col("degree") >= k)
+                .join(lost, "id", "left")
+                .select("id", (F.col("degree")
+                               - F.coalesce("lost", F.lit(0)))
+                        .cast("long").alias("degree"))
+            )
+
         und = (
-            self.edges.select("src", "dst")
-            .unionByName(self.edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")))
+            self._undirected()
             .filter(F.col("src") != F.col("dst"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
-        for _ in range(max_iter):
-            deg = und.groupBy(F.col("src").alias("id")).agg(
-                F.count("*").cast("long").alias("degree"))
-            keep = deg.filter(F.col("degree") >= k).select("id")
-            dropped = deg.filter(F.col("degree") < k).limit(1).count()
-            if dropped == 0:
-                return deg
-            und = (
-                und.join(keep.select(F.col("id").alias("src")), "src",
-                         "left_semi")
-                .join(keep.select(F.col("id").alias("dst")), "dst",
-                      "left_semi")
-                .localCheckpoint(eager=True)
-            )
-        return und.groupBy(F.col("src").alias("id")).agg(
-            F.count("*").cast("long").alias("degree"))
+        return self.pregel(
+            und,
+            lambda e: e.groupBy(F.col("src").alias("id")).agg(
+                F.count("*").cast("long").alias("degree")),
+            step, changed=F.col("degree") < k, max_iter=max_iter,
+        )
 
     def coreness(self, max_k: int = 100, max_iter: int = 50) -> DataFrame:
         """Full core decomposition: every vertex's core NUMBER (the
@@ -1100,9 +1105,7 @@ class Graph:
         (tests/test_graph_extended.py).
         """
         und = (
-            self.edges.select("src", "dst")
-            .unionByName(self.edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")))
+            self._undirected()
             .filter(F.col("src") != F.col("dst"))
             .distinct()
             .localCheckpoint(eager=True)
@@ -1188,9 +1191,7 @@ class Graph:
         not heuristic.
         """
         und = (
-            self.edges.select("src", "dst")
-            .unionByName(self.edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")))
+            self._undirected()
             .filter(F.col("src") != F.col("dst"))
             .distinct()
             .localCheckpoint(eager=True)
@@ -1282,62 +1283,45 @@ class Graph:
         relaxes one hop backwards over edges (dst→src) and keeps the
         min. Each superstep is one join + one min-agg shuffle.
 
-        Convergence differs by mode and it matters: unweighted BFS
-        assigns each vertex its final dist the first time it appears,
-        so a stable ROW COUNT is a sound fixpoint. Bellman-Ford keeps
-        improving dists of already-present rows, so the weighted mode
-        compares the (count, sum(dist)) signature instead — dist only
-        ever decreases, so an unchanged signature ⟺ no relaxation
-        happened.
+        A row changes when its pair is new or its dist dropped; the
+        loop stops after a superstep with no change. That is exact in
+        both modes: Bellman-Ford keeps improving dists of rows already
+        present, which a stable row count would miss.
         """
-        state = (
-            self.vertices.select("id")
-            .filter(F.col("id").isin(landmarks))
-            .select(
-                "id", F.col("id").alias("landmark"),
-                (F.lit(0).cast("int") if weight_col is None
-                 else F.lit(0.0)).alias("dist"),
+        zero, dist_type = (
+            (F.lit(0).cast("int"), "int") if weight_col is None
+            else (F.lit(0.0), "double"))
+        cost = F.lit(1) if weight_col is None else F.col(weight_col)
+        # relaxation runs against edge direction: messages flow dst → src
+        reverse = self.edges.select(
+            F.col("dst").alias("src"), F.col("src").alias("dst"),
+            cost.alias("cost"))
+
+        def step(e: DataFrame, state: DataFrame) -> DataFrame:
+            relaxed = e.join(state, e.src == state.id).select(
+                F.col("dst").alias("id"), "landmark",
+                (F.col("dist") + F.col("cost")).alias("dist"),
+                F.lit(None).cast(dist_type).alias("__old"),
             )
-            .persist()
-        )
-        state.count()
-        ecols = ["src", "dst"] + ([weight_col] if weight_col else [])
-        edges = self.edges.select(*ecols).persist()
-        step_cost = F.lit(1) if weight_col is None else F.col(weight_col)
-        sig_prev = None
-        for i in range(max_iter):
-            relaxed = (
-                edges.join(state, edges.dst == state.id)
-                .select(
-                    F.col("src").alias("id"), "landmark",
-                    (F.col("dist") + step_cost).alias("dist"),
-                )
-            )
-            new_state = (
-                state.unionByName(relaxed)
+            return (
+                state.select("id", "landmark", "dist",
+                             F.col("dist").alias("__old"))
+                .unionByName(relaxed)
                 .groupBy("id", "landmark")
-                .agg(F.min("dist").alias("dist"))
+                .agg(F.min("dist").alias("dist"),
+                     F.min("__old").alias("__old"))
             )
-            if (i + 1) % 5 == 0 or _plan_chars(new_state) > 150_000:
-                new_state = new_state.localCheckpoint(eager=True)
-            else:
-                new_state = new_state.persist()
-            if weight_col is None:
-                sig_new = (new_state.count(),)
-            else:
-                row = new_state.agg(
-                    F.count("*").alias("n"), F.sum("dist").alias("s")
-                ).collect()[0]
-                sig_new = (row["n"], row["s"])
-            state.unpersist()
-            state = new_state
-            if sig_new == sig_prev:
-                break
-            sig_prev = sig_new
-        edges.unpersist()
-        if _plan_chars(state) > 30_000:
-            state = state.localCheckpoint(eager=True)
-        return state
+
+        return self.pregel(
+            reverse,
+            lambda e: self.vertices.select("id")
+            .filter(F.col("id").isin(landmarks))
+            .select("id", F.col("id").alias("landmark"), zero.alias("dist")),
+            step,
+            changed=F.col("__old").isNull()
+            | (F.col("dist") < F.col("__old")),
+            max_iter=max_iter,
+        )
 
     def anf(self, m: int = 64, max_iter: int = 16,
             rel_tol: float = 0.01,
@@ -1354,10 +1338,10 @@ class Graph:
         vertices). Registers hold rho values <= 59, so tinyint.
 
         Per superstep: ONE shuffle (neighbor registers unioned with own,
-        max-merged per vertex); the per-hop cardinality readout is one
-        aggregate action whose result is a SINGLE driver-side scalar
-        (convergence signature, same sanctioned class as pagerank's
-        1-row delta). Register width is m bytes/vertex — at 10^9
+        max-merged per vertex), materialized by one checkpoint job; the
+        per-hop cardinality readout is an Observation on that same job,
+        a SINGLE driver-side scalar (the convergence signature).
+        Register width is m bytes/vertex — at 10^9
         vertices and m=64 that is 64 GB of state spread across the
         cluster, the published HyperANF design point.
 
@@ -1432,114 +1416,72 @@ class Graph:
             F.lit(float(m)) * F.log(F.lit(float(m)) / v_zero),
         ).otherwise(e_raw)
 
-        edges = self.edges.select("src", "dst").persist()
-        state = init.persist()
-        nf = [(0, float(state.agg(F.sum(est)).collect()[0][0]))]
-        pending: list[DataFrame] = []
+        edges = flat_checkpoint(self.edges.select("src", "dst"))
+        obs = Observation()
+        state = flat_checkpoint(init.observe(obs, F.sum(est).alias("n")))
+        nf = [(0, float(obs.get["n"]))]
+        batches = edge_batch if edge_batch and edge_batch > 1 else 1
+        bsel = F.pmod(F.xxhash64(F.col("src"), F.col("dst")),
+                      F.lit(batches))
         jvm_gc = self.vertices.sparkSession.sparkContext._jvm.System.gc
         try:
             for t in range(1, max_iter + 1):
-                if edge_batch and edge_batch > 1:
-                    # sequential hash batches: each merges into the
-                    # accumulating registers and truncates before the
-                    # next, capping live shuffle at ~|E|/B messages.
-                    # All batches read START-of-superstep `state`, so
-                    # information still travels exactly one hop.
-                    cur = state
-                    bsel = F.pmod(
-                        F.xxhash64(F.col("src"), F.col("dst")),
-                        F.lit(edge_batch))
-                    for b in range(edge_batch):
-                        msgs_b = (
-                            edges.filter(bsel == b)
-                            .join(state, F.col("src") == state.id)
-                            .select(F.col("dst").alias("id"), *regs)
-                        )
-                        cur = (
-                            cur.unionByName(msgs_b)
-                            .groupBy("id")
-                            .agg(*[F.max(r).alias(r) for r in regs])
-                            .localCheckpoint(eager=True)
-                        )
+                # sequential hash batches: each merges into the
+                # accumulating registers and truncates before the
+                # next, capping live shuffle at ~|E|/B messages. All
+                # batches read START-of-superstep `state`, so
+                # information still travels exactly one hop.
+                new_state, parts = state, []
+                for b in range(batches):
+                    if b:
+                        new_state = flat_checkpoint(new_state)
+                        parts.append(new_state)
                         jvm_gc()
-                    new_state = cur
-                else:
+                    e_b = edges.filter(bsel == b) if batches > 1 else edges
                     msgs = (
-                        edges.join(state, edges.src == state.id)
+                        e_b.join(state, e_b.src == state.id)
                         .select(F.col("dst").alias("id"), *regs)
                     )
                     new_state = (
-                        state.unionByName(msgs)
+                        new_state.unionByName(msgs)
                         .groupBy("id")
                         .agg(*[F.max(r).alias(r) for r in regs])
                     )
-                if t % 4 == 0 or _plan_chars(new_state) > 150_000:
-                    new_state = new_state.localCheckpoint(eager=True)
-                    for s in pending:
-                        s.unpersist()
-                    pending.clear()
-                    # Disk hygiene (r14 sf10 lesson): the superstep's
-                    # O(|E|·m) shuffle files free only after the
-                    # truncated-lineage RDDs are GC'd — nudge the JVM
-                    # so the ContextCleaner drops dead stages' files
-                    # before the next superstep piles on top.
-                    jvm_gc()
-                else:
-                    new_state = new_state.persist()
-                n_t = float(new_state.agg(F.sum(est)).collect()[0][0])
-                nf.append((t, n_t))
-                pending.append(state)
+                obs = Observation()
+                new_state = flat_checkpoint(
+                    new_state.observe(obs, F.sum(est).alias("n")))
+                for old in parts + [state]:
+                    _release(old)
                 state = new_state
+                # Disk hygiene (r14 sf10 lesson): the superstep's
+                # O(|E|·m) shuffle files free only after the
+                # truncated-lineage RDDs are GC'd — nudge the JVM
+                # so the ContextCleaner drops dead stages' files
+                # before the next superstep piles on top.
+                jvm_gc()
+                n_t = float(obs.get["n"])
+                nf.append((t, n_t))
                 if n_t <= nf[-2][1] * (1 + rel_tol):
                     break
         finally:
-            edges.unpersist()
-            for s in pending:
-                s.unpersist()
-            state.unpersist()
+            _release(edges)
+            _release(state)
         return nf
 
     def personalized_pagerank(self, source: int, reset_prob: float = 0.15,
                               max_iter: int = 10) -> DataFrame:
         """PageRank with teleport mass concentrated on ``source``
         (random walk with restart) → (id, pagerank)."""
+        is_src = F.when(F.col("id") == source, 1.0).otherwise(0.0)
         out_deg = self.out_degrees()
         edges = (
             self.edges.select("src", "dst")
             .join(out_deg, F.col("src") == F.col("id"))
             .select("src", "dst", "out_degree")
-            .persist()
         )
-        is_src = lambda c: F.when(c == source, 1.0).otherwise(0.0)  # noqa: E731
-
-        def initial(v: DataFrame) -> DataFrame:
-            return v.select("id", is_src(F.col("id")).alias("pagerank"))
-
-        def step(g: Graph, state: DataFrame, i: int) -> DataFrame:
-            contribs = (
-                edges.join(state, edges.src == state.id)
-                .select(
-                    F.col("dst").alias("id"),
-                    (F.col("pagerank") / F.col("out_degree")).alias("contrib"),
-                )
-                .groupBy("id")
-                .agg(F.sum("contrib").alias("in_sum"))
-            )
-            return (
-                g.vertices.select("id")
-                .join(contribs, "id", "left")
-                .select(
-                    "id",
-                    (
-                        F.lit(reset_prob) * is_src(F.col("id"))
-                        + F.lit(1.0 - reset_prob) * F.coalesce("in_sum", F.lit(0.0))
-                    ).alias("pagerank"),
-                )
-            )
-
-        result = self.pregel(initial, step, lambda o, n: False, max_iter=max_iter)
-        edges.unpersist()
-        return result
+        return self._rank_walk(
+            edges, F.col("pagerank") / F.col("out_degree"), is_src,
+            F.lit(reset_prob) * is_src, reset_prob, max_iter)
 
     def betweenness_centrality(self, sources: list[int],
                                max_depth: int = 20,
@@ -1778,8 +1720,9 @@ class Graph:
         irreducible dataflow of distributed walking; AQE handles
         hub-key skew in the frontier). Walk state is
         |V|·walks_per_node rows with ≤ walk_length+1 longs each; the
-        plan chain is localCheckpoint-bounded like pregel (measured
-        lineage rules in louvain's docstring).
+        plan chain is cut by a localCheckpoint every
+        ``_WALK_STEPS_PER_CUT`` steps (measured lineage rules in
+        louvain's docstring).
 
         Citation-free Spark-first design; the walk semantics mirror
         DeepWalk (Perozzi et al., KDD'14 [PUBLIC]) with unit p=q.
@@ -1821,7 +1764,7 @@ class Graph:
                     .otherwise(F.lit(None).cast("long")).alias("cur"),
                 )
             )
-            if _plan_chars(state) > 60_000:
+            if (step + 1) % _WALK_STEPS_PER_CUT == 0:
                 state = state.localCheckpoint(eager=True)
         return state.select(
             "start_id", "walk_no", "path",
@@ -1863,8 +1806,7 @@ class Graph:
         per-element membership scan (O(degree²), measured hanging on
         10k-degree hubs). Vectors never cross into Python. State per
         walk is ≤ walk_length+1 longs plus prev's ≤``max_degree``
-        neighbor array; lineage is plan-size-checkpointed like
-        ``random_walks``.
+        neighbor array; lineage is cut like ``random_walks``.
         """
         if walk_length < 1 or walks_per_node < 1:
             raise ValueError("walk_length and walks_per_node must be >= 1")
@@ -1999,7 +1941,7 @@ class Graph:
                 .otherwise(F.lit(None).cast("long")).alias("prev"),
                 *carry,
             )
-            if _plan_chars(state) > 60_000:
+            if (step + 1) % _WALK_STEPS_PER_CUT == 0:
                 state = state.localCheckpoint(eager=True)
         return state.select(
             "start_id", "walk_no", "path",
@@ -2937,7 +2879,7 @@ def q100_link_prediction(spark: SparkSession, sf_dir: str,
     # sf0.01. Past the gate the window-capped pair relation stays the
     # 100-TB path unchanged (a hub's collect_set is the unbounded
     # per-key buffer the house rules forbid); fast-path ≡ window-path
-    # equality pinned in tests/test_r15_optimizations.py.
+    # equality pinned in tests/test_round9_operators.py.
     adj = _co_supply_adjacency(spark, sf_dir, skew_cap_bytes)
     if adj is not None:
         cn = (

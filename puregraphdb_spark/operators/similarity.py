@@ -1479,11 +1479,12 @@ def semantic_prune(scored: DataFrame, id_col: str = "vec_id",
 
     integral = {"tinyint", "smallint", "int", "bigint"}
     dtypes = dict(scored.dtypes)
-    for c in ("__vid", "cluster"):
-        if dtypes.get(c) not in integral:
+    for c, name in (("__vid", id_col), ("cluster", "cluster")):
+        got = dtypes.get(c, "missing")
+        if got not in integral:
             raise TypeError(
                 f"semantic_prune needs integral id/cluster columns; "
-                f"got {c}: {dtypes.get(c)} — cast or re-key the id "
+                f"got {name}: {got} — cast or re-key the id "
                 f"upstream (the prune's Arrow seam emits int64)")
 
     th = float(threshold)

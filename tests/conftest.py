@@ -23,7 +23,8 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_session(app_name="puregraphdb-tests", master="local[8]")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1
+    s = get_session(app_name="puregraphdb-tests", master=f"local[{cpus}]")
     s.sparkContext.setLogLevel("ERROR")
     yield s
 

@@ -1,0 +1,116 @@
+"""The superstep loop behind the iterative graph algorithms
+(``Graph.pregel``): it releases what it caches, its checkpoints carry
+no compounding statistics, and a superstep is one job."""
+
+from __future__ import annotations
+
+import pytest
+from pyspark.sql import functions as F
+
+from puregraphdb_spark.operators.graph import Graph
+
+LONG_MAX = (1 << 63) - 1
+
+
+@pytest.fixture(scope="module")
+def k4(spark):
+    """Complete graph on {1,2,3,4} plus an isolated extra component."""
+    edges = [(u, v) for u in range(1, 5) for v in range(u + 1, 5)]
+    edges += [(10, 11)]
+    v = spark.createDataFrame([(i,) for i in [1, 2, 3, 4, 10, 11]], ["id"])
+    e = spark.createDataFrame(edges, ["src", "dst"])
+    return Graph(v, e)
+
+
+def _path(spark, n: int) -> Graph:
+    v = spark.createDataFrame([(i,) for i in range(n)], ["id"])
+    e = spark.createDataFrame([(i, i + 1) for i in range(n - 1)],
+                              ["src", "dst"])
+    return Graph(v, e)
+
+
+def _persistent_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+@pytest.mark.parametrize("algo", [
+    lambda g: g.pagerank(max_iter=3),
+    lambda g: g.connected_components(),
+    lambda g: g.label_propagation(),
+    lambda g: g.shortest_paths([1, 10]),
+    lambda g: g.k_core(2),
+], ids=["pagerank", "cc", "lpa", "sssp", "kcore"])
+def test_loop_leaves_only_the_returned_state_cached(spark, k4, algo):
+    before = _persistent_rdds(spark)
+    out = algo(k4)
+    own = {out._jdf.queryExecution().analyzed().rdd().id()}
+    assert _persistent_rdds(spark) - before <= own
+    assert out.count() > 0  # the survivor is still readable
+
+
+def test_deep_path_stats_do_not_compound(spark):
+    """A stats-keeping checkpoint per superstep multiplies the size
+    estimate: 30 supersteps of a path graph reach dozens of digits."""
+    g = _path(spark, 30)
+    cc = g.connected_components()
+    sp = g.shortest_paths([29], max_iter=32)
+    for out in (cc, sp):
+        stats = out._jdf.queryExecution().optimizedPlan().stats()
+        assert stats.sizeInBytes() <= LONG_MAX
+    assert {r["component"] for r in cc.collect()} == {0}
+    assert {r["id"]: r["dist"] for r in sp.collect()} \
+        == {i: 29 - i for i in range(30)}
+
+
+def test_one_job_per_superstep(spark):
+    """Connected components on a 10-vertex path takes 10 supersteps
+    (the last one changes nothing). With AQE off a query is one job
+    plus one per broadcast, so the call runs the edge checkpoint, one
+    checkpoint job per superstep, and at most the one broadcast of the
+    first superstep's small input."""
+    g = _path(spark, 10)
+    sc = spark.sparkContext
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sc.setJobGroup("pregel-one-job", "cc on a path")
+    try:
+        out = g.connected_components()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    jobs = len(sc.statusTracker().getJobIdsForGroup("pregel-one-job"))
+    assert 1 + 10 <= jobs <= 1 + 10 + 1
+    assert out.filter(F.col("component") != 0).count() == 0
+
+
+def test_zero_supersteps_return_the_initial_state(spark, k4):
+    before = _persistent_rdds(spark)
+    out = k4.connected_components(max_iter=0)
+    assert sorted((r["id"], r["component"]) for r in out.collect()) \
+        == [(i, i) for i in [1, 2, 3, 4, 10, 11]]
+    own = {out._jdf.queryExecution().analyzed().rdd().id()}
+    assert _persistent_rdds(spark) - before <= own
+
+
+def test_failed_superstep_releases_everything(spark, k4):
+    """A superstep that fails after one has succeeded: the edges, the
+    held state and the loop's edge cache are all dropped."""
+    def cache_entries() -> int:
+        return (spark._jsparkSession.sharedState().cacheManager()
+                .cachedData().size())
+
+    before, entries = _persistent_rdds(spark), cache_entries()
+    calls = []
+
+    def step(e, state):
+        calls.append(1)
+        if len(calls) > 1:
+            raise RuntimeError("boom")
+        return state
+
+    with pytest.raises(RuntimeError, match="boom"):
+        k4.pregel(k4.edges, lambda e: k4.vertices.select("id"), step,
+                  max_iter=3)
+    assert len(calls) == 2
+    assert _persistent_rdds(spark) == before
+    assert cache_entries() == entries

@@ -174,6 +174,19 @@ def test_semantic_prune_greedy_chain(spark):
     assert out.n_earlier_dups.tolist() == [0, 1, 1]
 
 
+def test_semantic_prune_error_names_callers_id_col(spark):
+    # a frame that skipped the scoring step has no internal id column;
+    # the error must name the caller's id_col, not the internal one
+    import pytest
+
+    from puregraphdb_spark.operators.similarity import semantic_prune
+
+    raw = spark.createDataFrame(
+        [(1, 0, [1.0, 0.0])], "doc_id bigint, cluster int, emb array<double>")
+    with pytest.raises(TypeError, match="got doc_id: missing"):
+        semantic_prune(raw, id_col="doc_id")
+
+
 def test_hash_and_ivf_prune_agree_under_equal_clusters(spark):
     # With ONE cluster both paths score against the same mean centroid
     # (k-means with k=1 converges to the mean in one step), so the

@@ -246,6 +246,72 @@ def test_mann_whitney_stochastic_dominance(spark):
     assert r["rank_biserial"] == 1.0
 
 
+def test_mann_whitney_value_grain_equals_per_row_window(spark):
+    """q183's value-grain rank map ≡ the per-row rank/count window form
+    it replaced, exactly, on tie-heavy data: four types over five
+    distinct values, so nearly every rank is a tie. u2 is also checked
+    against the brute-force pair count 2·Σ([a > b] + ½[a = b])."""
+    import random
+
+    from pyspark.sql import Window
+
+    from puregraphdb_spark.functions.numeric import decimal_round
+    from puregraphdb_spark.operators.extras import mann_whitney_u
+
+    rnd = random.Random(183)
+    types = ["purchase", "view", "cart", "refund"]
+    rows = [(i, rnd.choice(types), float(rnd.randint(0, 4)))
+            for i in range(400)]
+    df = spark.createDataFrame(
+        rows, "event_id long, event_type string, value double")
+    got = {r["pair"]: tuple(r) for r in mann_whitney_u(df).collect()}
+
+    a = df.filter(F.col("event_type") == "purchase")
+    per_row = None
+    for t in types[1:]:
+        part = (
+            a.select(F.lit(t).alias("pair"), F.lit(1).alias("is_a"),
+                     F.col("value").alias("v"))
+            .unionByName(
+                df.filter(F.col("event_type") == t).select(
+                    F.lit(t).alias("pair"), F.lit(0).alias("is_a"),
+                    F.col("value").alias("v")))
+        )
+        per_row = part if per_row is None else per_row.unionByName(part)
+    w = Window.partitionBy("pair").orderBy("v")
+    ranked = per_row.select(
+        "pair", "is_a",
+        (F.rank().over(w) * 2
+         + F.count(F.lit(1)).over(Window.partitionBy("pair", "v")) - 1)
+        .cast("long").alias("avg2"),
+        F.count(F.lit(1)).over(Window.partitionBy("pair", "v"))
+        .cast("long").alias("t"),
+    )
+    ref = ranked.groupBy("pair").agg(
+        F.sum("is_a").cast("long").alias("n_a"),
+        F.sum(1 - F.col("is_a")).cast("long").alias("n_b"),
+        F.sum(F.col("is_a") * F.col("avg2")).cast("long").alias("rs2"),
+        F.sum(F.col("t") * F.col("t") - 1).cast("long").alias("tie_sum"),
+    )
+    u2 = (F.col("rs2") - F.col("n_a") * (F.col("n_a") + 1)).cast("long")
+    want = {
+        r["pair"]: tuple(r) for r in ref.select(
+            "pair", "n_a", "n_b", u2.alias("u2"), "tie_sum",
+            decimal_round(
+                u2.cast("double")
+                / (F.col("n_a") * F.col("n_b")).cast("double")
+                - F.lit(1.0), 6, grid=10).alias("rank_biserial"),
+        ).collect()
+    }
+    assert got == want and len(got) == 3
+
+    va = [v for _, ty, v in rows if ty == "purchase"]
+    for t in types[1:]:
+        vb = [v for _, ty, v in rows if ty == t]
+        brute = sum(2 * (x > y) + (x == y) for x in va for y in vb)
+        assert got[t][3] == brute
+
+
 def test_benford_hand_case(spark):
     """Digits extracted from the decimal-grid string, zeros skipped
     (0.05 → 5), shares sum to 1."""
