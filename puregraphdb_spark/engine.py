@@ -109,6 +109,21 @@ def get_session(app_name: str = "puregraphdb-spark", master: str | None = None,
     return builder.getOrCreate()
 
 
+#: JVM sessions the last ``tune_for_data_size`` put in the interactive
+#: posture (see ``is_interactive``).
+_INTERACTIVE_SESSIONS: set = set()
+
+
+def is_interactive(spark: SparkSession) -> bool:
+    """True while ``spark`` is in the interactive posture: its last
+    ``Engine.tune_for_data_size`` found the input under the threshold,
+    and AQE is still off as that call left it. AQE off alone (a tool or
+    a user wanting fixed plans) is not the posture."""
+    return (spark._jsparkSession in _INTERACTIVE_SESSIONS
+            and spark.conf.get("spark.sql.adaptive.enabled").lower()
+            == "false")
+
+
 class Engine:
     """Table registry + query entry points over one SparkSession.
 
@@ -231,7 +246,9 @@ class Engine:
         measured and returns to cluster posture as soon as shuffle
         volume can dominate barriers.
         """
+        _INTERACTIVE_SESSIONS.discard(self.spark._jsparkSession)
         if self.input_bytes() < interactive_threshold:
+            _INTERACTIVE_SESSIONS.add(self.spark._jsparkSession)
             self.spark.conf.set("spark.sql.adaptive.enabled", "false")
             self.spark.conf.set(
                 "spark.sql.shuffle.partitions",

@@ -1847,6 +1847,27 @@ def chi_square_contingency(df: DataFrame, row_col: str,
     )
 
 
+def _reference_vs_types(events: DataFrame, ref_type: str, type_col: str,
+                        val_col: str) -> DataFrame:
+    """(pair, is_a, v): every reference-type value once per other type
+    (is_a = 1) next to that type's own values (is_a = 0) — the two
+    samples of each q183/q186 comparison. The other types are a
+    distinct-type relation inside the plan, broadcast to the reference
+    rows: no driver round trip while the plan is built."""
+    is_ref = F.col(type_col).eqNullSafe(ref_type)
+    types = events.filter(~is_ref).select(
+        F.col(type_col).alias("pair")).distinct()
+    a = (
+        events.filter(is_ref)
+        .select(F.lit(1).alias("is_a"), F.col(val_col).alias("v"))
+        .crossJoin(F.broadcast(types))
+    )
+    b = events.filter(F.col(type_col) != ref_type).select(
+        F.col(type_col).alias("pair"), F.lit(0).alias("is_a"),
+        F.col(val_col).alias("v"))
+    return a.unionByName(b)
+
+
 def mann_whitney_u(events: DataFrame, ref_type: str = "purchase",
                    type_col: str = "event_type",
                    val_col: str = "value") -> DataFrame:
@@ -1877,22 +1898,6 @@ def mann_whitney_u(events: DataFrame, ref_type: str = "purchase",
     """
     from puregraphdb_spark.functions.numeric import decimal_round
 
-    types = [
-        r[0] for r in events.select(type_col).distinct().collect()
-        if r[0] != ref_type
-    ]
-    types.sort()
-    a = (
-        events.filter(F.col(type_col) == ref_type)
-        .select(F.explode(F.array(*[F.lit(t) for t in types]))
-                .alias("pair"),
-                F.lit(1).alias("is_a"), F.col(val_col).alias("v"))
-    )
-    b = (
-        events.filter(F.col(type_col) != ref_type)
-        .select(F.col(type_col).alias("pair"),
-                F.lit(0).alias("is_a"), F.col(val_col).alias("v"))
-    )
     # The doubled average rank of a value depends only on the
     # (pair, value) marginal counts:
     #   avg2 = rank()·2 + t − 1 = 2·cnt_lt + t + 1 = 2·cumsum(t) − t + 1,
@@ -1903,7 +1908,7 @@ def mann_whitney_u(events: DataFrame, ref_type: str = "purchase",
     # to the per-row window form (pinned in tests/test_round14_operators.py::
     # test_mann_whitney_value_grain_equals_per_row_window).
     per_v = (
-        a.unionByName(b)
+        _reference_vs_types(events, ref_type, type_col, val_col)
         .groupBy("pair", "v")
         .agg(F.sum("is_a").cast("long").alias("ca"),
              F.count(F.lit(1)).cast("long").alias("t"))
@@ -2054,30 +2059,14 @@ def ks_statistic(events: DataFrame, ref_type: str = "purchase",
     cumB·n_a| over the merged sample (bigints throughout; D itself
     is the one snapped division).
 
-    Scale: the q183 replicate-reference shape — map-side explode of
-    the reference group per comparison type, ONE shuffle for the
-    per-pair value windows, per-pair scalar aggregate.
+    Scale: the q183 replicate-reference shape — the reference group
+    replicated per comparison type by a broadcast join, ONE shuffle for
+    the per-pair value windows, per-pair scalar aggregate.
     """
     from puregraphdb_spark.functions.numeric import decimal_round
 
-    types = [
-        r[0] for r in events.select(type_col).distinct().collect()
-        if r[0] != ref_type
-    ]
-    types.sort()
-    a = (
-        events.filter(F.col(type_col) == ref_type)
-        .select(F.explode(F.array(*[F.lit(t) for t in types]))
-                .alias("pair"),
-                F.lit(1).alias("is_a"), F.col(val_col).alias("v"))
-    )
-    b = (
-        events.filter(F.col(type_col) != ref_type)
-        .select(F.col(type_col).alias("pair"),
-                F.lit(0).alias("is_a"), F.col(val_col).alias("v"))
-    )
     per_v = (
-        a.unionByName(b)
+        _reference_vs_types(events, ref_type, type_col, val_col)
         .groupBy("pair", "v")
         .agg(F.sum("is_a").cast("long").alias("ca"),
              F.sum(1 - F.col("is_a")).cast("long").alias("cb"))

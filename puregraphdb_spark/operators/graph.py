@@ -956,83 +956,92 @@ class Graph:
         SCC condensation ordered by min-id domination — small for real
         graphs (the classic FW-BW-Trim observation).
 
-        Scale: each inner step is one join + min-agg shuffle over the
-        remaining edges (the same shape as connected_components);
-        peeling shrinks the edge set monotonically; lineage is cut per
-        outer round with localCheckpoint.
+        Scale: each direction is a ``pregel`` call on the remaining
+        graph — connected components along directed edges, stopping at
+        the first superstep in which no label changes. Peeling shrinks
+        the edge set monotonically; the remainder of each outer round is
+        a checkpoint whose row count is observed by the same job, and it
+        is released once the next round's is materialized. Only the
+        assigned components survive the call, and nothing survives one
+        that fails.
         """
-        remaining_v = self.vertices.select("id").localCheckpoint(eager=True)
-        remaining_e = (
-            self.edges.select("src", "dst").distinct()
-            .localCheckpoint(eager=True)
-        )
+        def step(e: DataFrame, state: DataFrame) -> DataFrame:
+            msgs = (
+                e.join(state, e.src == state.id)
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.min("lbl").alias("nbr_min"))
+            )
+            return state.join(msgs, "id", "left").select(
+                "id",
+                F.least("lbl", F.coalesce("nbr_min", "lbl")).alias("lbl"),
+                F.col("lbl").alias("__old"),
+            )
+
+        def min_reaching(g: Graph, edges: DataFrame) -> DataFrame:
+            """(id, lbl): the min id that reaches each vertex of ``g``
+            along ``edges``."""
+            return g.pregel(
+                edges,
+                lambda e: g.vertices.select("id", F.col("id").alias("lbl")),
+                step,
+                changed=F.col("lbl") != F.col("__old"),
+                max_iter=max_iter,
+            )
+
+        def counted(df: DataFrame) -> tuple[DataFrame, int]:
+            obs = Observation()
+            ck = flat_checkpoint(df.observe(obs, F.count(F.lit(1)).alias("n")))
+            return ck, obs.get["n"]
+
+        held: list[DataFrame] = []  # checkpoints released on the way out
         assigned_parts: list[DataFrame] = []
 
-        def min_fixpoint(edges: DataFrame, verts: DataFrame) -> DataFrame:
-            """min-id propagation along edge direction to fixpoint."""
-            state = verts.select("id", F.col("id").alias("lbl")).persist()
-            state.count()
-            for i in range(max_iter):
-                msgs = (
-                    edges.join(state, edges.src == state.id)
-                    .select(F.col("dst").alias("id"), F.col("lbl").alias("msg"))
-                    .groupBy("id")
-                    .agg(F.min("msg").alias("nbr_min"))
-                )
-                new = (
-                    verts.join(state, "id")
-                    .join(msgs, "id", "left")
-                    .select(
-                        "id",
-                        F.least(
-                            F.col("lbl"), F.coalesce("nbr_min", "lbl")
-                        ).alias("lbl"),
-                    )
-                    .persist()
-                )
-                changed = (
-                    state.alias("o").join(new.alias("n"), "id")
-                    .filter(F.col("o.lbl") != F.col("n.lbl"))
-                    .limit(1).count()
-                )
-                state.unpersist()
-                state = new
-                if changed == 0:
-                    break
-            return state
+        def keep(ck: DataFrame) -> DataFrame:
+            held.append(ck)
+            return ck
 
-        for _ in range(max_outer):
-            if remaining_v.limit(1).count() == 0:
-                break
-            fwd = min_fixpoint(remaining_e, remaining_v)
-            rev_e = remaining_e.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            )
-            bwd = min_fixpoint(rev_e, remaining_v)
-            scc = (
-                fwd.select("id", F.col("lbl").alias("f"))
-                .join(bwd.select("id", F.col("lbl").alias("b")), "id")
-            )
-            done = (
-                scc.filter(F.col("f") == F.col("b"))
-                .select("id", F.col("f").alias("component"))
-                .localCheckpoint(eager=True)
-            )
-            assigned_parts.append(done)
-            remaining_v = (
-                remaining_v.join(done.select("id"), "id", "left_anti")
-                .localCheckpoint(eager=True)
-            )
-            remaining_e = (
-                remaining_e
-                .join(remaining_v.select(F.col("id").alias("src")), "src",
-                      "left_semi")
-                .join(remaining_v.select(F.col("id").alias("dst")), "dst",
-                      "left_semi")
-                .localCheckpoint(eager=True)
-            )
-            fwd.unpersist()
-            bwd.unpersist()
+        def release(*cks: DataFrame) -> None:
+            for ck in cks:
+                held.remove(ck)
+                _release(ck)
+
+        try:
+            verts, left = counted(self.vertices.select("id"))
+            keep(verts)
+            edges = keep(flat_checkpoint(
+                self.edges.select("src", "dst").distinct()))
+            for _ in range(max_outer):
+                if left == 0:
+                    break
+                g = Graph(verts, edges)
+                fwd = keep(min_reaching(g, edges))
+                bwd = keep(min_reaching(g, edges.select(
+                    F.col("dst").alias("src"), F.col("src").alias("dst"))))
+                assigned_parts.append(flat_checkpoint(
+                    fwd.join(bwd.select("id", F.col("lbl").alias("b")), "id")
+                    .filter(F.col("lbl") == F.col("b"))
+                    .select("id", F.col("lbl").alias("component"))
+                ))
+                release(fwd, bwd)
+                rest, left = counted(verts.join(
+                    assigned_parts[-1].select("id"), "id", "left_anti"))
+                keep(rest)
+                rest_e = keep(flat_checkpoint(
+                    edges
+                    .join(rest.select(F.col("id").alias("src")), "src",
+                          "left_semi")
+                    .join(rest.select(F.col("id").alias("dst")), "dst",
+                          "left_semi")
+                ))
+                release(verts, edges)
+                verts, edges = rest, rest_e
+        except BaseException:
+            for ck in assigned_parts:
+                _release(ck)
+            raise
+        finally:
+            for ck in held:
+                _release(ck)
         if not assigned_parts:  # empty graph
             return self.vertices.select(
                 "id", F.col("id").alias("component")).limit(0)

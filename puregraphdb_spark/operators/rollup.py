@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from puregraphdb_spark.streaming.windows import _start, _with_watermark
+
 _MERGE = {
     "count": F.sum,  # counts merge by summing
     "sum": F.sum,
@@ -122,11 +124,12 @@ def incremental_rollup_stream(events_stream: DataFrame, ts_col: str,
     finalizes once event time passes bucket_end + watermark, and later
     events are dropped, matching the continuous-aggregate contract.
     Coarser levels never see the stream; refresh them from this level
-    with ``refresh_from_finest``.
+    with ``refresh_from_finest``. A watermark already on ``ts_col``
+    (set upstream) governs over ``watermark``.
     """
     _validate(measures)
     return _finest_agg(
-        events_stream.withWatermark(ts_col, watermark),
+        _with_watermark(events_stream, ts_col, watermark),
         ts_col, finest, group_cols, measures,
     )
 
@@ -159,7 +162,7 @@ def persistent_rollup_sink(finest_stream: DataFrame, table_path: str,
     )
     if available_now:
         w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(w, out)
 
 
 _MANIFEST = "_manifest.json"

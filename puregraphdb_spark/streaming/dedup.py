@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from puregraphdb_spark.streaming.windows import _with_watermark
+
 
 def content_key(text_col: str = "text") -> F.Column:
     """64-bit content fingerprint for identity dedup when no stable
@@ -47,10 +49,11 @@ def dedup_stream_within_watermark(events: DataFrame, keys: list[str],
     """Watermark-TTL'd streaming dedup: repeats within ``delay`` of the
     event-time watermark are dropped, older state is evicted. The only
     shape whose state is bounded when the key space grows with the
-    stream."""
+    stream. A watermark already on ``ts_col`` (set upstream) governs
+    over ``delay``; downstream windows reuse this one."""
     if not keys:
         raise ValueError("dedup_stream_within_watermark needs key columns")
     return (
-        events.withWatermark(ts_col, delay)
+        _with_watermark(events, ts_col, delay)
         .dropDuplicatesWithinWatermark(keys)
     )

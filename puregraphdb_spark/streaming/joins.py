@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from puregraphdb_spark.functions.intervals import interval_expr
+from puregraphdb_spark.streaming.windows import _with_watermark
 
 
 def interval_join(left: DataFrame, right: DataFrame,
@@ -41,14 +42,15 @@ def interval_join(left: DataFrame, right: DataFrame,
     Works on two STREAMING DataFrames (watermarks applied here) and on
     two batch DataFrames (the watermark call is a no-op for batch in
     the sense that it does not change results — the join condition is
-    identical), which is what the equivalence test exercises.
+    identical), which is what the equivalence test exercises. A side
+    whose time column already carries a watermark keeps it.
 
     ``left_cols`` / ``right_cols`` select the output projection
     (defaults: all left columns, then the right key-less columns
     prefixed ``r_`` to avoid collisions).
     """
-    lw = left.withWatermark(left_ts, watermark).alias("l")
-    rw = right.withWatermark(right_ts, watermark).alias("r")
+    lw = _with_watermark(left, left_ts, watermark).alias("l")
+    rw = _with_watermark(right, right_ts, watermark).alias("r")
     cond = (
         (F.col(f"l.{on}") == F.col(f"r.{on}"))
         & (F.col(f"r.{right_ts}")

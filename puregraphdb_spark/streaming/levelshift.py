@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from puregraphdb_spark.streaming.windows import _with_watermark
+
 
 def windowed_means(df: DataFrame, ts_col: str = "ts",
                    type_col: str = "event_type",
@@ -36,14 +38,15 @@ def windowed_means(df: DataFrame, ts_col: str = "ts",
     """Per-(event-time window, type) mean of ``value_col`` (batch or
     streaming): (window_start, event_type, n, mean_value).
 
-    Pass ``watermark`` on streams destined for append-mode sinks.
+    Pass ``watermark`` on streams destined for append-mode sinks; a
+    watermark already on ``ts_col`` (set upstream) governs over it.
     Groups on the window STRUCT and projects ``start`` after the agg
     (extracting it inside the groupBy severs watermark propagation —
     the tumbling_window_stream rule).
     """
     src = df
     if watermark is not None:
-        src = src.withWatermark(ts_col, watermark)
+        src = _with_watermark(src, ts_col, watermark)
     agg = (
         src.groupBy(
             F.window(ts_col, window_duration).alias("w"),

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from puregraphdb_spark.operators.pii import PII_PATTERNS, pii_count_columns
+from puregraphdb_spark.streaming.windows import _with_watermark
 
 
 def windowed_pii_scan(df: DataFrame, ts_col: str = "ts",
@@ -38,14 +39,15 @@ def windowed_pii_scan(df: DataFrame, ts_col: str = "ts",
     streaming): (window_start, source, n_docs, docs_with_pii,
     n_email, n_phone, n_ipv4).
 
-    Pass ``watermark`` on streams destined for append-mode sinks.
+    Pass ``watermark`` on streams destined for append-mode sinks; a
+    watermark already on ``ts_col`` (set upstream) governs over it.
     Groups on the window STRUCT and projects ``start`` after the agg
     (extracting it inside the groupBy severs watermark propagation —
     the windows.py rule).
     """
     src = df
     if watermark is not None:
-        src = src.withWatermark(ts_col, watermark)
+        src = _with_watermark(src, ts_col, watermark)
     per_doc = src.select(
         F.col(ts_col).alias("__ts"),
         F.col(source_col).alias("source"),

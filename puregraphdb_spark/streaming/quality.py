@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from puregraphdb_spark.streaming.windows import _with_watermark
+
 
 def windowed_profile(df: DataFrame, columns: list[str],
                      ts_col: str = "ts",
@@ -40,7 +42,8 @@ def windowed_profile(df: DataFrame, columns: list[str],
     (window_start, col_name, n_rows, n_nulls, n_distinct_approx).
 
     Pass ``watermark`` on streams destined for append-mode (durable)
-    sinks — append emits a window once the watermark passes its end.
+    sinks — append emits a window once the watermark passes its end; a
+    watermark already on ``ts_col`` (set upstream) governs over it.
     Groups on the window STRUCT and projects ``start`` after the agg
     (extracting it inside the groupBy severs watermark propagation —
     same rule as tumbling_window_stream).
@@ -49,7 +52,7 @@ def windowed_profile(df: DataFrame, columns: list[str],
         raise ValueError("windowed_profile needs at least one column")
     src = df
     if watermark is not None:
-        src = src.withWatermark(ts_col, watermark)
+        src = _with_watermark(src, ts_col, watermark)
     aggs = [F.count(F.lit(1)).cast("long").alias("n_rows")]
     for c in columns:
         aggs.append(

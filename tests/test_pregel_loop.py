@@ -114,3 +114,25 @@ def test_failed_superstep_releases_everything(spark, k4):
     assert len(calls) == 2
     assert _persistent_rdds(spark) == before
     assert cache_entries() == entries
+
+
+@pytest.mark.parametrize("fail_at", [2, 3], ids=["round1-bwd", "round2-fwd"])
+def test_failed_scc_round_releases_everything(spark, k4, monkeypatch,
+                                              fail_at):
+    """SCC on k4's DAG needs a second outer round. A direction that fails
+    in round 1 (after the forward one) or in round 2 (after round 1's
+    components were assigned) leaves no checkpoint behind."""
+    before = _persistent_rdds(spark)
+    pregel, calls = Graph.pregel, []
+
+    def failing(self, *args, **kwargs):
+        calls.append(1)
+        if len(calls) == fail_at:
+            raise RuntimeError("boom")
+        return pregel(self, *args, **kwargs)
+
+    monkeypatch.setattr(Graph, "pregel", failing)
+    with pytest.raises(RuntimeError, match="boom"):
+        k4.strongly_connected_components()
+    assert len(calls) == fail_at
+    assert _persistent_rdds(spark) == before
