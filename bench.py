@@ -146,21 +146,16 @@ def main() -> None:
             if duck_total > 0 else None),
         "calib_queries": calib,
     }
-    try:
-        _track_history(record)
-    except Exception as exc:  # history is best-effort, never the bench
-        print(f"bench: history tracking failed ({exc})", file=sys.stderr)
-    # BENCH_r07 and BENCH_r09 both recorded `parsed: null`: the single
-    # JSON line with 144 per-query floats overflows the driver's
-    # output-tail window (VERDICT r9 item 2). stdout therefore carries
-    # ONE compact machine line (core-30 map only, 3-dp, ~1 KB); the
-    # full per-query map goes to bench_full.json + stderr.
+    # stdout carries ONE compact machine line (core-30 map only, 3-dp,
+    # ~1 KB): a line with all per-query floats overflows a reader that
+    # keeps only the tail of the output. The full per-query record goes
+    # to stderr. No file is written.
     compact = {
         "metric": "survey30_total",
         "value": record["value"],
         "unit": "sec",
         # short ids ("q01") keep the line ~0.5 KB; full names live in
-        # bench_full.json
+        # the stderr record
         "queries": {k.split("_", 1)[0]: round(v, 3)
                     for k, v in sorted(core.items())},
         "sf": sf_val,
@@ -168,102 +163,9 @@ def main() -> None:
         # same-minute DuckDB core-30 + the load-invariant ratio
         "duckdb_calib_sec": duck_total,
         "calib_ratio": record["calib_ratio"],
-        "full_map": "bench_full.json",
     }
-    full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                             "bench_full.json")
-    try:
-        with open(full_path, "w") as f:
-            json.dump(record, f, indent=1)
-            f.write("\n")
-    except OSError as exc:
-        print(f"bench: bench_full.json not written ({exc})",
-              file=sys.stderr)
     print("bench full record: " + json.dumps(record), file=sys.stderr)
     print(json.dumps(compact))
-
-
-def _track_history(record: dict) -> None:
-    """Append this run to the tracked ``bench_history.json`` and report
-    per-query deltas vs the previous same-sf run on stderr — the
-    mechanical regression diff VERDICT r5 asked for (item 7), instead
-    of hand-spelunking BENCH_r{N} blobs. stdout stays ONE JSON line
-    for the driver; history writes are best-effort (a read-only
-    checkout must not fail the bench)."""
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        "bench_history.json")
-    try:
-        with open(path) as f:
-            history = json.load(f)
-        if not isinstance(history, list):
-            raise ValueError("bench_history.json is not a list")
-    except (OSError, ValueError) as exc:
-        print(f"bench: starting fresh history ({exc})", file=sys.stderr)
-        history = []
-    same_sf = [h for h in history if h.get("sf") == record["sf"]]
-    # Plausibility guard (VERDICT r10 item 7): a run whose core total
-    # deviates >1.4x either way from the trailing median is host
-    # co-tenancy noise (or a silently broken re-execution discipline),
-    # not a baseline — the 15:13 r10 outlier (1.87 s vs a stable
-    # 2.9-3.2 s band) would mask a real 50% regression if diffed
-    # against. Flag it in the history and skip flagged records when
-    # picking the regression-diff baseline. Old unflagged records are
-    # re-screened against the median at selection time, so pre-guard
-    # outliers can't be chosen either.
-    # Median over the last 10 PLAUSIBLE runs only (ADVICE r11): a
-    # sustained burst of co-tenancy-skewed runs would otherwise drag
-    # an all-history median toward the outliers — both flagging
-    # genuinely good runs and un-flagging bad ones. Trailing window
-    # keeps the baseline tracking recent healthy behavior.
-    vals = sorted(
-        [h["value"] for h in same_sf
-         if isinstance(h.get("value"), (int, float))
-         and not h.get("implausible")][-10:]
-    )
-    med = vals[len(vals) // 2] if vals else None
-
-    def plausible(h) -> bool:
-        v = h.get("value")
-        if med is None or not isinstance(v, (int, float)):
-            return True
-        return (not h.get("implausible")
-                and med / 1.4 <= v <= med * 1.4)
-
-    implausible = (len(vals) >= 3 and med is not None
-                   and not (med / 1.4 <= record["value"] <= med * 1.4))
-    if implausible:
-        print(
-            f"bench: IMPLAUSIBLE run ({record['value']:.3f}s vs trailing "
-            f"median {med:.3f}s, >1.4x off) — flagged; regression diffs "
-            "will skip it", file=sys.stderr,
-        )
-    prev = next((h for h in reversed(same_sf) if plausible(h)), None)
-    if prev:
-        regressions = []
-        for name, t in sorted(record["queries"].items()):
-            p = prev.get("queries", {}).get(name)
-            if p and t > p * 1.3 and t - p > 0.05:
-                regressions.append(f"{name}: {p:.3f}s -> {t:.3f}s")
-        if regressions:
-            print(
-                "bench regressions vs previous run "
-                f"({prev.get('at', '?')}):\n  " + "\n  ".join(regressions),
-                file=sys.stderr,
-            )
-        else:
-            print("bench: no per-query regressions >1.3x vs previous run",
-                  file=sys.stderr)
-    entry = dict(record)
-    entry["at"] = time.strftime("%Y-%m-%dT%H:%M:%S")
-    if implausible:
-        entry["implausible"] = True
-    history.append(entry)
-    try:
-        with open(path, "w") as f:
-            json.dump(history, f, indent=1)
-            f.write("\n")
-    except OSError as exc:
-        print(f"bench: history not written ({exc})", file=sys.stderr)
 
 
 if __name__ == "__main__":

@@ -1752,7 +1752,7 @@ def q129_hhi_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def approx_quantiles_profile(df: DataFrame, value_col: str,
                              group_col: str,
-                             ps: tuple = (0.25, 0.5, 0.75, 0.95),
+                             ps: tuple[float, ...] = (0.25, 0.5, 0.75, 0.95),
                              accuracy: int = 1000) -> DataFrame:
     """Per-group approximate quantiles via Spark's mergeable
     percentile_approx sketch (Greenwald-Khanna family) — the quantile

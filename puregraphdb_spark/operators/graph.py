@@ -1192,51 +1192,41 @@ class Graph:
         13×, and 70 s → 17 s at sf0.01). Equality with level peeling
         is property-pinned on closed forms and on the fixture graph.
 
-        Each round: one est-join on the symmetrized edges (co-keyed),
-        one per-vertex row_number window, one aggregate — all on the
-        vertex/edge key partitioning; the only driver read is the
-        1-row changed-count signature. Estimates only DECREASE and are
-        bounded below by the true coreness, so termination is exact,
-        not heuristic.
+        Runs on ``pregel`` over the symmetrized, self-loop-free edges:
+        the initial estimate is each vertex's degree; a superstep sends
+        every estimate along every edge (edges and state co-partitioned)
+        and takes the H-index of each vertex's received estimates. Stops
+        after the first superstep that lowers no estimate. Estimates
+        only DECREASE and are bounded below by the true coreness, so
+        termination is exact, not heuristic.
         """
-        und = (
-            self._undirected()
-            .filter(F.col("src") != F.col("dst"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        est = und.groupBy(F.col("src").alias("id")).agg(
-            F.count("*").cast("long").alias("est")
-        ).localCheckpoint(eager=True)
-        for _ in range(max_iter):
-            nb = und.join(
-                est.select(F.col("id").alias("dst"),
-                           F.col("est").alias("__nb")),
-                "dst",
-            ).select("src", "__nb")
-            w = Window.partitionBy("src").orderBy(F.desc("__nb"))
+        def step(e: DataFrame, state: DataFrame) -> DataFrame:
+            nb = e.join(state, e.src == state.id).select(
+                "dst", F.col("est").alias("__nb"))
+            w = Window.partitionBy("dst").orderBy(F.desc("__nb"))
             # H-index: sort neighbor estimates desc; h = max over rows
             # of min(row_number, estimate)
             hidx = (
                 nb.withColumn("__rn", F.row_number().over(w))
-                .groupBy(F.col("src").alias("id"))
+                .groupBy(F.col("dst").alias("id"))
                 .agg(F.max(F.least(F.col("__rn"), F.col("__nb")))
                      .cast("long").alias("__h"))
             )
-            new_est = flat_checkpoint(
-                est.join(hidx, "id")
-                .select("id", F.least(F.col("est"), F.col("__h"))
-                        .alias("est"))
-            )
-            changed = (
-                new_est.join(est.select("id", F.col("est").alias("__o")),
-                             "id")
-                .filter(F.col("est") < F.col("__o"))
-                .limit(1).count()
-            )
-            est = new_est
-            if changed == 0:
-                break
+            return state.join(hidx, "id").select(
+                "id", F.least(F.col("est"), F.col("__h")).alias("est"),
+                F.col("est").alias("__old"))
+
+        und = (
+            self._undirected()
+            .filter(F.col("src") != F.col("dst"))
+            .distinct()
+        )
+        est = self.pregel(
+            und,
+            lambda e: e.groupBy(F.col("src").alias("id")).agg(
+                F.count("*").cast("long").alias("est")),
+            step, changed=F.col("est") < F.col("__old"), max_iter=max_iter,
+        )
         zero = self.vertices.select("id").join(
             est.select("id"), "id", "left_anti"
         ).select("id", F.lit(0).cast("long").alias("coreness"))
@@ -2625,7 +2615,7 @@ def q95_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def harmonic_centrality(g: "Graph", landmarks: list[int],
+def harmonic_centrality(g: Graph, landmarks: list[int],
                         max_iter: int = 20,
                         weight_col: str | None = None) -> DataFrame:
     """Landmark-approximated harmonic centrality (Eppstein–Wang):

@@ -14,6 +14,17 @@ true/false. View-typed parameters name registered temp views — the
 procedure resolves them through the session catalog, so the inputs are
 exactly what SQL users already query.
 
+The procedures are one registry, ``PROCEDURES``. An entry names an
+operator function or a ``Graph`` method, and a CALL's arguments are
+bound to that operator's own signature: a ``DataFrame`` parameter takes
+a view name, a ``Graph`` (or ``self``) parameter takes ``edges`` and an
+optional ``vertices`` view, and scalars are coerced by their annotation
+(``list[...]``/``tuple[...]`` from comma-separated strings; ``''`` is
+None for an optional parameter). An entry records only where the CALL
+door differs from the operator: renamed parameters and CALL-only
+defaults. Procedures that compose several operators, or reshape their
+result, are the annotated functions below, bound the same way.
+
 This is deliberately NOT a Catalyst TVF: PySpark has no public
 DataFrame-returning UDTF registration, and a parser-level dispatch
 keeps the full DataFrame plan (lazy, optimizable) instead of forcing a
@@ -22,11 +33,19 @@ materialization boundary.
 
 from __future__ import annotations
 
+import importlib
+import inspect
 import re
+import types
+import typing
 from collections.abc import Callable
+from typing import TYPE_CHECKING, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+if TYPE_CHECKING:
+    from puregraphdb_spark.operators.graph import Graph
 
 _CALL_RE = re.compile(r"^\s*call\s+(\w+)\s*\((.*)\)\s*;?\s*$",
                       re.IGNORECASE | re.DOTALL)
@@ -69,16 +88,12 @@ def parse_call(query: str) -> tuple[str, dict]:
     return name, args
 
 
-def _view(spark: SparkSession, name: str) -> DataFrame:
-    return spark.table(name)
-
-
 def _graph(spark: SparkSession, edges: str, vertices: str | None = None):
     from puregraphdb_spark.operators.graph import Graph
 
-    e = _view(spark, edges)
+    e = spark.table(edges)
     if vertices:
-        v = _view(spark, vertices)
+        v = spark.table(vertices)
     else:
         v = (
             e.select(F.col("src").alias("id"))
@@ -88,51 +103,10 @@ def _graph(spark: SparkSession, edges: str, vertices: str | None = None):
     return Graph(v, e)
 
 
-# -- procedure implementations (spark, **parsed args) -> DataFrame -----------
+# -- composite procedures: several operators, or a reshaped result -----------
 
 
-def _pagerank(spark, edges: str, vertices: str | None = None,
-              reset_prob: float = 0.15, max_iter: int = 10,
-              weight_col: str | None = None) -> DataFrame:
-    return _graph(spark, edges, vertices).pagerank(
-        reset_prob=reset_prob, max_iter=int(max_iter),
-        weight_col=weight_col)
-
-
-def _hits(spark, edges: str, vertices: str | None = None,
-          max_iter: int = 10) -> DataFrame:
-    return _graph(spark, edges, vertices).hits(max_iter=int(max_iter))
-
-
-def _connected_components(spark, edges: str, vertices: str | None = None,
-                          max_iter: int = 50) -> DataFrame:
-    return _graph(spark, edges, vertices).connected_components(
-        max_iter=int(max_iter))
-
-
-def _label_propagation(spark, edges: str, vertices: str | None = None,
-                       max_iter: int = 5) -> DataFrame:
-    return _graph(spark, edges, vertices).label_propagation(
-        max_iter=int(max_iter))
-
-
-def _triangle_count(spark, edges: str, vertices: str | None = None) -> DataFrame:
-    return _graph(spark, edges, vertices).triangle_count()
-
-
-def _degrees(spark, edges: str, vertices: str | None = None) -> DataFrame:
-    return _graph(spark, edges, vertices).degrees()
-
-
-def _scc(spark, edges: str, vertices: str | None = None,
-         max_iter: int = 25, max_outer: int = 10) -> DataFrame:
-    return _graph(spark, edges, vertices).strongly_connected_components(
-        max_iter=int(max_iter), max_outer=int(max_outer))
-
-
-def _coreness(spark, edges: str, vertices: str | None = None,
-              method: str = "hindex") -> DataFrame:
-    g = _graph(spark, edges, vertices)
+def _coreness(g: Graph, method: str = "hindex") -> DataFrame:
     if method == "hindex":
         return g.coreness_hindex()
     if method == "levels":
@@ -140,249 +114,23 @@ def _coreness(spark, edges: str, vertices: str | None = None,
     raise ValueError("coreness method must be 'hindex' or 'levels'")
 
 
-def _k_core(spark, edges: str, k: int, vertices: str | None = None,
-            max_iter: int = 30) -> DataFrame:
-    return _graph(spark, edges, vertices).k_core(int(k), max_iter=int(max_iter))
+def _anf(spark: SparkSession, g: Graph, m: int = 64, max_iter: int = 16,
+         rel_tol: float = 0.01, edge_batch: int | None = None) -> DataFrame:
+    """CALL anf(edges => 'e') — HyperANF approximate neighborhood
+    function -> one row per hop t: (t, est_pairs, frac_of_final).
+    The q-effective diameter is the smallest t with
+    frac_of_final >= q. edge_batch caps per-superstep live shuffle
+    on thin-disk single nodes (batched == unbatched exactly)."""
+    nf = g.anf(m=m, max_iter=max_iter, rel_tol=rel_tol,
+               edge_batch=edge_batch)
+    final = nf[-1][1]
+    return spark.createDataFrame(
+        [(t, n, round(n / final, 6)) for t, n in nf],
+        "t int, est_pairs double, frac_of_final double")
 
 
-def _shortest_paths(spark, edges: str, landmarks: str,
-                    vertices: str | None = None,
-                    max_iter: int = 20,
-                    weight_col: str | None = None) -> DataFrame:
-    lm = [int(x) for x in str(landmarks).split(",") if str(x).strip()]
-    return _graph(spark, edges, vertices).shortest_paths(
-        lm, max_iter=int(max_iter), weight_col=weight_col)
-
-
-def _find_motifs(spark, edges: str, pattern: str,
-                 vertices: str | None = None,
-                 attach_vertex_attrs: bool = True) -> DataFrame:
-    """CALL find_motifs(edges => 'e', pattern => '(a)-[]->(b); (b)-[]->(c)')
-    — the Graph.find DSL through the SQL door; named vertices/edges
-    come back as struct columns."""
-    return _graph(spark, edges, vertices).find(
-        pattern, attach_vertex_attrs=bool(attach_vertex_attrs))
-
-
-def _contamination_report(spark, corpus: str, benchmark: str,
-                          n: int = 5, id_col: str = "doc_id",
-                          text_col: str = "text",
-                          broadcast_benchmark: bool = True) -> DataFrame:
-    from puregraphdb_spark.operators.text import contamination_report
-
-    return contamination_report(
-        _view(spark, corpus), _view(spark, benchmark), n=int(n),
-        text_col=text_col, id_col=id_col,
-        broadcast_benchmark=bool(broadcast_benchmark),
-    )
-
-
-def _near_dup_pairs(spark, docs: str = "documents", id_col: str = "doc_id",
-                    text_col: str = "text", num_hashes: int = 64,
-                    bands: int = 16, jaccard_threshold: float = 0.5) -> DataFrame:
-    from puregraphdb_spark.operators.similarity import near_dup_pairs
-
-    return near_dup_pairs(
-        _view(spark, docs), id_col=id_col, text_col=text_col,
-        num_hashes=int(num_hashes), bands=int(bands),
-        jaccard_threshold=float(jaccard_threshold),
-    )
-
-
-def _simhash_near_dup(spark, docs: str = "documents", id_col: str = "doc_id",
-                      text_col: str = "text", bits: int = 64,
-                      max_hamming: int = 3) -> DataFrame:
-    from puregraphdb_spark.operators.similarity import simhash_near_dup_pairs
-
-    return simhash_near_dup_pairs(
-        _view(spark, docs), id_col=id_col, text_col=text_col,
-        bits=int(bits), max_hamming=int(max_hamming),
-    )
-
-
-def _dedup_minhash(spark, docs: str = "documents", id_col: str = "doc_id",
-                   text_col: str = "text", num_hashes: int = 64,
-                   bands: int = 16, jaccard_threshold: float = 0.5) -> DataFrame:
-    from puregraphdb_spark.operators.similarity import dedup_minhash
-
-    return dedup_minhash(
-        _view(spark, docs), id_col=id_col, text_col=text_col,
-        num_hashes=int(num_hashes), bands=int(bands),
-        jaccard_threshold=float(jaccard_threshold),
-    )
-
-
-def _apply_dedup(spark, docs: str = "documents", id_col: str = "doc_id",
-                 text_col: str = "text", num_hashes: int = 64,
-                 bands: int = 16, jaccard_threshold: float = 0.5) -> DataFrame:
-    from puregraphdb_spark.operators.similarity import apply_dedup
-
-    return apply_dedup(
-        _view(spark, docs), id_col=id_col, text_col=text_col,
-        num_hashes=int(num_hashes), bands=int(bands),
-        jaccard_threshold=float(jaccard_threshold),
-    )
-
-
-def _audio_features(spark, assets: str, feature_dim: int = 16) -> DataFrame:
-    from puregraphdb_spark.operators.multimodal import extract_audio_features
-
-    return extract_audio_features(_view(spark, assets),
-                                  feature_dim=int(feature_dim))
-
-
-def _embedding_near_dup(spark, corpus: str = "embeddings",
-                        threshold: float = 0.95, dim: int = 64,
-                        num_planes: int = 10, id_col: str = "vec_id",
-                        emb_col: str = "embedding") -> DataFrame:
-    from puregraphdb_spark.operators.similarity import embedding_near_dup_pairs
-
-    return embedding_near_dup_pairs(
-        _view(spark, corpus), threshold=float(threshold), dim=int(dim),
-        num_planes=int(num_planes), id_col=id_col, emb_col=emb_col,
-    )
-
-
-def _ann_topk(spark, queries: str, corpus: str = "embeddings",
-              k: int = 10, dim: int = 64, num_planes: int = 8,
-              id_col: str = "vec_id", emb_col: str = "embedding") -> DataFrame:
-    from puregraphdb_spark.operators.similarity import ann_cosine_topk
-
-    return ann_cosine_topk(
-        _view(spark, queries), _view(spark, corpus), k=int(k), dim=int(dim),
-        num_planes=int(num_planes), id_col=id_col, emb_col=emb_col,
-    )
-
-
-def _knn_ivf_pq(spark, queries: str, corpus: str = "embeddings",
-                k: int = 10, dim: int = 64, n_clusters: int = 8,
-                m_subspaces: int = 8, k_codes: int = 16,
-                nprobe: int = 2, id_col: str = "vec_id",
-                emb_col: str = "embedding") -> DataFrame:
-    """CALL knn_ivf_pq(queries => 'q') — IVF top-k over the
-    product-quantized corpus (train + encode + ADC probe in one
-    call)."""
-    from puregraphdb_spark.operators import similarity
-
-    q = _view(spark, queries)
-    c = _view(spark, corpus)
-    cents = similarity.kmeans_centroids(
-        c, k=int(n_clusters), iters=2, dim=int(dim), emb_col=emb_col)
-    books = similarity.pq_train(
-        c, dim=int(dim), m=int(m_subspaces), k_codes=int(k_codes),
-        iters=2, emb_col=emb_col, id_col=id_col)
-    codes = similarity.pq_quantize(
-        c.select(F.col(id_col), F.col(emb_col)), books,
-        emb_col=emb_col)
-    return similarity.ivf_pq_topk(
-        q, codes, cents, books, k=int(k), nprobe=int(nprobe),
-        id_col=id_col, emb_col=emb_col)
-
-
-def _langid_kappa(spark, docs: str = "documents",
-                  source_col: str = "source", lang_col: str = "lang",
-                  text_col: str = "text") -> DataFrame:
-    from puregraphdb_spark.operators.pipeline import langid_kappa
-
-    return langid_kappa(_view(spark, docs), source_col=source_col,
-                        lang_col=lang_col, text_col=text_col)
-
-
-def _mann_whitney(spark, events: str = "events",
-                  ref_type: str = "purchase",
-                  type_col: str = "event_type",
-                  val_col: str = "value") -> DataFrame:
-    from puregraphdb_spark.operators.extras import mann_whitney_u
-
-    return mann_whitney_u(_view(spark, events), ref_type=ref_type,
-                          type_col=type_col, val_col=val_col)
-
-
-def _spearman(spark, table: str, group_col: str, x_col: str,
-              y_col: str) -> DataFrame:
-    from puregraphdb_spark.operators.extras import spearman_corr
-
-    return spearman_corr(_view(spark, table), group_col, x_col, y_col)
-
-
-def _ks_statistic(spark, events: str = "events",
-                  ref_type: str = "purchase",
-                  type_col: str = "event_type",
-                  val_col: str = "value") -> DataFrame:
-    from puregraphdb_spark.operators.extras import ks_statistic
-
-    return ks_statistic(_view(spark, events), ref_type=ref_type,
-                        type_col=type_col, val_col=val_col)
-
-
-def _benford(spark, table: str, val_col: str,
-             scale: int = 2) -> DataFrame:
-    from puregraphdb_spark.operators.profile import benford_profile
-
-    return benford_profile(_view(spark, table), val_col,
-                           scale=int(scale))
-
-
-def _bpe_train(spark, docs: str = "documents", num_merges: int = 50,
-               text_col: str = "text",
-               max_vocab: int = 200_000) -> DataFrame:
-    """CALL bpe_train(docs => 'documents') — ranked BPE merge rules."""
-    from puregraphdb_spark.operators.bpe import bpe_train
-
-    return bpe_train(_view(spark, docs), num_merges=int(num_merges),
-                     text_col=text_col, max_vocab=int(max_vocab))
-
-
-def _bpe_tokenize(spark, docs: str = "documents",
-                  num_merges: int = 50, text_col: str = "text",
-                  id_col: str = "doc_id") -> DataFrame:
-    """CALL bpe_tokenize(docs => 'documents') — train on the corpus
-    then tokenize it (one-call convenience; persisted-model flows
-    call bpe_train once and apply many times)."""
-    from puregraphdb_spark.operators.bpe import bpe_apply, bpe_train
-
-    d = _view(spark, docs)
-    merges = bpe_train(d, num_merges=int(num_merges),
-                       text_col=text_col)
-    return bpe_apply(d, merges, text_col=text_col, id_col=id_col)
-
-
-def _bpe_fertility(spark, docs: str = "documents",
-                   num_merges: int = 50, text_col: str = "text",
-                   id_col: str = "doc_id") -> DataFrame:
-    from puregraphdb_spark.operators.bpe import (
-        bpe_fertility_report, bpe_train)
-
-    d = _view(spark, docs)
-    merges = bpe_train(d, num_merges=int(num_merges),
-                       text_col=text_col)
-    return bpe_fertility_report(d, merges, text_col=text_col,
-                                id_col=id_col)
-
-
-def _knn_ivf_sq8(spark, queries: str, corpus: str = "embeddings",
-                 k: int = 10, dim: int = 64, n_clusters: int = 8,
-                 nprobe: int = 2, id_col: str = "vec_id",
-                 emb_col: str = "embedding") -> DataFrame:
-    """CALL knn_ivf_sq8(queries => 'q') — IVF top-k over the int8
-    scalar-quantized corpus (calibrate + quantize + probe in one
-    call; persisted-index flows use write_sq8_ivf_index)."""
-    from puregraphdb_spark.operators import similarity
-
-    q = _view(spark, queries)
-    c = _view(spark, corpus)
-    cents = similarity.kmeans_centroids(
-        c, k=int(n_clusters), iters=2, dim=int(dim), emb_col=emb_col)
-    calib = similarity.sq8_calibrate(c, dim=int(dim), emb_col=emb_col)
-    codes = similarity.sq8_quantize(
-        c.select(F.col(id_col), F.col(emb_col)), calib,
-        emb_col=emb_col)
-    return similarity.ivf_sq8_topk(
-        q, codes, cents, calib, k=int(k), nprobe=int(nprobe),
-        id_col=id_col, emb_col=emb_col)
-
-
-def _ivf_drift(spark, path: str, emb_col: str = "embedding") -> DataFrame:
+def _ivf_drift(spark: SparkSession, path: str,
+               emb_col: str = "embedding") -> DataFrame:
     """CALL ivf_drift(path => '/idx') — per-cluster centroid drift of a
     persisted IVF index -> (cluster, n_vecs, drift)."""
     from puregraphdb_spark.operators.similarity import ivf_drift_report
@@ -393,14 +141,14 @@ def _ivf_drift(spark, path: str, emb_col: str = "embedding") -> DataFrame:
         "cluster int, n_vecs long, drift double")
 
 
-def _ivf_refresh(spark, path: str, drift_threshold: float = 0.02,
-                 id_col: str = "vec_id",
+def _ivf_refresh(spark: SparkSession, path: str,
+                 drift_threshold: float = 0.02, id_col: str = "vec_id",
                  emb_col: str = "embedding") -> DataFrame:
     """CALL ivf_refresh(path => '/idx') — incremental re-clustering of
     the drifted IVF clusters -> one summary row."""
     from puregraphdb_spark.operators.similarity import refresh_ivf_index
 
-    out = refresh_ivf_index(spark, path, drift_threshold=float(drift_threshold),
+    out = refresh_ivf_index(spark, path, drift_threshold=drift_threshold,
                             id_col=id_col, emb_col=emb_col)
     return spark.createDataFrame(
         [(",".join(str(c) for c in out["refreshed"]), out["n_reassigned"],
@@ -408,1134 +156,453 @@ def _ivf_refresh(spark, path: str, drift_threshold: float = 0.02,
         "refreshed string, n_reassigned long, n_moved long, max_drift double")
 
 
-def _as_of_join(spark, left: str, right: str, on: str,
-                left_ts: str, right_ts: str, right_cols: str,
-                prefix: str = "asof_",
-                direction: str = "backward") -> DataFrame:
-    from puregraphdb_spark.operators.asof import as_of_join
+def _knn_ivf_pq(queries: DataFrame, corpus: DataFrame, k: int = 10,
+                dim: int = 64, n_clusters: int = 8, m_subspaces: int = 8,
+                k_codes: int = 16, nprobe: int = 2, id_col: str = "vec_id",
+                emb_col: str = "embedding") -> DataFrame:
+    """CALL knn_ivf_pq(queries => 'q') — IVF top-k over the
+    product-quantized corpus (train + encode + ADC probe in one
+    call)."""
+    from puregraphdb_spark.operators import similarity
 
-    cols = [c.strip() for c in right_cols.split(",") if c.strip()]
-    return as_of_join(
-        _view(spark, left), _view(spark, right), on=on,
-        left_ts=left_ts, right_ts=right_ts, right_cols=cols, prefix=prefix,
-        direction=direction,
-    )
-
-
-def _parse_measures(measures: str) -> dict:
-    """``'n:count,sum_val:sum:value'`` → {'n': ('count', None),
-    'sum_val': ('sum', 'value')} — out_name:fn[:col] items."""
-    out: dict = {}
-    for item in measures.split(","):
-        parts = [p.strip() for p in item.split(":")]
-        if len(parts) == 2:
-            out[parts[0]] = (parts[1], None)
-        elif len(parts) == 3:
-            out[parts[0]] = (parts[1], parts[2])
-        else:
-            raise ValueError(
-                f"bad measure {item!r}: use out_name:fn or out_name:fn:col")
-    return out
+    cents = similarity.kmeans_centroids(
+        corpus, k=n_clusters, iters=2, dim=dim, emb_col=emb_col)
+    books = similarity.pq_train(
+        corpus, dim=dim, m=m_subspaces, k_codes=k_codes, iters=2,
+        emb_col=emb_col, id_col=id_col)
+    codes = similarity.pq_quantize(
+        corpus.select(F.col(id_col), F.col(emb_col)), books,
+        emb_col=emb_col)
+    return similarity.ivf_pq_topk(
+        queries, codes, cents, books, k=k, nprobe=nprobe,
+        id_col=id_col, emb_col=emb_col)
 
 
-def _time_rollup(spark, events: str, ts_col: str, granularities: str,
-                 group_cols: str = "", measures: str = "n:count") -> DataFrame:
+def _knn_ivf_sq8(queries: DataFrame, corpus: DataFrame, k: int = 10,
+                 dim: int = 64, n_clusters: int = 8, nprobe: int = 2,
+                 id_col: str = "vec_id",
+                 emb_col: str = "embedding") -> DataFrame:
+    """CALL knn_ivf_sq8(queries => 'q') — IVF top-k over the int8
+    scalar-quantized corpus (calibrate + quantize + probe in one
+    call; persisted-index flows use write_sq8_ivf_index)."""
+    from puregraphdb_spark.operators import similarity
+
+    cents = similarity.kmeans_centroids(
+        corpus, k=n_clusters, iters=2, dim=dim, emb_col=emb_col)
+    calib = similarity.sq8_calibrate(corpus, dim=dim, emb_col=emb_col)
+    codes = similarity.sq8_quantize(
+        corpus.select(F.col(id_col), F.col(emb_col)), calib,
+        emb_col=emb_col)
+    return similarity.ivf_sq8_topk(
+        queries, codes, cents, calib, k=k, nprobe=nprobe,
+        id_col=id_col, emb_col=emb_col)
+
+
+def _ann_recall(queries: DataFrame, corpus: DataFrame, method: str = "lsh",
+                k: int = 10, dim: int = 64, num_planes: int = 6,
+                n_clusters: int = 8, nprobe: int = 2, id_col: str = "vec_id",
+                emb_col: str = "embedding") -> DataFrame:
+    from puregraphdb_spark.operators import similarity
+
+    if method == "ivf":
+        cents = similarity.kmeans_centroids(
+            corpus, k=n_clusters, iters=2, dim=dim, emb_col=emb_col)
+        ann = similarity.ivf_cosine_topk(
+            queries, corpus, cents, k=k, nprobe=nprobe, id_col=id_col,
+            emb_col=emb_col)
+        label = f"ivf_nprobe{nprobe}"
+    elif method == "sq8":
+        ann = _knn_ivf_sq8(queries, corpus, k=k, dim=dim,
+                           n_clusters=n_clusters, nprobe=nprobe,
+                           id_col=id_col, emb_col=emb_col)
+        label = f"ivf_sq8_nprobe{nprobe}"
+    else:
+        ann = similarity.ann_cosine_topk(
+            queries, corpus, k=k, dim=dim, num_planes=num_planes,
+            id_col=id_col, emb_col=emb_col)
+        label = f"lsh_planes{num_planes}"
+    return similarity.ann_recall_report(queries, corpus, ann, k=k,
+                                        method=label, id_col=id_col,
+                                        emb_col=emb_col)
+
+
+def _bpe_tokenize(docs: DataFrame, num_merges: int = 50,
+                  text_col: str = "text",
+                  id_col: str = "doc_id") -> DataFrame:
+    """CALL bpe_tokenize(docs => 'documents') — train on the corpus
+    then tokenize it (one-call convenience; persisted-model flows
+    call bpe_train once and apply many times)."""
+    from puregraphdb_spark.operators.bpe import bpe_apply, bpe_train
+
+    merges = bpe_train(docs, num_merges=num_merges, text_col=text_col)
+    return bpe_apply(docs, merges, text_col=text_col, id_col=id_col)
+
+
+def _bpe_fertility(docs: DataFrame, num_merges: int = 50,
+                   text_col: str = "text",
+                   id_col: str = "doc_id") -> DataFrame:
+    from puregraphdb_spark.operators.bpe import (
+        bpe_fertility_report, bpe_train)
+
+    merges = bpe_train(docs, num_merges=num_merges, text_col=text_col)
+    return bpe_fertility_report(docs, merges, text_col=text_col,
+                                id_col=id_col)
+
+
+def _time_rollup(events: DataFrame, ts_col: str, granularities: list[str],
+                 group_cols: list[str] | None = None,
+                 measures: str = "n:count") -> DataFrame:
+    """``measures`` is ``out_name:fn[:col]`` items, e.g.
+    ``'n:count,sum_val:sum:value'``."""
     from puregraphdb_spark.operators.rollup import time_rollup
 
-    return time_rollup(
-        _view(spark, events), ts_col,
-        [g.strip() for g in granularities.split(",") if g.strip()],
-        [c.strip() for c in group_cols.split(",") if c.strip()],
-        _parse_measures(measures),
-    )
-
-
-def _sessionize(spark, events: str = "events",
-                gap: str = "30 minutes") -> DataFrame:
-    from puregraphdb_spark.operators.events import sessionize
-
-    return sessionize(_view(spark, events), gap=gap)
-
-
-def _percentile_cont(spark, table: str, group_col: str, val_col: str,
-                     ps: str = "0.5", accuracy: int = 1000) -> DataFrame:
-    from puregraphdb_spark.operators.percentile import exact_percentile_cont
-
-    p_list = [float(p) for p in str(ps).split(",") if str(p).strip()]
-    return exact_percentile_cont(
-        _view(spark, table), group_col, val_col, p_list,
-        accuracy=int(accuracy),
-    )
-
-
-def _text_profile(spark, docs: str = "documents",
-                  text_col: str = "text") -> DataFrame:
-    from puregraphdb_spark.operators.text import profile_documents
-
-    return profile_documents(_view(spark, docs), text_col=text_col)
-
-
-def _quality_report(spark, docs: str = "documents",
-                    text_col: str = "text") -> DataFrame:
-    from puregraphdb_spark.operators.text import corpus_quality_report
-
-    return corpus_quality_report(_view(spark, docs), text_col=text_col)
-
-
-def _chunk_documents(spark, docs: str = "documents", size: int = 32,
-                     stride: int = 24, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
-    from puregraphdb_spark.operators.pipeline import chunk_documents
-
-    return chunk_documents(_view(spark, docs), size=int(size),
-                           stride=int(stride), id_col=id_col,
-                           text_col=text_col)
-
-
-def _hash_split(spark, table: str, id_col: str = "doc_id",
-                train_pct: int = 80, val_pct: int = 10) -> DataFrame:
-    from puregraphdb_spark.operators.pipeline import hash_split
-
-    return hash_split(_view(spark, table), id_col=id_col,
-                      train_pct=int(train_pct), val_pct=int(val_pct))
-
-
-def _parse_rates(rates: str) -> dict:
-    """``'en:0.05,de:0.1'`` → {'en': 0.05, 'de': 0.1}."""
-    out: dict = {}
-    for item in rates.split(","):
-        if not item.strip():
-            continue
-        key, _, val = item.partition(":")
-        out[key.strip()] = float(val)
-    return out
-
-
-def _stratified_sample(spark, table: str, strata_col: str,
-                       rates: str = "", id_col: str = "doc_id",
-                       default_rate: float = 1.0) -> DataFrame:
-    from puregraphdb_spark.operators.pipeline import stratified_sample
-
-    return stratified_sample(_view(spark, table), strata_col,
-                             _parse_rates(rates), id_col=id_col,
-                             default_rate=float(default_rate))
-
-
-def _content_hash_dedup(spark, docs: str = "documents",
-                        id_col: str = "doc_id",
-                        text_col: str = "text") -> DataFrame:
-    from puregraphdb_spark.operators.pipeline import content_hash_annotate
-
-    return content_hash_annotate(_view(spark, docs), id_col=id_col,
-                                 text_col=text_col)
-
-
-def _zscore_outliers(spark, table: str, partition_cols: str,
-                     val_col: str, id_cols: str,
-                     threshold: float = 2.0) -> DataFrame:
-    from puregraphdb_spark.operators.pipeline import zscore_outliers
-
-    return zscore_outliers(
-        _view(spark, table),
-        [c.strip() for c in partition_cols.split(",") if c.strip()],
-        val_col,
-        [c.strip() for c in id_cols.split(",") if c.strip()],
-        threshold=float(threshold),
-    )
-
-
-def _simhash_topk(spark, queries: str, corpus: str = "embeddings",
-                  k: int = 5, id_col: str = "vec_id",
-                  emb_col: str = "embedding") -> DataFrame:
-    from puregraphdb_spark.operators.pipeline import simhash_topk
-
-    return simhash_topk(_view(spark, queries), _view(spark, corpus),
-                        k=int(k), id_col=id_col, emb_col=emb_col)
-
-
-def _funnel(spark, events: str = "events", stages: str = "",
-            user_col: str = "user_id", ts_col: str = "ts",
-            type_col: str = "event_type") -> DataFrame:
-    from puregraphdb_spark.operators.events import funnel
-
-    return funnel(
-        _view(spark, events),
-        [s.strip() for s in stages.split(",") if s.strip()],
-        user_col=user_col, ts_col=ts_col, type_col=type_col,
-    )
-
-
-def _reach(spark, edges: str, max_hops: int = 2,
-           min_hops: int = 1) -> DataFrame:
-    from puregraphdb_spark.operators.graph import Graph
-
-    e = _view(spark, edges)
-    v = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    return Graph(v, e).reach(int(max_hops), int(min_hops))
-
-
-def _betweenness(spark, edges: str, sources: str,
-                 max_depth: int = 20, scale: float = 1.0,
-                 vertices: str | None = None) -> DataFrame:
-    """CALL betweenness(edges => 'e', sources => '0,1,2') — Brandes
-    betweenness from the comma-separated source sample; pass
-    scale => n/k for the unbiased sampled estimator. Sources must be
-    a bounded k-sample (work is O(k·|E|))."""
-    srcs = [int(x) for x in str(sources).split(",") if str(x).strip()]
-    return _graph(spark, edges, vertices).betweenness_centrality(
-        srcs, max_depth=int(max_depth), scale=float(scale))
-
-
-def _betweenness_sampled(spark, edges: str, eps: float = 0.05,
-                         delta: float = 0.1, max_depth: int = 20,
-                         vertices: str | None = None) -> DataFrame:
-    """CALL betweenness_sampled(edges => 'e', eps => 0.1) — ε-bounded
-    Brandes sampling; k = ceil(ln(2n/δ)/(2ε²)) sources derived from
-    the accuracy target instead of hand-picked."""
-    return _graph(spark, edges, vertices).betweenness_sampled(
-        eps=float(eps), delta=float(delta), max_depth=int(max_depth))
-
-
-def _louvain(spark, edges: str, weight_col: str | None = None,
-             max_levels: int = 3, max_sweeps: int = 10) -> DataFrame:
-    """CALL louvain(edges => 'e') — Louvain community detection
-    (validated label-move sweeps + contraction) → (id, community)."""
-    from puregraphdb_spark.operators.community import louvain
-
-    return louvain(_view(spark, edges), weight_col=weight_col,
-                   max_levels=int(max_levels), max_sweeps=int(max_sweeps))
-
-
-def _anf(spark, edges: str, m: int = 64, max_iter: int = 16,
-         rel_tol: float = 0.01, vertices: str | None = None,
-         edge_batch: int | None = None) -> DataFrame:
-    """CALL anf(edges => 'e') — HyperANF approximate neighborhood
-    function -> one row per hop t: (t, est_pairs, frac_of_final).
-    The q-effective diameter is the smallest t with
-    frac_of_final >= q. edge_batch caps per-superstep live shuffle
-    on thin-disk single nodes (batched == unbatched exactly)."""
-    nf = _graph(spark, edges, vertices).anf(
-        m=m, max_iter=max_iter, rel_tol=rel_tol,
-        edge_batch=None if edge_batch is None else int(edge_batch))
-    final = nf[-1][1]
-    return spark.createDataFrame(
-        [(t, n, round(n / final, 6)) for t, n in nf],
-        "t int, est_pairs double, frac_of_final double")
-
-
-def _ktruss(spark, edges: str, k: int = 3, max_iter: int = 50,
-            vertices: str | None = None) -> DataFrame:
-    """CALL ktruss(edges => 'e', k => 4) — maximal subgraph whose every
-    edge sits in >= k-2 within-subgraph triangles ->
-    (u, v, support) canonical surviving edges."""
-    return _graph(spark, edges, vertices).ktruss(
-        k=int(k), max_iter=int(max_iter))
-
-
-def _random_walks(spark, edges: str, walk_length: int = 8,
-                  walks_per_node: int = 1, seed: int = 42,
-                  max_degree: int = 10_000,
-                  vertices: str | None = None) -> DataFrame:
-    """CALL random_walks(edges => 'e') — deterministic seeded uniform
-    random walks (DeepWalk/node2vec p=q=1 corpus) ->
-    (start_id, walk_no, path, walk_len)."""
-    return _graph(spark, edges, vertices).random_walks(
-        walk_length=int(walk_length), walks_per_node=int(walks_per_node),
-        seed=int(seed), max_degree=int(max_degree))
-
-
-def _modularity(spark, edges: str, assignment: str,
-                weight_col: str | None = None,
-                comm_col: str = "community") -> DataFrame:
-    """CALL modularity(edges => 'e', assignment => 'a') — one-row
-    Newman modularity of a partition view (id, community)."""
-    from puregraphdb_spark.operators.community import modularity
-
-    return modularity(_view(spark, edges), _view(spark, assignment),
-                      weight_col=weight_col, comm_col=comm_col)
-
-
-def _interval_join(spark, left: str, right: str, on: str = "user_id",
-                   left_ts: str = "ts", right_ts: str = "ts",
-                   before: str = "1 hour",
-                   after: str = "0 seconds") -> DataFrame:
-    """CALL interval_join(left => 'purchases', right => 'clicks') —
-    the attribution-style bounded-time join (same core the streaming
-    deployment uses; on batch views the watermark is inert)."""
-    from puregraphdb_spark.streaming.joins import interval_join
-
-    return interval_join(
-        _view(spark, left), _view(spark, right), on=on,
-        left_ts=left_ts, right_ts=right_ts, before=before, after=after)
-
-
-def _sequence_pack(spark, docs: str = "documents", budget: int = 256,
-                   stream_col: str = "lang", id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
-    from puregraphdb_spark.operators.pipeline import sequence_pack
-
-    return sequence_pack(
-        _view(spark, docs), budget=int(budget), stream_col=stream_col,
-        id_col=id_col, text_col=text_col)
-
-
-def _harmonic(spark, edges: str, landmarks: str,
-              max_iter: int = 20) -> DataFrame:
-    from puregraphdb_spark.operators.graph import Graph, harmonic_centrality
-
-    e = _view(spark, edges)
-    v = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    lm = [int(x) for x in str(landmarks).split(",") if str(x).strip()]
-    return harmonic_centrality(Graph(v, e), lm, max_iter=int(max_iter))
-
-
-def _heavy_hitters(spark, table: str, col: str, k: int = 20,
-                   capacity: int = 64) -> DataFrame:
-    from puregraphdb_spark.operators.sketch import heavy_hitters
-
-    return heavy_hitters(_view(spark, table), col,
-                         k=int(k), capacity=int(capacity))
-
-
-def _weighted_median(spark, table: str, value_col: str,
-                     weight_col: str, group_cols: str) -> DataFrame:
-    from puregraphdb_spark.operators.extras import weighted_median
-
-    return weighted_median(
-        _view(spark, table), value_col, weight_col,
-        *[c.strip() for c in group_cols.split(",") if c.strip()],
-    )
-
-
-def _interval_union(spark, events: str = "events",
-                    duration_s: int = 300, id_col: str = "user_id",
-                    ts_col: str = "ts",
-                    tiebreak: str = "event_id") -> DataFrame:
-    from puregraphdb_spark.operators.events import interval_union
-
-    return interval_union(_view(spark, events), int(duration_s),
-                          id_col=id_col, ts_col=ts_col,
-                          tiebreak=tiebreak)
-
-
-def _conversion_latency(spark, events: str = "events",
-                        from_type: str = "signup",
-                        to_type: str = "purchase",
-                        id_col: str = "user_id") -> DataFrame:
-    from puregraphdb_spark.operators.events import conversion_latency
-
-    return conversion_latency(_view(spark, events), from_type=from_type,
-                              to_type=to_type, id_col=id_col)
-
-
-def _sorted_neighborhood(spark, table: str, key_col: str, id_col: str,
-                         window: int = 3, max_dist: int = 8) -> DataFrame:
-    from puregraphdb_spark.operators.pipeline import sorted_neighborhood_pairs
-
-    return sorted_neighborhood_pairs(
-        _view(spark, table), key_col=key_col, id_col=id_col,
-        window=int(window), max_dist=int(max_dist),
-    )
-
-
-def _token_diversity(spark, docs: str = "documents",
-                     group_col: str = "source") -> DataFrame:
-    from puregraphdb_spark.operators.pipeline import token_diversity
-
-    return token_diversity(_view(spark, docs), group_col=group_col)
-
-
-def _gini(spark, table: str = "orders", key_col: str = "o_custkey",
-          amount_col: str = "o_totalprice") -> DataFrame:
-    from puregraphdb_spark.operators.extras import gini_concentration
-
-    return gini_concentration(_view(spark, table), key_col=key_col,
-                              amount_col=amount_col)
-
-
-def _hhi(spark, table: str, group_col: str, key_col: str,
-         amount_col: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from puregraphdb_spark.operators.extras import hhi_concentration
-
-    return hhi_concentration(_view(spark, table), group_col, key_col,
-                             F.col(amount_col))
-
-
-def _bounce_rate(spark, events: str = "events",
-                 gap: str = "30 minutes") -> DataFrame:
-    from puregraphdb_spark.operators.events import bounce_rate
-
-    return bounce_rate(_view(spark, events), gap=gap)
-
-
-def _chi_square(spark, table: str, row_col: str,
-                col_col: str) -> DataFrame:
-    from puregraphdb_spark.operators.extras import chi_square_contingency
-
-    return chi_square_contingency(_view(spark, table), row_col, col_col)
-
-
-def _funnel_latency(spark, events: str = "events",
-                    stages: str = "view,click,purchase") -> DataFrame:
-    from puregraphdb_spark.operators.events import funnel_latency
-
-    return funnel_latency(
-        _view(spark, events),
-        [s.strip() for s in stages.split(",") if s.strip()],
-    )
-
-
-def _dup_cluster_histogram(spark, docs: str = "documents",
-                           id_col: str = "doc_id",
-                           text_col: str = "text") -> DataFrame:
-    from puregraphdb_spark.operators.pipeline import dup_cluster_histogram
-
-    return dup_cluster_histogram(_view(spark, docs), id_col=id_col,
-                                 text_col=text_col)
-
-
-def _approx_quantiles(spark, table: str, value_col: str,
-                      group_col: str, ps: str = "0.25,0.5,0.75,0.95",
-                      accuracy: int = 1000) -> DataFrame:
-    from puregraphdb_spark.operators.extras import approx_quantiles_profile
-
-    p_list = tuple(float(p) for p in str(ps).split(",") if str(p).strip())
-    return approx_quantiles_profile(
-        _view(spark, table), value_col, group_col, ps=p_list,
-        accuracy=int(accuracy),
-    )
-
-
-def _node2vec_walks(spark, edges: str, walk_length: int = 8,
-                    walks_per_node: int = 1, p: float = 1.0,
-                    q: float = 1.0, seed: int = 42,
-                    max_degree: int = 10_000,
-                    vertices: str | None = None) -> DataFrame:
-    """CALL node2vec_walks(edges => 'e', p => 0.25, q => 4.0) — biased
-    second-order (p,q) walks (Grover & Leskovec KDD'16) ->
-    (start_id, walk_no, path, walk_len); p=q=1 is bit-identical to
-    CALL random_walks."""
-    return _graph(spark, edges, vertices).node2vec_walks(
-        walk_length=int(walk_length), walks_per_node=int(walks_per_node),
-        p=float(p), q=float(q), seed=int(seed),
-        max_degree=int(max_degree))
-
-
-def _cross_source_shingles(spark, docs: str = "documents",
-                           source_col: str = "source",
-                           text_col: str = "text",
-                           n: int = 4) -> DataFrame:
-    from puregraphdb_spark.operators.llm import cross_source_shingles
-
-    return cross_source_shingles(
-        _view(spark, docs), source_col=source_col,
-        text_col=text_col, n=int(n))
-
-
-def _anomaly_mad(spark, events: str = "events", ts_col: str = "ts",
-                 nsigma: float = 3.5) -> DataFrame:
-    from puregraphdb_spark.operators.events import anomaly_mad_ts
-
-    return anomaly_mad_ts(_view(spark, events), ts_col=ts_col,
-                          nsigma=float(nsigma))
-
-
-def _seasonal_dow(spark, events: str = "events", ts_col: str = "ts",
-                  type_col: str = "event_type") -> DataFrame:
-    from puregraphdb_spark.operators.events import seasonal_dow
-
-    return seasonal_dow(_view(spark, events), ts_col=ts_col,
-                        type_col=type_col)
-
-
-def _burst_detection(spark, events: str = "events", ts_col: str = "ts",
-                     type_col: str = "event_type",
-                     z_threshold: float = 2.0) -> DataFrame:
-    from puregraphdb_spark.operators.events import burst_detection
-
-    return burst_detection(_view(spark, events), ts_col=ts_col,
-                           type_col=type_col,
-                           z_threshold=float(z_threshold))
-
-
-def _winsorized_stats(spark, table: str, group_col: str,
-                      value_col: str, lo_pct: int = 5,
-                      hi_pct: int = 95) -> DataFrame:
-    from puregraphdb_spark.operators.extras import winsorized_stats
-
-    return winsorized_stats(_view(spark, table), group_col, value_col,
-                            lo_pct=int(lo_pct), hi_pct=int(hi_pct))
-
-
-def _source_mix_budget(spark, docs: str = "documents",
-                       source_col: str = "source",
-                       text_col: str = "text",
-                       budget_frac_pct: int = 50) -> DataFrame:
-    from puregraphdb_spark.operators.pipeline import source_mix_budget
-
-    return source_mix_budget(
-        _view(spark, docs), source_col=source_col, text_col=text_col,
-        budget_frac_pct=int(budget_frac_pct))
-
-
-def _class_balance(spark, docs: str = "documents",
-                   class_col: str = "lang") -> DataFrame:
-    from puregraphdb_spark.operators.pipeline import class_balance_plan
-
-    return class_balance_plan(_view(spark, docs), class_col=class_col)
-
-
-def _split_contamination(spark, docs: str = "documents",
-                         id_col: str = "doc_id",
-                         text_col: str = "text", n: int = 4,
-                         train_pct: int = 80,
-                         val_pct: int = 10) -> DataFrame:
-    from puregraphdb_spark.operators.pipeline import split_contamination
-
-    return split_contamination(
-        _view(spark, docs), id_col=id_col, text_col=text_col,
-        n=int(n), train_pct=int(train_pct), val_pct=int(val_pct))
-
-
-def _vocab_growth(spark, docs: str = "documents",
-                  id_col: str = "doc_id",
-                  text_col: str = "text") -> DataFrame:
-    from puregraphdb_spark.operators.pipeline import vocab_growth
-
-    return vocab_growth(_view(spark, docs), id_col=id_col,
-                        text_col=text_col)
-
-
-def _seasonal_burst(spark, events: str = "events", ts_col: str = "ts",
-                    type_col: str = "event_type",
-                    z_threshold: float = 2.0) -> DataFrame:
-    from puregraphdb_spark.operators.events import seasonal_burst_detection
-
-    return seasonal_burst_detection(
-        _view(spark, events), ts_col=ts_col, type_col=type_col,
-        z_threshold=float(z_threshold))
-
-
-def _dedup_impact(spark, docs: str = "documents",
-                  source_col: str = "source",
-                  text_col: str = "text") -> DataFrame:
-    from puregraphdb_spark.operators.pipeline import dedup_impact_by_source
-
-    return dedup_impact_by_source(_view(spark, docs),
-                                  source_col=source_col,
-                                  text_col=text_col)
-
-
-def _apply_substring_dedup(spark, docs: str = "documents",
-                           k: int = 8,
-                           text_col: str = "text") -> DataFrame:
-    from puregraphdb_spark.operators.pipeline import apply_substring_dedup
-
-    return apply_substring_dedup(_view(spark, docs), k=int(k),
-                                 text_col=text_col)
-
-
-def _embedding_drift(spark, embeddings: str = "embeddings",
-                     key_col: str = "label",
-                     vec_col: str = "embedding") -> DataFrame:
-    from puregraphdb_spark.operators.pipeline import embedding_drift
-
-    return embedding_drift(_view(spark, embeddings), key_col=key_col,
-                           vec_col=vec_col)
-
-
-def _doc_stitching(spark, docs: str = "documents",
-                   k: int = 3) -> DataFrame:
-    from puregraphdb_spark.operators.pipeline import doc_stitching_report
-
-    return doc_stitching_report(_view(spark, docs), k=int(k))
-
-
-def _benchmark_attribution(spark, docs: str = "documents",
-                           benchmarks: str = "benchmarks",
-                           n: int = 5) -> DataFrame:
-    from puregraphdb_spark.operators.text import benchmark_attribution
-
-    return benchmark_attribution(_view(spark, docs),
-                                 _view(spark, benchmarks), n=int(n))
-
-
-def _token_length_profile(spark, docs: str = "documents",
-                          source_col: str = "source",
-                          text_col: str = "text") -> DataFrame:
-    from puregraphdb_spark.operators.pipeline import token_length_profile
-
-    return token_length_profile(_view(spark, docs),
-                                source_col=source_col,
-                                text_col=text_col)
-
-
-def _pii_scan(spark, docs: str = "documents",
-              text_col: str = "text",
-              source_col: str = "source") -> DataFrame:
-    from puregraphdb_spark.operators.pii import pii_scan
-
-    return pii_scan(_view(spark, docs), text_col=text_col,
-                    source_col=source_col)
-
-
-def _redact_pii(spark, docs: str = "documents",
-                text_col: str = "text",
-                kinds: str | None = None) -> DataFrame:
-    from puregraphdb_spark.operators.pii import redact_pii
-
-    kind_list = ([k.strip() for k in kinds.split(",") if k.strip()]
-                 if kinds else None)
-    return redact_pii(_view(spark, docs), kinds=kind_list,
-                      text_col=text_col)
-
-
-def _semantic_dedup(spark, embeddings: str = "embeddings",
-                    id_col: str = "vec_id", emb_col: str = "embedding",
-                    threshold: float = 0.85, k: int = 16,
-                    iters: int = 3, dim: int = 64) -> DataFrame:
-    from puregraphdb_spark.operators.similarity import semantic_dedup
-
-    return semantic_dedup(_view(spark, embeddings), id_col=id_col,
-                          emb_col=emb_col, threshold=float(threshold),
-                          k=int(k), iters=int(iters), dim=int(dim))
-
-
-def _hash_semantic_dedup(spark, embeddings: str = "embeddings",
-                         id_col: str = "vec_id",
-                         emb_col: str = "embedding",
-                         threshold: float = 0.3,
-                         n_clusters: int = 16) -> DataFrame:
-    from puregraphdb_spark.operators.similarity import hash_semantic_dedup
-
-    return hash_semantic_dedup(_view(spark, embeddings), id_col=id_col,
-                               emb_col=emb_col,
-                               threshold=float(threshold),
-                               n_clusters=int(n_clusters))
-
-
-def _temporal_reach(spark, edges: str, sources: str,
-                    k: int = 3) -> DataFrame:
-    from puregraphdb_spark.operators.graph import temporal_reach
-
-    return temporal_reach(_view(spark, edges), _view(spark, sources),
-                          k=int(k))
-
-
-def _shingle_compressibility(spark, docs: str = "documents",
-                             source_col: str = "source",
-                             text_col: str = "text",
-                             k: int = 8) -> DataFrame:
-    from puregraphdb_spark.operators.pipeline import (
-        shingle_compressibility)
-
-    return shingle_compressibility(_view(spark, docs),
-                                   source_col=source_col,
-                                   text_col=text_col, k=int(k))
-
-
-def _dedup_keepers(spark, docs: str = "documents",
-                   id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
-    from puregraphdb_spark.operators.pipeline import dedup_keepers
-
-    return dedup_keepers(_view(spark, docs), id_col=id_col,
-                         text_col=text_col)
-
-
-def _entity_resolution(spark, table: str, id_col: str,
-                       text_col: str, block_cols: str,
-                       max_distance: int = 2) -> DataFrame:
-    from puregraphdb_spark.operators.similarity import entity_resolution
-
-    blocks = [c.strip() for c in block_cols.split(",") if c.strip()]
-    return entity_resolution(_view(spark, table), id_col=id_col,
-                             text_col=text_col, block_cols=blocks,
-                             max_distance=int(max_distance))
-
-
-def _vector_hygiene(spark, embeddings: str = "embeddings",
-                    dim: int = 64, emb_col: str = "embedding",
-                    label_col: str = "label") -> DataFrame:
-    from puregraphdb_spark.operators.similarity import (
-        vector_hygiene_report)
-
-    return vector_hygiene_report(_view(spark, embeddings),
-                                 dim=int(dim), emb_col=emb_col,
-                                 label_col=label_col)
-
-
-def _asset_profile(spark, assets: str,
-                   modality_col: str = "modality",
-                   type_col: str = "media_type",
-                   payload_col: str = "payload") -> DataFrame:
-    from puregraphdb_spark.operators.multimodal import asset_profile
-
-    return asset_profile(_view(spark, assets),
-                         modality_col=modality_col,
-                         type_col=type_col, payload_col=payload_col)
-
-
-def _asset_payload_dedup(spark, assets: str,
-                         id_col: str = "asset_id",
-                         modality_col: str = "modality",
-                         payload_col: str = "payload") -> DataFrame:
-    from puregraphdb_spark.operators.multimodal import (
-        asset_payload_dedup)
-
-    return asset_payload_dedup(_view(spark, assets), id_col=id_col,
-                               modality_col=modality_col,
-                               payload_col=payload_col)
-
-
-def _image_near_dup(spark, assets: str, threshold: float = 0.92,
-                    feature_dim: int = 16, num_planes: int = 8,
-                    seed: int = 7) -> DataFrame:
-    from puregraphdb_spark.operators.multimodal import (
-        image_near_dup_pairs)
-
-    return image_near_dup_pairs(_view(spark, assets),
-                                threshold=float(threshold),
-                                feature_dim=int(feature_dim),
-                                num_planes=int(num_planes),
-                                seed=int(seed))
-
-
-def _apply_cdc_upsert(spark, dim: str, updates: str, key: str,
-                      version_col: str) -> DataFrame:
-    from puregraphdb_spark.operators.incremental import apply_cdc_upsert
-
-    return apply_cdc_upsert(_view(spark, dim), _view(spark, updates),
-                            key, version_col)
-
-
-def _arrival_regularity(spark, events: str = "events",
-                        ts_col: str = "ts", user_col: str = "user_id",
-                        min_events: int = 5, topk: int = 10) -> DataFrame:
-    from puregraphdb_spark.operators.events import arrival_regularity
-
-    return arrival_regularity(_view(spark, events), ts_col=ts_col,
-                              user_col=user_col,
-                              min_events=int(min_events),
-                              topk=int(topk))
-
-
-def _join_cardinality(spark, left: str, right: str, key: str,
-                      topk: int = 10) -> DataFrame:
-    from puregraphdb_spark.operators.skew import join_cardinality_profile
-
-    return join_cardinality_profile(_view(spark, left),
-                                    _view(spark, right), key,
-                                    topk=int(topk))
-
-
-def _incremental_agg_refresh(spark, old_agg: str, inserts: str,
-                             deletes: str, keys: str,
+    spec: dict = {}
+    for item in measures.split(","):
+        parts = [p.strip() for p in item.split(":")]
+        if len(parts) not in (2, 3):
+            raise ValueError(
+                f"bad measure {item!r}: use out_name:fn or out_name:fn:col")
+        spec[parts[0]] = (parts[1], parts[2] if len(parts) == 3 else None)
+    return time_rollup(events, ts_col, granularities, group_cols or [],
+                       spec)
+
+
+def _incremental_agg_refresh(old_agg: DataFrame, inserts: DataFrame,
+                             deletes: DataFrame, keys: list[str],
                              measures: str) -> DataFrame:
     """measures syntax: 'out_name:src_col:scale,...' (e.g.
     'sum_qty:l_quantity:2')."""
     from puregraphdb_spark.operators.incremental import (
         incremental_agg_refresh)
 
-    key_list = [k.strip() for k in keys.split(",") if k.strip()]
     spec = {}
     for part in measures.split(","):
-        if not part.strip():
-            continue
-        name, col, scale = part.strip().split(":")
-        spec[name] = (col, int(scale))
-    return incremental_agg_refresh(
-        _view(spark, old_agg), _view(spark, inserts),
-        _view(spark, deletes), key_list, spec)
+        if part.strip():
+            name, col, scale = part.strip().split(":")
+            spec[name] = (col, int(scale))
+    return incremental_agg_refresh(old_agg, inserts, deletes, keys, spec)
 
 
-def _apply_entity_resolution(spark, table: str, id_col: str,
-                             text_col: str, block_cols: str,
-                             max_distance: int = 2) -> DataFrame:
-    from puregraphdb_spark.operators.similarity import (
-        apply_entity_resolution)
+def _stratified_sample(table: DataFrame, strata_col: str, rates: str = "",
+                       id_col: str = "doc_id",
+                       default_rate: float = 1.0) -> DataFrame:
+    """``rates`` is ``'en:0.05,de:0.1'``."""
+    from puregraphdb_spark.operators.pipeline import stratified_sample
 
-    blocks = [c.strip() for c in block_cols.split(",") if c.strip()]
-    return apply_entity_resolution(_view(spark, table), id_col=id_col,
-                                   text_col=text_col,
-                                   block_cols=blocks,
-                                   max_distance=int(max_distance))
+    per = {}
+    for item in rates.split(","):
+        if item.strip():
+            key, _, val = item.partition(":")
+            per[key.strip()] = float(val)
+    return stratified_sample(table, strata_col, per, id_col=id_col,
+                             default_rate=default_rate)
 
 
-def _profile_drift(spark, table: str = "events",
-                   batch_col: str = "batch",
-                   columns: str = "") -> DataFrame:
+def _profile_drift(table: DataFrame, batch_col: str = "batch",
+                   columns: list[str] | None = None) -> DataFrame:
     from puregraphdb_spark.operators.profile import profile_drift
 
-    df = _view(spark, table)
-    cols = ([c.strip() for c in columns.split(",") if c.strip()]
-            or [c for c in df.columns if c != batch_col])
-    return profile_drift(df, batch_col, cols)
+    return profile_drift(
+        table, batch_col,
+        columns or [c for c in table.columns if c != batch_col])
 
 
-def _bm25_topk(spark, docs: str = "documents",
-               query: str = "spark join fast",
+def _bm25_topk(docs: DataFrame, query: str = "spark join fast",
                id_col: str = "doc_id", text_col: str = "text",
-               k1: float = 1.2, b: float = 0.75,
-               k: int = 20) -> DataFrame:
+               k1: float = 1.2, b: float = 0.75, k: int = 20) -> DataFrame:
     from puregraphdb_spark.operators.llm import bm25_topk
 
-    tokens = [t for t in query.split() if t]
-    return bm25_topk(_view(spark, docs), tokens, id_col=id_col,
-                     text_col=text_col, k1=float(k1), b=float(b),
-                     k=int(k))
+    return bm25_topk(docs, query.split(), id_col=id_col, text_col=text_col,
+                     k1=k1, b=b, k=k)
 
 
-def _apply_semantic_dedup(spark, embeddings: str = "embeddings",
-                          id_col: str = "vec_id",
-                          emb_col: str = "embedding",
-                          threshold: float = 0.85, k: int = 16,
-                          iters: int = 3, dim: int = 64) -> DataFrame:
-    from puregraphdb_spark.operators.similarity import (
-        apply_semantic_dedup)
+def _hhi(table: DataFrame, group_col: str, key_col: str,
+         amount_col: str) -> DataFrame:
+    from puregraphdb_spark.operators.extras import hhi_concentration
 
-    return apply_semantic_dedup(_view(spark, embeddings), id_col=id_col,
-                                emb_col=emb_col,
-                                threshold=float(threshold), k=int(k),
-                                iters=int(iters), dim=int(dim))
+    return hhi_concentration(table, group_col, key_col, F.col(amount_col))
 
 
-def _tokenizer_fertility(spark, docs: str = "documents",
-                         source_col: str = "source",
-                         text_col: str = "text") -> DataFrame:
-    from puregraphdb_spark.operators.pipeline import tokenizer_fertility
-
-    return tokenizer_fertility(_view(spark, docs),
-                               source_col=source_col, text_col=text_col)
+# -- the registry -------------------------------------------------------------
 
 
-def _provenance_dedup(spark, docs: str = "documents",
-                      domain_col: str = "domain",
-                      text_col: str = "text") -> DataFrame:
-    from puregraphdb_spark.operators.pipeline import (
-        provenance_dedup_report)
-
-    return provenance_dedup_report(_view(spark, docs),
-                                   domain_col=domain_col,
-                                   text_col=text_col)
-
-
-def _cusum_changepoint(spark, events: str = "events",
-                       ts_col: str = "ts",
-                       type_col: str = "event_type",
-                       value_col: str = "value") -> DataFrame:
-    from puregraphdb_spark.operators.events import cusum_changepoint
-
-    return cusum_changepoint(_view(spark, events), ts_col=ts_col,
-                             type_col=type_col, value_col=value_col)
+class _Proc(NamedTuple):
+    """One procedure: the operator it runs (a ``module.function`` path
+    under ``puregraphdb_spark``, ``Graph.<method>``, or a function),
+    the CALL names of renamed parameters (operator name -> CALL name)
+    and the CALL-only defaults (by CALL name)."""
+    target: str | Callable[..., DataFrame]
+    rename: dict[str, str]
+    defaults: dict[str, object]
 
 
-def _lm_transition_score(spark, docs: str = "documents",
-                         id_col: str = "doc_id",
-                         group_col: str = "source",
-                         text_col: str = "text") -> DataFrame:
-    from puregraphdb_spark.operators.pipeline import lm_transition_score
-
-    return lm_transition_score(_view(spark, docs), id_col=id_col,
-                               group_col=group_col, text_col=text_col)
+def _op(target, rename: dict[str, str] | None = None, **defaults) -> _Proc:
+    return _Proc(target, rename or {}, defaults)
 
 
-def _k_anonymity(spark, table: str, quasi_cols: str,
-                 k: int = 5, report_col: str = "") -> DataFrame:
-    from puregraphdb_spark.operators.profile import k_anonymity_report
+# renames (operator parameter -> CALL name) ...
+_TABLE = {"df": "table"}
+_AS_VECS = {"corpus": "embeddings"}
+# ... and default views (CALL name -> view)
+_DOCS = {"docs": "documents"}
+_EVENTS = {"events": "events"}
+_VECS = {"embeddings": "embeddings"}
+_CORPUS = {"corpus": "embeddings"}
 
-    quasi = [c.strip() for c in quasi_cols.split(",") if c.strip()]
-    return k_anonymity_report(_view(spark, table), quasi, k=int(k),
-                              report_col=report_col or None)
-
-
-def _bitemporal_asof(spark, versions: str, key_col: str,
-                     valid_col: str, txn_col: str,
-                     valid_as_of: str, txn_as_of: str) -> DataFrame:
-    from puregraphdb_spark.operators.incremental import bitemporal_asof
-
-    return bitemporal_asof(_view(spark, versions), key_col,
-                           valid_col, txn_col, valid_as_of,
-                           txn_as_of)
-
-
-def _clamped_balance(spark, events: str = "events",
-                     id_col: str = "user_id", ts_col: str = "ts",
-                     val_col: str = "value",
-                     type_col: str = "event_type",
-                     credit_type: str = "purchase") -> DataFrame:
-    from puregraphdb_spark.operators.events import clamped_balance
-
-    return clamped_balance(_view(spark, events), id_col=id_col,
-                           ts_col=ts_col, val_col=val_col,
-                           type_col=type_col,
-                           credit_type=credit_type)
-
-
-def _capped_balance(spark, cap_micros: int, events: str = "events",
-                    id_col: str = "user_id", ts_col: str = "ts",
-                    val_col: str = "value",
-                    type_col: str = "event_type",
-                    credit_type: str = "purchase") -> DataFrame:
-    from puregraphdb_spark.operators.events import capped_balance
-
-    return capped_balance(_view(spark, events),
-                          cap_micros=int(cap_micros), id_col=id_col,
-                          ts_col=ts_col, val_col=val_col,
-                          type_col=type_col,
-                          credit_type=credit_type)
-
-
-def _source_overlap(spark, docs: str = "documents",
-                    source_col: str = "source",
-                    text_col: str = "text") -> DataFrame:
-    from puregraphdb_spark.operators.pipeline import (
-        source_overlap_matrix)
-
-    return source_overlap_matrix(_view(spark, docs),
-                                 source_col=source_col,
-                                 text_col=text_col)
-
-
-def _l_diversity(spark, table: str, quasi_cols: str,
-                 sensitive_col: str, l: int = 2,
-                 report_col: str = "") -> DataFrame:
-    from puregraphdb_spark.operators.profile import l_diversity_report
-
-    quasi = [c.strip() for c in quasi_cols.split(",") if c.strip()]
-    return l_diversity_report(_view(spark, table), quasi,
-                              sensitive_col, l=int(l),
-                              report_col=report_col or None)
-
-
-def _m4_downsample(spark, events: str = "events",
-                   series_col: str = "event_type",
-                   ts_col: str = "ts", val_col: str = "value",
-                   bucket: str = "day") -> DataFrame:
-    from puregraphdb_spark.operators.events import m4_downsample
-
-    return m4_downsample(_view(spark, events), series_col=series_col,
-                         ts_col=ts_col, val_col=val_col,
-                         bucket=bucket)
-
-
-def _embedding_dim_profile(spark, embeddings: str = "embeddings",
-                           dim: int = 64,
-                           emb_col: str = "embedding") -> DataFrame:
-    from puregraphdb_spark.operators.pipeline import (
-        embedding_dim_profile)
-
-    return embedding_dim_profile(_view(spark, embeddings),
-                                 dim=int(dim), emb_col=emb_col)
-
-
-def _gopher_rules(spark, docs: str = "documents",
-                  group_col: str = "source",
-                  text_col: str = "text") -> DataFrame:
-    from puregraphdb_spark.operators.pipeline import gopher_rules_report
-
-    return gopher_rules_report(_view(spark, docs), group_col=group_col,
-                               text_col=text_col)
-
-
-def _selection_curve(spark, docs: str = "documents",
-                     thresholds: str = "0.02,0.03,0.035,0.04",
-                     id_col: str = "doc_id",
-                     group_col: str = "source",
-                     text_col: str = "text") -> DataFrame:
-    from puregraphdb_spark.operators.pipeline import selection_curve
-
-    grid = [float(t) for t in thresholds.split(",") if t.strip()]
-    return selection_curve(_view(spark, docs), grid, id_col=id_col,
-                           group_col=group_col, text_col=text_col)
-
-
-def _ann_recall(spark, queries: str, corpus: str = "embeddings",
-                method: str = "lsh", k: int = 10, dim: int = 64,
-                num_planes: int = 6, n_clusters: int = 8,
-                nprobe: int = 2, id_col: str = "vec_id",
-                emb_col: str = "embedding") -> DataFrame:
-    from puregraphdb_spark.operators import similarity
-
-    q = _view(spark, queries)
-    c = _view(spark, corpus)
-    if method == "ivf":
-        cents = similarity.kmeans_centroids(
-            c, k=int(n_clusters), iters=2, dim=int(dim),
-            emb_col=emb_col)
-        ann = similarity.ivf_cosine_topk(
-            q, c, cents, k=int(k), nprobe=int(nprobe), id_col=id_col,
-            emb_col=emb_col)
-        label = f"ivf_nprobe{int(nprobe)}"
-    elif method == "sq8":
-        cents = similarity.kmeans_centroids(
-            c, k=int(n_clusters), iters=2, dim=int(dim),
-            emb_col=emb_col)
-        calib = similarity.sq8_calibrate(c, dim=int(dim),
-                                         emb_col=emb_col)
-        codes = similarity.sq8_quantize(
-            c.select(F.col(id_col), F.col(emb_col)), calib,
-            emb_col=emb_col)
-        ann = similarity.ivf_sq8_topk(
-            q, codes, cents, calib, k=int(k), nprobe=int(nprobe),
-            id_col=id_col, emb_col=emb_col)
-        label = f"ivf_sq8_nprobe{int(nprobe)}"
-    else:
-        ann = similarity.ann_cosine_topk(
-            q, c, k=int(k), dim=int(dim), num_planes=int(num_planes),
-            id_col=id_col, emb_col=emb_col)
-        label = f"lsh_planes{int(num_planes)}"
-    return similarity.ann_recall_report(q, c, ann, k=int(k),
-                                        method=label, id_col=id_col,
-                                        emb_col=emb_col)
-
-
-PROCEDURES: dict[str, Callable[..., DataFrame]] = {
-    "pagerank": _pagerank,
-    "hits": _hits,
-    "connected_components": _connected_components,
-    "strongly_connected_components": _scc,
-    "k_core": _k_core,
-    "coreness": _coreness,
-    "label_propagation": _label_propagation,
-    "triangle_count": _triangle_count,
-    "degrees": _degrees,
-    "shortest_paths": _shortest_paths,
-    "find_motifs": _find_motifs,
-    "near_dup_pairs": _near_dup_pairs,
-    "simhash_near_dup": _simhash_near_dup,
-    "dedup_minhash": _dedup_minhash,
-    "apply_dedup": _apply_dedup,
-    "audio_features": _audio_features,
-    "embedding_near_dup": _embedding_near_dup,
-    "ann_topk": _ann_topk,
-    "knn_ivf_sq8": _knn_ivf_sq8,
-    "knn_ivf_pq": _knn_ivf_pq,
-    "langid_kappa": _langid_kappa,
-    "mann_whitney": _mann_whitney,
-    "spearman": _spearman,
-    "ks_statistic": _ks_statistic,
-    "benford": _benford,
-    "bpe_train": _bpe_train,
-    "bpe_tokenize": _bpe_tokenize,
-    "bpe_fertility": _bpe_fertility,
-    "ivf_drift": _ivf_drift,
-    "ivf_refresh": _ivf_refresh,
-    "text_profile": _text_profile,
-    "quality_report": _quality_report,
-    "contamination_report": _contamination_report,
-    # time-series / custom operators (SURVEY §2.2; VERDICT r3 gap #2)
-    "funnel": _funnel,
-    "reach": _reach,
-    "betweenness": _betweenness,
-    "betweenness_sampled": _betweenness_sampled,
-    "louvain": _louvain,
-    "modularity": _modularity,
-    "anf": _anf,
-    "random_walks": _random_walks,
-    "ktruss": _ktruss,
-    "sequence_pack": _sequence_pack,
-    "interval_join": _interval_join,
-    "harmonic_centrality": _harmonic,
-    "chunk_documents": _chunk_documents,
-    "hash_split": _hash_split,
-    "stratified_sample": _stratified_sample,
-    "content_hash_dedup": _content_hash_dedup,
-    "zscore_outliers": _zscore_outliers,
-    "simhash_topk": _simhash_topk,
-    "as_of_join": _as_of_join,
-    "time_rollup": _time_rollup,
-    "sessionize": _sessionize,
-    "percentile_cont": _percentile_cont,
-    # round-7 session-5 operators
-    "heavy_hitters": _heavy_hitters,
-    "weighted_median": _weighted_median,
-    "interval_union": _interval_union,
-    "conversion_latency": _conversion_latency,
-    "sorted_neighborhood": _sorted_neighborhood,
-    "token_diversity": _token_diversity,
-    "gini": _gini,
-    "hhi": _hhi,
-    "bounce_rate": _bounce_rate,
-    "dup_cluster_histogram": _dup_cluster_histogram,
-    "approx_quantiles": _approx_quantiles,
-    "funnel_latency": _funnel_latency,
-    "chi_square": _chi_square,
-    # round-9 operators
-    "node2vec_walks": _node2vec_walks,
-    "cross_source_shingles": _cross_source_shingles,
-    "anomaly_mad": _anomaly_mad,
-    "seasonal_dow": _seasonal_dow,
-    "burst_detection": _burst_detection,
-    "winsorized_stats": _winsorized_stats,
-    "source_mix_budget": _source_mix_budget,
-    "class_balance": _class_balance,
-    "split_contamination": _split_contamination,
-    "vocab_growth": _vocab_growth,
-    "seasonal_burst": _seasonal_burst,
-    "dedup_impact": _dedup_impact,
-    # round-11 operators
-    "pii_scan": _pii_scan,
-    "redact_pii": _redact_pii,
-    "apply_substring_dedup": _apply_substring_dedup,
-    "token_length_profile": _token_length_profile,
-    "benchmark_attribution": _benchmark_attribution,
-    "doc_stitching": _doc_stitching,
-    "embedding_drift": _embedding_drift,
-    # round-12 operators
-    "semantic_dedup": _semantic_dedup,
-    "hash_semantic_dedup": _hash_semantic_dedup,
-    "tokenizer_fertility": _tokenizer_fertility,
-    "provenance_dedup": _provenance_dedup,
-    "apply_semantic_dedup": _apply_semantic_dedup,
-    "bm25_topk": _bm25_topk,
-    "profile_drift": _profile_drift,
-    "entity_resolution": _entity_resolution,
-    "dedup_keepers": _dedup_keepers,
-    "shingle_compressibility": _shingle_compressibility,
-    "temporal_reach": _temporal_reach,
-    # round-12 continuation operators
-    "cusum_changepoint": _cusum_changepoint,
-    "lm_transition_score": _lm_transition_score,
-    "k_anonymity": _k_anonymity,
-    "l_diversity": _l_diversity,
-    "bitemporal_asof": _bitemporal_asof,
-    "source_overlap": _source_overlap,
-    "clamped_balance": _clamped_balance,
-    "capped_balance": _capped_balance,
-    "m4_downsample": _m4_downsample,
-    "embedding_dim_profile": _embedding_dim_profile,
-    "gopher_rules": _gopher_rules,
-    "ann_recall": _ann_recall,
-    "selection_curve": _selection_curve,
-    "apply_entity_resolution": _apply_entity_resolution,
-    "incremental_agg_refresh": _incremental_agg_refresh,
-    "join_cardinality": _join_cardinality,
-    "arrival_regularity": _arrival_regularity,
-    "apply_cdc_upsert": _apply_cdc_upsert,
-    "asset_profile": _asset_profile,
-    "asset_payload_dedup": _asset_payload_dedup,
-    "image_near_dup": _image_near_dup,
-    "vector_hygiene": _vector_hygiene,
+PROCEDURES: dict[str, _Proc] = {
+    # graph
+    "pagerank": _op("Graph.pagerank"),
+    "hits": _op("Graph.hits"),
+    "connected_components": _op("Graph.connected_components"),
+    "strongly_connected_components": _op(
+        "Graph.strongly_connected_components"),
+    "k_core": _op("Graph.k_core"),
+    "coreness": _op(_coreness),
+    "label_propagation": _op("Graph.label_propagation"),
+    "triangle_count": _op("Graph.triangle_count"),
+    "degrees": _op("Graph.degrees"),
+    "shortest_paths": _op("Graph.shortest_paths"),
+    "find_motifs": _op("Graph.find"),
+    "reach": _op("Graph.reach", max_hops=2),
+    "betweenness": _op("Graph.betweenness_centrality"),
+    "betweenness_sampled": _op("Graph.betweenness_sampled"),
+    "anf": _op(_anf),
+    "random_walks": _op("Graph.random_walks"),
+    "node2vec_walks": _op("Graph.node2vec_walks"),
+    "ktruss": _op("Graph.ktruss"),
+    "harmonic_centrality": _op("operators.graph.harmonic_centrality"),
+    "temporal_reach": _op("operators.graph.temporal_reach"),
+    "louvain": _op("operators.community.louvain"),
+    "modularity": _op("operators.community.modularity"),
+    # near-duplicates, vectors and dedup
+    "near_dup_pairs": _op("operators.similarity.near_dup_pairs", **_DOCS),
+    "simhash_near_dup": _op("operators.similarity.simhash_near_dup_pairs",
+                            **_DOCS),
+    "dedup_minhash": _op("operators.similarity.dedup_minhash", **_DOCS),
+    "apply_dedup": _op("operators.similarity.apply_dedup", **_DOCS),
+    "embedding_near_dup": _op(
+        "operators.similarity.embedding_near_dup_pairs", **_CORPUS),
+    "ann_topk": _op("operators.similarity.ann_cosine_topk", **_CORPUS),
+    "knn_ivf_sq8": _op(_knn_ivf_sq8, **_CORPUS),
+    "knn_ivf_pq": _op(_knn_ivf_pq, **_CORPUS),
+    "ann_recall": _op(_ann_recall, **_CORPUS),
+    "ivf_drift": _op(_ivf_drift),
+    "ivf_refresh": _op(_ivf_refresh),
+    "semantic_dedup": _op("operators.similarity.semantic_dedup", _AS_VECS,
+                          **_VECS),
+    "hash_semantic_dedup": _op("operators.similarity.hash_semantic_dedup",
+                               _AS_VECS, **_VECS),
+    "apply_semantic_dedup": _op("operators.similarity.apply_semantic_dedup",
+                                _AS_VECS, **_VECS),
+    "vector_hygiene": _op("operators.similarity.vector_hygiene_report",
+                          _AS_VECS, dim=64, **_VECS),
+    "entity_resolution": _op("operators.similarity.entity_resolution",
+                             _TABLE),
+    "apply_entity_resolution": _op(
+        "operators.similarity.apply_entity_resolution", _TABLE),
+    "simhash_topk": _op("operators.pipeline.simhash_topk", **_CORPUS),
+    "embedding_drift": _op("operators.pipeline.embedding_drift", **_VECS),
+    "embedding_dim_profile": _op("operators.pipeline.embedding_dim_profile",
+                                 {"emb": "embeddings"}, **_VECS),
+    # text and training-corpus pipeline
+    "text_profile": _op("operators.text.profile_documents", **_DOCS),
+    "quality_report": _op("operators.text.corpus_quality_report", **_DOCS),
+    "contamination_report": _op("operators.text.contamination_report"),
+    "benchmark_attribution": _op("operators.text.benchmark_attribution",
+                                 {"corpus": "docs"}, benchmarks="benchmarks",
+                                 **_DOCS),
+    "bpe_train": _op("operators.bpe.bpe_train", **_DOCS),
+    "bpe_tokenize": _op(_bpe_tokenize, **_DOCS),
+    "bpe_fertility": _op(_bpe_fertility, **_DOCS),
+    "bm25_topk": _op(_bm25_topk, **_DOCS),
+    "cross_source_shingles": _op("operators.llm.cross_source_shingles",
+                                 **_DOCS),
+    "pii_scan": _op("operators.pii.pii_scan", **_DOCS),
+    "redact_pii": _op("operators.pii.redact_pii", **_DOCS),
+    "langid_kappa": _op("operators.pipeline.langid_kappa", **_DOCS),
+    "chunk_documents": _op("operators.pipeline.chunk_documents", **_DOCS),
+    "hash_split": _op("operators.pipeline.hash_split", _TABLE),
+    "stratified_sample": _op(_stratified_sample),
+    "content_hash_dedup": _op("operators.pipeline.content_hash_annotate",
+                              **_DOCS),
+    "zscore_outliers": _op("operators.pipeline.zscore_outliers",
+                           {"df": "table", "part_cols": "partition_cols"}),
+    "sequence_pack": _op("operators.pipeline.sequence_pack", **_DOCS),
+    "sorted_neighborhood": _op("operators.pipeline.sorted_neighborhood_pairs",
+                               _TABLE),
+    "token_diversity": _op("operators.pipeline.token_diversity", **_DOCS),
+    "dup_cluster_histogram": _op("operators.pipeline.dup_cluster_histogram",
+                                 **_DOCS),
+    "source_mix_budget": _op("operators.pipeline.source_mix_budget",
+                             **_DOCS),
+    "class_balance": _op("operators.pipeline.class_balance_plan", **_DOCS),
+    "split_contamination": _op("operators.pipeline.split_contamination",
+                               **_DOCS),
+    "vocab_growth": _op("operators.pipeline.vocab_growth", **_DOCS),
+    "dedup_impact": _op("operators.pipeline.dedup_impact_by_source",
+                        **_DOCS),
+    "apply_substring_dedup": _op("operators.pipeline.apply_substring_dedup",
+                                 **_DOCS),
+    "token_length_profile": _op("operators.pipeline.token_length_profile",
+                                **_DOCS),
+    "doc_stitching": _op("operators.pipeline.doc_stitching_report", **_DOCS),
+    "tokenizer_fertility": _op("operators.pipeline.tokenizer_fertility",
+                               **_DOCS),
+    "provenance_dedup": _op("operators.pipeline.provenance_dedup_report",
+                            **_DOCS),
+    "dedup_keepers": _op("operators.pipeline.dedup_keepers", **_DOCS),
+    "shingle_compressibility": _op(
+        "operators.pipeline.shingle_compressibility", **_DOCS),
+    "lm_transition_score": _op("operators.pipeline.lm_transition_score",
+                               **_DOCS),
+    "source_overlap": _op("operators.pipeline.source_overlap_matrix",
+                          **_DOCS),
+    "gopher_rules": _op("operators.pipeline.gopher_rules_report", **_DOCS),
+    "selection_curve": _op("operators.pipeline.selection_curve",
+                           thresholds="0.02,0.03,0.035,0.04", **_DOCS),
+    # events and time series
+    "funnel": _op("operators.events.funnel", stages="", **_EVENTS),
+    "funnel_latency": _op("operators.events.funnel_latency",
+                          stages="view,click,purchase", **_EVENTS),
+    "sessionize": _op("operators.events.sessionize", **_EVENTS),
+    "interval_union": _op("operators.events.interval_union", **_EVENTS),
+    "conversion_latency": _op("operators.events.conversion_latency",
+                              **_EVENTS),
+    "bounce_rate": _op("operators.events.bounce_rate", **_EVENTS),
+    "anomaly_mad": _op("operators.events.anomaly_mad_ts", **_EVENTS),
+    "seasonal_dow": _op("operators.events.seasonal_dow", **_EVENTS),
+    "burst_detection": _op("operators.events.burst_detection", **_EVENTS),
+    "seasonal_burst": _op("operators.events.seasonal_burst_detection",
+                          **_EVENTS),
+    "cusum_changepoint": _op("operators.events.cusum_changepoint",
+                             **_EVENTS),
+    "clamped_balance": _op("operators.events.clamped_balance", **_EVENTS),
+    "capped_balance": _op("operators.events.capped_balance", **_EVENTS),
+    "m4_downsample": _op("operators.events.m4_downsample", **_EVENTS),
+    "arrival_regularity": _op("operators.events.arrival_regularity",
+                              **_EVENTS),
+    "interval_join": _op("streaming.joins.interval_join"),
+    "as_of_join": _op("operators.asof.as_of_join"),
+    "time_rollup": _op(_time_rollup),
+    # statistics and profiles
+    "mann_whitney": _op("operators.extras.mann_whitney_u", **_EVENTS),
+    "ks_statistic": _op("operators.extras.ks_statistic", **_EVENTS),
+    "spearman": _op("operators.extras.spearman_corr", _TABLE),
+    "weighted_median": _op("operators.extras.weighted_median", _TABLE),
+    "gini": _op("operators.extras.gini_concentration", {"orders": "table"},
+                table="orders"),
+    "hhi": _op(_hhi),
+    "approx_quantiles": _op("operators.extras.approx_quantiles_profile",
+                            _TABLE),
+    "chi_square": _op("operators.extras.chi_square_contingency", _TABLE),
+    "winsorized_stats": _op("operators.extras.winsorized_stats", _TABLE),
+    "percentile_cont": _op("operators.percentile.exact_percentile_cont",
+                           {"vals": "table"}, ps="0.5"),
+    "heavy_hitters": _op("operators.sketch.heavy_hitters", _TABLE),
+    "benford": _op("operators.profile.benford_profile", _TABLE),
+    "k_anonymity": _op("operators.profile.k_anonymity_report", _TABLE),
+    "l_diversity": _op("operators.profile.l_diversity_report", _TABLE),
+    "profile_drift": _op(_profile_drift, table="events"),
+    "join_cardinality": _op("operators.skew.join_cardinality_profile"),
+    # incremental maintenance
+    "bitemporal_asof": _op("operators.incremental.bitemporal_asof"),
+    "apply_cdc_upsert": _op("operators.incremental.apply_cdc_upsert"),
+    "incremental_agg_refresh": _op(_incremental_agg_refresh),
+    # multimodal assets
+    "audio_features": _op("operators.multimodal.extract_audio_features"),
+    "asset_profile": _op("operators.multimodal.asset_profile"),
+    "asset_payload_dedup": _op("operators.multimodal.asset_payload_dedup"),
+    "image_near_dup": _op("operators.multimodal.image_near_dup_pairs"),
 }
 
 
+def _resolve(target) -> Callable[..., DataFrame]:
+    if callable(target):
+        return target
+    path, _, name = target.rpartition(".")
+    if path == "Graph":
+        from puregraphdb_spark.operators.graph import Graph
+
+        return getattr(Graph, name)
+    return getattr(importlib.import_module(f"puregraphdb_spark.{path}"), name)
+
+
+def _signatures(proc: _Proc):
+    """The operator, its signature, and the CALL-level signature: the
+    operator's parameters under their CALL names and defaults, all
+    keyword-only; a ``Graph`` parameter becomes ``edges`` + ``vertices``,
+    a ``SparkSession`` parameter is the caller's session."""
+    from puregraphdb_spark.operators.graph import Graph
+
+    fn = _resolve(proc.target)
+    osig = inspect.signature(fn, eval_str=True, locals={"Graph": Graph})
+    kw = inspect.Parameter.KEYWORD_ONLY
+    params = []
+    for p in osig.parameters.values():
+        if p.annotation is SparkSession:
+            continue
+        if p.annotation is Graph or p.name == "self":
+            params += [inspect.Parameter("edges", kw, annotation=str),
+                       inspect.Parameter("vertices", kw, default=None,
+                                         annotation=str | None)]
+        elif p.kind is p.VAR_KEYWORD:
+            params.append(p)
+        elif p.kind is p.VAR_POSITIONAL:
+            params.append(inspect.Parameter(
+                p.name, kw, annotation=list[p.annotation]))
+        else:
+            name = proc.rename.get(p.name, p.name)
+            params.append(inspect.Parameter(
+                name, kw, default=proc.defaults.get(name, p.default),
+                annotation=p.annotation))
+    return fn, osig, inspect.Signature(params)
+
+
+def _coerce(spark: SparkSession, ann, value):
+    """A parsed CALL literal as the operator's annotation wants it."""
+    if value is None:
+        return None
+    args = typing.get_args(ann)
+    if typing.get_origin(ann) in (typing.Union, types.UnionType):
+        if value == "" and type(None) in args:
+            return None
+        return _coerce(spark, next(a for a in args if a is not type(None)),
+                       value)
+    if ann is DataFrame:
+        return spark.table(value)
+    if ann in (int, float, bool):
+        return ann(value)
+    if typing.get_origin(ann) in (list, tuple):
+        return typing.get_origin(ann)(
+            _coerce(spark, args[0], x.strip())
+            for x in str(value).split(",") if x.strip())
+    return value
+
+
 def dispatch_call(spark: SparkSession, query: str) -> DataFrame:
+    from puregraphdb_spark.operators.graph import Graph
+
     name, args = parse_call(query)
     if name not in PROCEDURES:
         known = ", ".join(sorted(PROCEDURES))
         raise ValueError(f"unknown procedure {name!r}; available: {known}")
+    proc = PROCEDURES[name]
+    fn, osig, csig = _signatures(proc)
     try:
-        return PROCEDURES[name](spark, **args)
+        given = {**proc.defaults, **csig.bind(**args).arguments}
     except TypeError as e:
         raise ValueError(f"CALL {name}: bad arguments: {e}") from e
+    bound = osig.bind_partial()
+    for p in osig.parameters.values():
+        cname = proc.rename.get(p.name, p.name)
+        if p.annotation is SparkSession:
+            bound.arguments[p.name] = spark
+        elif p.annotation is Graph or p.name == "self":
+            bound.arguments[p.name] = _graph(spark, given["edges"],
+                                             given.get("vertices"))
+        elif p.kind is p.VAR_KEYWORD:
+            bound.arguments[p.name] = given.get(p.name, {})
+        elif cname in given:
+            bound.arguments[p.name] = _coerce(
+                spark, csig.parameters[cname].annotation, given[cname])
+    return fn(*bound.args, **bound.kwargs)

@@ -52,8 +52,11 @@ _PARTITION_KEYS: dict[str, str | None] = {
 #: Memoized per (session, dir, name) so every query in a session builds
 #: on the identical DataFrame object → identical canonical plans →
 #: cache/exchange reuse is guaranteed, and the scan-split probe runs
-#: once.
-_LOADED: dict[tuple[int, str, str], DataFrame] = {}
+#: once. Keyed on the session object (SparkSession hashes by identity):
+#: a memoized DataFrame keeps its session alive, so a key never matches
+#: a different session, and a session rebuilt after ``stop()`` is a
+#: new object that never hits the old entries.
+_LOADED: dict[tuple[SparkSession, str, str, int], DataFrame] = {}
 
 
 def _scan_partitions(spark: SparkSession) -> int:
@@ -81,7 +84,7 @@ def load_table(spark: SparkSession, data_dir: str, name: str) -> DataFrame:
     # first loader's latency-mode width leak into every later caller
     # of the same session (order-dependent plans; found r11 via an
     # order-dependent plan-pin failure).
-    key = (id(spark), data_dir, name, _scan_partitions(spark))
+    key = (spark, data_dir, name, _scan_partitions(spark))
     if key in _LOADED:
         return _LOADED[key]
 
