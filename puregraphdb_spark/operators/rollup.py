@@ -162,7 +162,7 @@ def persistent_rollup_sink(finest_stream: DataFrame, table_path: str,
     )
     if available_now:
         w = w.trigger(availableNow=True)
-    return _start(w, out)
+    return _start(w, out, checkpoint_path)
 
 
 _MANIFEST = "_manifest.json"

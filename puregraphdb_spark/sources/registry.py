@@ -55,7 +55,8 @@ _PARTITION_KEYS: dict[str, str | None] = {
 #: once. Keyed on the session object (SparkSession hashes by identity):
 #: a memoized DataFrame keeps its session alive, so a key never matches
 #: a different session, and a session rebuilt after ``stop()`` is a
-#: new object that never hits the old entries.
+#: new object that never hits the old entries. ``load_table`` drops the
+#: entries of stopped sessions, so they do not outlive their session.
 _LOADED: dict[tuple[SparkSession, str, str, int], DataFrame] = {}
 
 
@@ -84,6 +85,8 @@ def load_table(spark: SparkSession, data_dir: str, name: str) -> DataFrame:
     # first loader's latency-mode width leak into every later caller
     # of the same session (order-dependent plans; found r11 via an
     # order-dependent plan-pin failure).
+    for stopped in [k for k in _LOADED if k[0].sparkContext._jsc is None]:
+        del _LOADED[stopped]
     key = (spark, data_dir, name, _scan_partitions(spark))
     if key in _LOADED:
         return _LOADED[key]

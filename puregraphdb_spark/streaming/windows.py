@@ -20,20 +20,34 @@ by the window/group columns exactly like the batch plans, and its
 width is the number of state-store partitions. Each of them commits
 its own state files (a delta plus, on Spark 4.1, a checksum file) per
 stateful operator per micro-batch, so a trigger pays a fixed cost of
-files × partitions × operators × batches whatever the row count. On a
-local file system without Hadoop's native library every file create
-forks ``chmod`` (about 16 ms per small file, measured on 4 vCPU), and
-that fixed cost, not state I/O, dominates a small trigger. Every
-engine sink therefore starts through ``_start``, which fixes the count
-once, by ``state_partitions``:
+files × partitions × operators × batches whatever the row count.
 
-- interactive posture (``engine.is_interactive``: the last
-  ``Engine.tune_for_data_size`` found the input too small for AQE to
-  pay and turned it off) → 1. A trigger's shuffle is then far below
-  AQE's own minimum partition size, so AQE would have coalesced it to
-  one partition — but AQE does not run on stateful operators, so the
-  engine takes that decision at start.
-- otherwise → the session's own ``spark.sql.shuffle.partitions``.
+Cost per file. Every checkpoint file (offset, commit, source-log,
+state delta, state checksum, the sink's ``_spark_metadata``) is
+written to a temp file and renamed. On a local file system without
+Hadoop's native library, creating a file forks ``chmod`` twice, and
+Spark's default manager for ``file:`` (``FileContext``-based) also
+forks ``readlink`` 8 times per file while it resolves paths. Counted
+with a logging shim on ``PATH`` over the benchmark's ingest triggers:
+142 forks per trigger on average, 110 ``readlink`` + 32 ``chmod``.
+``_start`` therefore fixes two things once, when the stream starts:
+
+- the checkpoint manager: on the local ``file`` scheme,
+  ``FileSystemBasedCheckpointFileManager`` — the same files, the same
+  write-temp-then-rename and the same check-then-rename "fail if it
+  exists" guard, with no ``readlink``: 32 forks per trigger. Other
+  schemes (hdfs, s3a, …) and a manager class set on the session keep
+  their choice. The checkpoint format is the same, so a checkpoint
+  written under either manager restarts under the other.
+- the state-partition count, by ``state_partitions``:
+
+  - interactive posture (``engine.is_interactive``: the last
+    ``Engine.tune_for_data_size`` found the input too small for AQE
+    to pay and turned it off) → 1. A trigger's shuffle is then far
+    below AQE's own minimum partition size, so AQE would have
+    coalesced it to one partition — but AQE does not run on stateful
+    operators, so the engine takes that decision at start.
+  - otherwise → the session's own ``spark.sql.shuffle.partitions``.
 
 The checkpoint's offset log records the count and a restart restores
 it from there, so it is frozen for the life of the checkpoint: a
@@ -55,8 +69,16 @@ from pyspark.sql.types import StructType
 from puregraphdb_spark.engine import is_interactive
 
 _SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+#: The checkpoint manager of a stream on the local ``file`` scheme.
+_LOCAL_MANAGER = ("org.apache.spark.sql.execution.streaming.checkpointing."
+                  "FileSystemBasedCheckpointFileManager")
 #: Serializes the set/restore of the session conf around ``start()``.
 _START_LOCK = threading.Lock()
+#: Longest wait for a started query to build its sources. Past it the
+#: manager is restored anyway: the source log may then take Spark's
+#: default manager, which writes the same files.
+_INIT_WAIT_MS = 10_000
 
 
 def state_partitions(spark: SparkSession) -> int:
@@ -68,24 +90,61 @@ def state_partitions(spark: SparkSession) -> int:
     return int(spark.conf.get(_SHUFFLE_PARTITIONS))
 
 
-def _start(writer: DataStreamWriter, df: DataFrame) -> StreamingQuery:
-    """Start ``writer`` (configured from ``df.writeStream``) with
-    ``state_partitions`` state partitions. ``start()`` clones the
-    session synchronously, so the width is set for that call only and
-    the caller's value is restored, also when ``start()`` fails.
+def _checkpoint_scheme(spark: SparkSession,
+                       checkpoint: str | None) -> str | None:
+    """The URI scheme of a stream's checkpoint. Without a location
+    (``run_available_now``) it is the session's
+    ``spark.sql.streaming.checkpointLocation``, else the temp dir Spark
+    creates, a path with no scheme. A path with no scheme resolves
+    against ``fs.defaultFS``, as Spark resolves it. Only the URI is read:
+    no FileSystem is instantiated, so no remote store is contacted."""
+    loc = checkpoint or spark.conf.get(
+        "spark.sql.streaming.checkpointLocation", None)
+    hadoop = spark._jvm.org.apache.hadoop
+    scheme = hadoop.fs.Path(loc).toUri().getScheme() if loc else None
+    if scheme is None:
+        conf = spark._jsparkSession.sessionState().newHadoopConf()
+        scheme = hadoop.fs.FileSystem.getDefaultUri(conf).getScheme()
+    return scheme
 
-    The lock only orders ``_start`` callers. The width is set on the
+
+def _start(writer: DataStreamWriter, df: DataFrame,
+           checkpoint: str | None) -> StreamingQuery:
+    """Start ``writer`` (configured from ``df.writeStream`` with its
+    checkpoint location ``checkpoint``, or none) with
+    ``state_partitions`` state partitions and, on the local ``file``
+    scheme, Spark's FileSystem checkpoint manager (module docstring).
+    ``start()`` clones the session synchronously, so both are set for
+    that call only and the caller's values are restored, also when
+    ``start()`` fails. A manager class set on the session is kept.
+
+    The file source builds its log on the query's own thread, from the
+    reader's session rather than the clone, after ``start()`` returns.
+    So a chosen manager stays set until the query has built its sources;
+    a query that has died by then raises its error here.
+
+    The lock only orders ``_start`` callers. The confs are set on the
     shared session, so a batch query planned on another thread while a
-    stream starts would run with it: do not run batch queries on the
+    stream starts would run with them: do not run batch queries on the
     session concurrently with a stream start."""
     spark = df.sparkSession
     with _START_LOCK:
         saved = spark.conf.get(_SHUFFLE_PARTITIONS)
-        spark.conf.set(_SHUFFLE_PARTITIONS, str(state_partitions(spark)))
+        manager = spark.conf.get(_MANAGER, None)
         try:
-            return writer.start()
+            spark.conf.set(_SHUFFLE_PARTITIONS, str(state_partitions(spark)))
+            local = (manager is None
+                     and _checkpoint_scheme(spark, checkpoint) == "file")
+            if local:
+                spark.conf.set(_MANAGER, _LOCAL_MANAGER)
+            query = writer.start()
+            if local:
+                query._jsq.streamingQuery().awaitInitialization(_INIT_WAIT_MS)
+            return query
         finally:
             spark.conf.set(_SHUFFLE_PARTITIONS, saved)
+            if manager is None:
+                spark.conf.unset(_MANAGER)
 
 
 def _with_watermark(df: DataFrame, col: str, delay: str) -> DataFrame:
@@ -170,7 +229,11 @@ def write_stream_parquet(stream_df: DataFrame, path: str,
     The state-partition count is ``state_partitions`` of the session at
     the first start, frozen by the checkpoint from then on: a stream
     started in the interactive posture keeps 1 state partition however
-    its input grows, until a new checkpoint (and empty state).
+    its input grows, until a new checkpoint (and empty state). A
+    ``checkpoint`` on the local ``file`` scheme (or with no scheme, on a
+    local ``fs.defaultFS``) commits through Spark's FileSystem
+    checkpoint manager, which forks no ``readlink`` per file; either
+    manager restarts from the other's checkpoint.
     Returns the StreamingQuery handle.
     """
     w = (
@@ -181,7 +244,7 @@ def write_stream_parquet(stream_df: DataFrame, path: str,
     )
     if trigger_available_now:
         w = w.trigger(availableNow=True)
-    return _start(w, stream_df)
+    return _start(w, stream_df, checkpoint)
 
 
 def run_available_now(stream_df: DataFrame, table_name: str) -> None:
@@ -194,4 +257,4 @@ def run_available_now(stream_df: DataFrame, table_name: str) -> None:
         .outputMode("complete")
         .trigger(availableNow=True)
     )
-    _start(w, stream_df).awaitTermination()
+    _start(w, stream_df, None).awaitTermination()

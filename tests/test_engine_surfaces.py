@@ -30,6 +30,28 @@ def test_csv_json_roundtrip(spark, tmp_path):
         assert got == want
 
 
+def test_load_table_drops_the_memo_of_stopped_sessions(spark):
+    """A stopped session's memoized tables (and, through them, the
+    session) are dropped at the next ``load_table``; a live session's
+    stay. A stand-in plays the stopped session, so the shared test
+    session keeps running."""
+    from types import SimpleNamespace
+
+    from puregraphdb_spark.sources import registry
+
+    class Stopped:  # what SparkSession.stop() leaves: no JVM context
+        sparkContext = SimpleNamespace(_jsc=None)
+
+    live = load_table(spark, SF_DIR, "nation")
+    key = (Stopped(), SF_DIR, "nation", 1)
+    registry._LOADED[key] = live
+    try:
+        assert load_table(spark, SF_DIR, "nation") is live
+        assert key not in registry._LOADED
+    finally:
+        registry._LOADED.pop(key, None)
+
+
 def test_partitioned_write_prunes(spark, tmp_path):
     orders = load_table(spark, SF_DIR, "orders").withColumn(
         "o_year", F.year("o_orderdate")
