@@ -462,12 +462,11 @@ def text_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def graph_coreness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full core decomposition of the order graph: every vertex's core
-    NUMBER (rows-only). Runs the H-index-propagation algorithm — the
-    scale path (58 s vs level peeling's 752 s at sf1, measured;
-    results property-pinned EQUAL to level peeling and k_core(k) in
+    NUMBER (rows-only), by H-index propagation (results pinned equal
+    to networkx's core_number and to k_core(k) in
     tests/test_graph_extended.py)."""
     g = _order_graph(spark, sf_dir)
-    return g.coreness_hindex().orderBy("id")
+    return g.coreness().orderBy("id")
 
 
 def heavy_hitter_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -206,8 +206,10 @@ class Engine:
 
     def sql_for(self, query_name: str) -> DataFrame:
         """Run a named §2 query through EP2 from its Spark-dialect SQL
-        text (sql_library) — the SQL-door twin of the DataFrame-door
-        operators, parity-tested bit-for-bit against them."""
+        text (``sql_library.SPARK_SQL``) — the SQL-door twin of the
+        DataFrame-door operators, parity-tested bit-for-bit against
+        them. The text is ``to_spark`` of the DuckDB oracle text where
+        the rule table derives it exactly, and hand-written otherwise."""
         from puregraphdb_spark.sql_library import SPARK_SQL
 
         if query_name not in SPARK_SQL:

@@ -1086,119 +1086,35 @@ class Graph:
             step, changed=F.col("degree") < k, max_iter=max_iter,
         )
 
-    def coreness(self, max_k: int = 100, max_iter: int = 50) -> DataFrame:
+    def coreness(self, max_iter: int = 200) -> DataFrame:
         """Full core decomposition: every vertex's core NUMBER (the
         largest k for which it survives k-core peeling) → (id,
         coreness). The whole degeneracy profile in one call, where
         ``k_core(k)`` answers only one membership question — the
         analyst's "how cohesive is each vertex's neighborhood"
         ranking, and the standard preprocessing for densest-subgraph
-        and community seeding.
+        and community seeding. Isolated vertices report coreness 0.
 
-        Level-peeling formulation: for k = 1, 2, … peel the current
-        graph to its k-core (the same degree-aggregate + semi-join
-        rounds as ``k_core``, over an edge set that only SHRINKS); the
-        vertices lost between the (k−1)-core and the k-core have
-        coreness k−1. Terminates when the k-core is empty — at most
-        ``degeneracy`` levels, which for real sparse graphs is small
-        (≪ max degree; a graph with m edges has degeneracy ≤ √(2m)).
-
-        Scale: every round is one degree aggregation + two semi joins
-        on the shrinking symmetrized edge set (lineage cut per round —
-        the documented pregel checkpoint discipline); the only driver
-        reads are 1-row emptiness signatures (the pagerank convergence
-        allowance). Isolated vertices report coreness 0.
-
-        Consistency with ``k_core`` is property-pinned:
-        {v : coreness(v) ≥ k} == k_core(k) vertex set for every k
-        (tests/test_graph_extended.py).
-        """
-        und = (
-            self._undirected()
-            .filter(F.col("src") != F.col("dst"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        # vertices never seen in an edge → coreness 0 (emitted last)
-        levels: list[DataFrame] = []
-        prev_core = und.select(F.col("src").alias("id")).distinct()
-        k = 1
-        while k <= max_k:
-            # peel the current graph to its k-core
-            for _ in range(max_iter):
-                deg = und.groupBy(F.col("src").alias("id")).agg(
-                    F.count("*").cast("long").alias("degree"))
-                keep = deg.filter(F.col("degree") >= k).select("id")
-                if deg.filter(F.col("degree") < k).limit(1).count() == 0:
-                    break
-                und = flat_checkpoint(
-                    und.join(keep.select(F.col("id").alias("src")),
-                             "src", "left_semi")
-                    .join(keep.select(F.col("id").alias("dst")),
-                          "dst", "left_semi")
-                )
-            else:
-                # ADVICE r7: unlike k_core (one result), an under-
-                # peeled level here is carried into EVERY later level,
-                # so exhausting max_iter before the fixpoint silently
-                # corrupts the rest of the decomposition. Fail loudly.
-                raise RuntimeError(
-                    f"coreness: level k={k} did not stabilize within "
-                    f"max_iter={max_iter} peeling rounds; all coreness "
-                    f"values >= {k - 1} would be wrong. Raise max_iter."
-                )
-            survivors = flat_checkpoint(
-                und.select(F.col("src").alias("id")).distinct())
-            lost = prev_core.join(survivors, "id", "left_anti").select(
-                "id", F.lit(k - 1).cast("long").alias("coreness"))
-            levels.append(flat_checkpoint(lost))
-            if survivors.limit(1).count() == 0:
-                prev_core = survivors
-                break
-            prev_core = survivors
-            k += 1
-        out = levels[0] if levels else self.vertices.select(
-            "id", F.lit(0).cast("long").alias("coreness")).limit(0)
-        for lv in levels[1:]:
-            out = out.unionByName(lv)
-        # max_k truncation: a still-non-empty core reports its floor
-        # (coreness ≥ the deepest peeled level)
-        leftover = prev_core.join(out.select("id"), "id", "left_anti") \
-            .select("id", F.lit(k - 1).cast("long").alias("coreness"))
-        # vertices with no (non-loop) edges → coreness 0
-        zero = (
-            self.vertices.select("id")
-            .join(out.select("id"), "id", "left_anti")
-            .join(prev_core.select("id"), "id", "left_anti")
-            .select("id", F.lit(0).cast("long").alias("coreness"))
-        )
-        return out.unionByName(leftover).unionByName(zero)
-
-    def coreness_hindex(self, max_iter: int = 200) -> DataFrame:
-        """Core decomposition by H-index propagation (the distributed
-        k-core algorithm of Montresor–De Pellegrini–Miorandi, "
-        Distributed k-core decomposition", IEEE TPDS 2013): initialize
-        every vertex's estimate to its degree, then repeat
+        H-index propagation (the distributed k-core algorithm of
+        Montresor–De Pellegrini–Miorandi, "Distributed k-core
+        decomposition", IEEE TPDS 2013): initialize every vertex's
+        estimate to its degree, then repeat
         ``est(v) ← min(est(v), H({est(u) : u ∈ N(v)}))`` where H is
         the H-index (the largest h with ≥ h neighbors estimating
         ≥ h), until a fixpoint. The fixpoint IS the coreness.
-
-        Why this is the SCALE path where ``coreness`` (level peeling)
-        is not: peeling serializes one level per core number — the
-        sf1 order graph has degeneracy 71, so 71 sequential levels ×
-        cascade rounds (measured 752 s); H-index propagation updates
-        EVERY vertex each round and converges in the graph's
-        coreness-propagation depth (measured 58 s on the same graph —
-        13×, and 70 s → 17 s at sf0.01). Equality with level peeling
-        is property-pinned on closed forms and on the fixture graph.
+        Estimates only DECREASE and are bounded below by the true
+        coreness, so termination is exact, not heuristic. Level
+        peeling would serialize one level per core number (the sf1
+        order graph has degeneracy 71: measured 752 s against 58 s
+        here); every vertex updates in every superstep instead.
 
         Runs on ``pregel`` over the symmetrized, self-loop-free edges:
-        the initial estimate is each vertex's degree; a superstep sends
-        every estimate along every edge (edges and state co-partitioned)
-        and takes the H-index of each vertex's received estimates. Stops
-        after the first superstep that lowers no estimate. Estimates
-        only DECREASE and are bounded below by the true coreness, so
-        termination is exact, not heuristic.
+        a superstep sends every estimate along every edge (edges and
+        state co-partitioned) and takes the H-index of each vertex's
+        received estimates. It stops after the first superstep that
+        lowers no estimate. If the superstep at ``max_iter`` still
+        lowered one, the estimates are not the coreness yet and the
+        call raises ``RuntimeError``.
         """
         def step(e: DataFrame, state: DataFrame) -> DataFrame:
             nb = e.join(state, e.src == state.id).select(
@@ -1214,7 +1130,7 @@ class Graph:
             )
             return state.join(hidx, "id").select(
                 "id", F.least(F.col("est"), F.col("__h")).alias("est"),
-                F.col("est").alias("__old"))
+                (F.col("__h") < F.col("est")).alias("lowered"))
 
         und = (
             self._undirected()
@@ -1224,9 +1140,16 @@ class Graph:
         est = self.pregel(
             und,
             lambda e: e.groupBy(F.col("src").alias("id")).agg(
-                F.count("*").cast("long").alias("est")),
-            step, changed=F.col("est") < F.col("__old"), max_iter=max_iter,
+                F.count("*").cast("long").alias("est"),
+                F.lit(True).alias("lowered")),
+            step, changed=F.col("lowered"), max_iter=max_iter,
         )
+        if est.filter("lowered").limit(1).count():
+            _release(est)
+            raise RuntimeError(
+                f"coreness: estimates still fell in superstep "
+                f"max_iter={max_iter}; they are upper bounds, not the "
+                f"coreness. Raise max_iter.")
         zero = self.vertices.select("id").join(
             est.select("id"), "id", "left_anti"
         ).select("id", F.lit(0).cast("long").alias("coreness"))
@@ -1564,6 +1487,7 @@ class Graph:
         )
         levels = [init]
         visited = init.select("s", "v").localCheckpoint(eager=True)
+        spent = [visited]  # checkpoints the result does not read
         frontier = init
         for _ in range(max_depth):
             nxt = (
@@ -1576,12 +1500,14 @@ class Graph:
                 .localCheckpoint(eager=True)
             )
             if nxt.limit(1).count() == 0:
+                spent.append(nxt)
                 break
             levels.append(nxt)
             visited = (
                 visited.unionByName(nxt.select("s", "v"))
                 .localCheckpoint(eager=True)
             )
+            spent.append(visited)
             frontier = nxt
 
         acc: DataFrame | None = None
@@ -1616,7 +1542,11 @@ class Graph:
             if d > 0:  # depth-0 rows are the sources themselves
                 part = delta.select("v", F.col("delta").alias("dep"))
                 acc = part if acc is None else acc.unionByName(part)
+            else:
+                spent.append(delta)
         e.unpersist()
+        for ck in spent + levels:  # the result reads only the deltas
+            _release(ck)
         if acc is None:  # no source reached anything
             return self.vertices.select(
                 "id", F.lit(0.0).alias("betweenness")
@@ -1990,8 +1920,8 @@ class Graph:
         distributed rounds do the volume work; the gate only absorbs
         the cascade tail, whose size is bounded by construction.
         """
-        if k < 2:
-            raise ValueError("k-truss needs k >= 2")
+        if k < 2 or max_iter < 1:
+            raise ValueError("k-truss needs k >= 2 and max_iter >= 1")
         e = (
             self.edges.select(
                 F.least("src", "dst").alias("u"),
@@ -2000,12 +1930,11 @@ class Graph:
             .distinct()
             .localCheckpoint(eager=False)
         )
+        held = [e]  # checkpoints released on return, but the result
         n = e.count()
         need = k - 2
         for _ in range(max_iter):
-            if n == 0:
-                break
-            if n <= local_finish_edges:
+            if n == 0 or n <= local_finish_edges:
                 rows = _local_ktruss_finish(
                     [(r["u"], r["v"]) for r in e.collect()], need
                 )
@@ -2013,7 +1942,8 @@ class Graph:
                 schema = e.select(
                     "u", "v", F.lit(0).cast("long").alias("support")
                 ).schema
-                return spark.createDataFrame(rows, schema)
+                kept = spark.createDataFrame(rows, schema)
+                break
             ab = e.select(F.col("u").alias("a"), F.col("v").alias("b"))
             bc = e.select(F.col("u").alias("b"), F.col("v").alias("c"))
             ac = e.select(F.col("u").alias("a"), F.col("v").alias("c"))
@@ -2041,16 +1971,17 @@ class Graph:
                 .filter(F.col("support") >= need)
             )
             kept = flat_checkpoint(kept)
+            held.append(kept)
             n_new = kept.count()
             e = kept.select("u", "v")
             if n_new == n:
-                return kept
+                break
             n = n_new
-        # n == 0, or max_iter hit with the set still shrinking: return
-        # the current set with its within-set support
-        if n == 0:
-            return e.select(
-                "u", "v", F.lit(0).cast("long").alias("support")).limit(0)
+        # max_iter hit with the set still shrinking: ``kept`` is the
+        # current set with its within-set support
+        for ck in held:
+            if ck is not kept:
+                _release(ck)
         return kept
 
     def triangle_count(self) -> DataFrame:

@@ -106,14 +106,6 @@ def _graph(spark: SparkSession, edges: str, vertices: str | None = None):
 # -- composite procedures: several operators, or a reshaped result -----------
 
 
-def _coreness(g: Graph, method: str = "hindex") -> DataFrame:
-    if method == "hindex":
-        return g.coreness_hindex()
-    if method == "levels":
-        return g.coreness()
-    raise ValueError("coreness method must be 'hindex' or 'levels'")
-
-
 def _anf(spark: SparkSession, g: Graph, m: int = 64, max_iter: int = 16,
          rel_tol: float = 0.01, edge_batch: int | None = None) -> DataFrame:
     """CALL anf(edges => 'e') — HyperANF approximate neighborhood
@@ -357,7 +349,7 @@ PROCEDURES: dict[str, _Proc] = {
     "strongly_connected_components": _op(
         "Graph.strongly_connected_components"),
     "k_core": _op("Graph.k_core"),
-    "coreness": _op(_coreness),
+    "coreness": _op("Graph.coreness"),
     "label_propagation": _op("Graph.label_propagation"),
     "triangle_count": _op("Graph.triangle_count"),
     "degrees": _op("Graph.degrees"),

@@ -1,20 +1,33 @@
 """Spark-dialect SQL for every §2 query whose ORACLE text is
-DuckDB-only — so EP2 (``Engine.sql``) covers the full declared surface
-with plain SQL strings, not just the DataFrame/CALL doors.
+DuckDB-only, so that EP2 (``Engine.sql``) covers the full declared
+surface with plain SQL strings, not just the DataFrame and CALL doors.
 
-Each statement is parity-tested against its DataFrame implementation
-(tests/test_sql_library.py) with the driver's exact-match comparison:
-same aliases, same decimal-grid rounding (functions.numeric), same
-higher-order-function factoring for vector math (functions.vector) —
-so the SQL and DataFrame doors return bit-identical frames.
+One SQL text per query: for every name in ``DERIVED`` the Spark text is
+``to_spark`` of the oracle text (``__spark_entry__.oracle_sql``).
+``HAND_WRITTEN`` keeps the rest, which differ in real dialect features:
+``time_bucket``, ASOF JOIN, ``list_sum``, ``isodow``, 1-based ``l[i]``
+indexing, alias use in WHERE, two-argument ``grouping`` and the like.
+No name is in both.
 
-Queries whose oracle already runs verbatim through Spark SQL (plain
-ANSI) are deliberately absent — tests/test_sql_door_parity.py covers
-those with the shared text.
+The rule table's contract: ``to_spark`` renames functions and rewrites
+a few forms outside single-quoted literals and comments, and touches
+nothing else. Each rule says when it is exact; where that condition can
+be read from the text and fails, ``to_spark`` raises ``ValueError``
+rather than return text that could compute something else.
+
+Every entry is parity-tested bit-for-bit against its DataFrame
+implementation (tests/test_sql_library.py), and DuckDB still runs the
+oracle text verbatim, so each check keeps an independent side. Queries
+whose oracle is plain ANSI run verbatim through Spark SQL and are
+absent here (tests/test_sql_door_parity.py).
 """
 
 from __future__ import annotations
 
+import itertools
+import re
+
+from __spark_entry__ import oracle_sql
 from puregraphdb_spark.sql_fragments import (
     ASSET_MANIFEST_CTE_SPARKSQL,
     LANGID_PRED_CTE_SPARKSQL,
@@ -22,8 +35,133 @@ from puregraphdb_spark.sql_fragments import (
     TEXT_PROFILE_CTES_SPARKSQL,
 )
 
-#: name -> Spark SQL (run over the Engine's registered temp views)
-SPARK_SQL: dict[str, str] = {
+#: DuckDB function -> Spark function; each comment says when it is exact
+_RENAMES = {
+    "len": "size",  # on lists (on a string DuckDB's len is its length)
+    "unnest": "explode",  # in a select list: one row per element
+    "list_filter": "filter",  # with one-parameter lambdas
+    "list_transform": "transform",  # one-parameter lambdas (2nd is 1-based)
+    "list_distinct": "array_distinct",  # where counted: order, NULLs differ
+    "list_intersect": "array_intersect",  # where counted: order differs
+    "list_max": "array_max",  # on lists without NULLs
+    "list_sort": "array_sort",  # on lists without NULLs
+    "epoch_us": "unix_micros",  # on TIMESTAMP (the Engine reads it as UTC)
+    "quantile_cont": "percentile",  # always: both interpolate linearly
+    "json_extract_string": "get_json_object",  # `$.key` to a scalar
+    "list": "collect_list",  # always (DuckDB's inline ORDER BY fails)
+    "arg_min": "min_by",  # always (ties pick an arbitrary row in both)
+}
+#: the calls rewritten with their arguments, by ``_form``
+_FORMS = ("string_split", "list_slice", "regexp_replace", "generate_series")
+
+#: held out of the rewrite: single-quoted literals and `--` comments
+_HELD = re.compile(r"'(?:[^']|'')*'|--[^\n]*")
+_HOLE = re.compile(r"\x00(\d+)\x00")
+#: what the rewrite acts on: a call, a `[`, `//` or the type `varchar`
+_TOKEN = re.compile(r"\b([a-z_]+)\s*\(|\[|//|\bvarchar\b", re.I)
+_DEPTH = {"(": 1, "[": 1, ")": -1, "]": -1}
+
+
+def to_spark(duckdb_sql: str) -> str:
+    """The Spark-dialect text of a DuckDB oracle statement: the
+    module's rule table applied outside literals and comments. Raises
+    ``ValueError`` where a rule's exactness condition, read from the
+    text, fails."""
+    held, n = _HELD.findall(duckdb_sql), itertools.count()
+    masked = _HELD.sub(lambda m: f"\x00{next(n)}\x00", duckdb_sql)
+    return _show(_rewrite(masked, held), held)
+
+
+def _rewrite(sql: str, held: list[str]) -> str:
+    out, pos = [], 0
+    while m := _TOKEN.search(sql, pos):
+        out.append(sql[pos:m.start()])
+        pos = m.end()
+        token, name = m.group(0).lower(), (m.group(1) or "").lower()
+        if token == "//":  # exact on integers: both truncate toward 0
+            out.append(" div ")
+        elif token == "varchar":  # always, as a type name
+            out.append("string")
+        elif token == "[":
+            # a `[` after a name, `)` or `]` indexes: 1-based in DuckDB,
+            # 0-based in Spark; any other is a list literal (always exact)
+            if re.search(r"[\w)\]\x00]\s*$", sql[:m.start()]):
+                raise ValueError("1-based list index: " + _show(
+                    sql[max(0, m.start() - 20):pos], held))
+            end, _ = _close(sql, m.start())
+            out.append(f"array({_rewrite(sql[pos:end], held)})")
+            pos = end + 1
+        elif name in _FORMS:
+            end, args = _close(sql, pos - 1)
+            out.append(_form(name, [_rewrite(a, held) for a in args], held))
+            pos = end + 1
+        else:
+            out.append(_RENAMES[name] + "(" if name in _RENAMES
+                       else m.group(0))
+    return "".join(out) + sql[pos:]
+
+
+def _form(name: str, args: list[str], held: list[str]) -> str:
+    lit = [(h := _HOLE.fullmatch(a.strip())) and held[int(h.group(1))]
+           for a in args]
+    n, joined = len(args), ",".join(args)
+    # exact for a literal separator free of regex metacharacters
+    if (name == "string_split" and n == 2 and lit[1]
+            and not re.search(r"[.^$*+?()[\]{}|\\]", lit[1][1:-1])):
+        return f"split({joined})"
+    # exact from begin 1 (DuckDB's 3rd argument is an end, Spark's a length)
+    if name == "list_slice" and n == 3 and args[1].strip() == "1":
+        return f"slice({joined})"
+    # with 'g' (else DuckDB replaces once), for patterns RE2 and Java read alike
+    if name == "regexp_replace" and n == 4 and lit[3] == "'g'":
+        return f"regexp_replace({','.join(args[:3])})"
+    # always exact: Spark counts down for b < a, where DuckDB is empty
+    if name == "generate_series" and n == 2:
+        a, b = (x.strip() for x in args)
+        return f"filter(sequence({a}, {b}), _gs -> _gs between {a} and {b})"
+    # exact when the step runs from start toward stop (else Spark raises)
+    if name == "generate_series" and n == 3:
+        return f"sequence({joined})"
+    raise ValueError("no exact Spark form: "
+                     + _show(f"{name}({joined})", held))
+
+
+def _close(sql: str, start: int) -> tuple[int, list[str]]:
+    """Index of the bracket closing the one at ``start``, and the
+    top-level comma-separated pieces between them, whitespace kept."""
+    depth, parts, begin = 0, [], start + 1
+    for i in range(start, len(sql)):
+        depth += _DEPTH.get(sql[i], 0)
+        if depth == 0:
+            return i, parts + [sql[begin:i]]
+        if depth == 1 and sql[i] == ",":
+            parts.append(sql[begin:i])
+            begin = i + 1
+    raise ValueError(f"unbalanced brackets: {sql[start:start + 40]!r}")
+
+
+def _show(sql: str, held: list[str]) -> str:
+    """``sql`` with its held literals and comments put back."""
+    return _HOLE.sub(lambda m: held[int(m.group(1))], sql)
+
+
+#: queries whose Spark text is ``to_spark`` of the oracle text
+DERIVED = tuple("""
+    q22_json_extract q27_text_tokens q28_text_stats q35_string_date
+    q49_array_ops q50_gap_fill q53_array_hof q62_json_typed
+    q63_ngram_jaccard q70_tfidf q77_content_hash_dedup q79_vocab_coverage
+    q92_sequence_pack q109_cohort_ltv q123_interval_union
+    q124_time_to_convert q128_gini_concentration q131_dup_cluster_histogram
+    q132_funnel_latency q135_anomaly_mad_ts q137_source_mix_budget
+    q144_dedup_impact q147_token_length_profile q153_provenance_dedup
+    q154_bm25_topk q156_dedup_keepers q166_arrival_regularity
+    q171_resource_allocation q172_dedup_threshold_curve
+    q176_allpairs_jaccard q177_negative_sampling q179_source_overlap
+    q183_mann_whitney q186_ks_statistic
+""".split())
+
+#: name -> Spark SQL the rule table cannot derive
+HAND_WRITTEN: dict[str, str] = {
     # Langid kappa (q182): the shared prediction CTE in Spark
     # dialect, then the exact bigint kappa ratio.
     "q182_langid_kappa": LANGID_PRED_CTE_SPARKSQL + """,
@@ -59,44 +197,6 @@ SPARK_SQL: dict[str, str] = {
                  as kappa
         from agg order by source
     """,
-    # Mann-Whitney U (q183): explode() replaces unnest([..]).
-    "q183_mann_whitney": """
-        with a as (
-          select p.pair, 1 as is_a, value as v
-          from events
-          cross join (select explode(array('click','error','signup',
-                                           'view')) as pair) p
-          where event_type = 'purchase'),
-        b as (
-          select event_type as pair, 0 as is_a, value as v
-          from events where event_type <> 'purchase'),
-        u as (select * from a union all select * from b),
-        ranked as (
-          select pair, is_a,
-             cast(rank() over (partition by pair order by v) * 2
-                  + count(*) over (partition by pair, v) - 1
-               as bigint) as avg2,
-             cast(count(*) over (partition by pair, v)
-               as bigint) as t
-          from u),
-        agg as (
-          select pair,
-             cast(sum(is_a) as bigint) as n_a,
-             cast(sum(1 - is_a) as bigint) as n_b,
-             cast(sum(case when is_a = 1 then avg2 else 0 end)
-               as bigint) as ranksum2_a,
-             cast(sum(t * t - 1) as bigint) as tie_sum
-          from ranked group by pair)
-        select pair, n_a, n_b,
-               cast(ranksum2_a - n_a * (n_a + 1) as bigint) as u2,
-               tie_sum,
-               cast(round(cast(
-                 cast(ranksum2_a - n_a * (n_a + 1) as double)
-                 / cast(n_a * n_b as double) - 1.0
-                 as decimal(28,10)), 6) as double)
-                 as rank_biserial
-        from agg order by pair
-    """,
     # Benford (q184): 3-arg regexp_extract (Spark requires the
     # group index).
     "q184_benford": """
@@ -130,48 +230,6 @@ SPARK_SQL: dict[str, str] = {
         join ref on ref.digit = cast(nz.digit as int)
         order by digit
     """,
-    # KS statistic (q186): explode() replaces unnest([..]).
-    "q186_ks_statistic": """
-        with a as (
-          select p.pair, 1 as is_a, value as v
-          from events
-          cross join (select explode(array('click','error','signup',
-                                           'view')) as pair) p
-          where event_type = 'purchase'),
-        b as (
-          select event_type as pair, 0 as is_a, value as v
-          from events where event_type <> 'purchase'),
-        per_v as (
-          select pair, v,
-             cast(sum(is_a) as bigint) as ca,
-             cast(sum(1 - is_a) as bigint) as cb
-          from (select * from a union all select * from b)
-          group by pair, v),
-        cum as (
-          select pair,
-             cast(sum(ca) over (partition by pair order by v
-                  rows between unbounded preceding and current
-                  row) as bigint) as cum_a,
-             cast(sum(cb) over (partition by pair order by v
-                  rows between unbounded preceding and current
-                  row) as bigint) as cum_b
-          from per_v),
-        tot as (
-          select pair, cum_a, cum_b,
-             max(cum_a) over (partition by pair) as n_a,
-             max(cum_b) over (partition by pair) as n_b
-          from cum)
-        select pair,
-               cast(max(n_a) as bigint) as n_a,
-               cast(max(n_b) as bigint) as n_b,
-               cast(max(abs(cum_a*n_b - cum_b*n_a)) as bigint)
-                 as d_num,
-               cast(round(cast(
-                 cast(max(abs(cum_a*n_b - cum_b*n_a)) as double)
-                 / cast(max(n_a)*max(n_b) as double)
-                 as decimal(28,10)), 6) as double) as d
-        from tot group by pair order by pair
-    """,
     "q20_tumbling_window": """
         select w.start as win, event_type, count(*) as n,
                cast(round(sum(cast(value as decimal(28,3))), 2) as double)
@@ -180,27 +238,6 @@ SPARK_SQL: dict[str, str] = {
               from events)
         group by w, event_type
         order by win, event_type
-    """,
-    "q22_json_extract": """
-        select event_type,
-               cast(round(cast(avg(cast(get_json_object(props, '$.k')
-                       as double)) as decimal(28,8)), 4) as double) as avg_k
-        from events group by event_type order by event_type
-    """,
-    "q27_text_tokens": """
-        select tok, count(*) as tf
-        from (select explode(split(lower(text), ' ')) as tok
-              from documents)
-        where tok <> ''
-        group by tok order by tf desc, tok limit 20
-    """,
-    "q28_text_stats": """
-        select lang, count(*) as n_docs,
-               cast(round(cast(avg(n_chars) as decimal(28,6)), 2)
-                 as double) as avg_chars,
-               cast(round(cast(avg(size(split(text, ' ')))
-                     as decimal(28,6)), 2) as double) as avg_tokens
-        from documents group by lang order by lang
     """,
     "q29_knn_cosine": """
         with q as (
@@ -271,15 +308,6 @@ SPARK_SQL: dict[str, str] = {
           order by c0.ts desc limit 1) c
         order by p.event_id
     """,
-    "q35_string_date": """
-        select o_orderkey,
-               lpad(cast(o_orderkey as string), 12, '0') as padded,
-               reverse(substring(c_name, 1, 6)) as rev6,
-               split_part(c_name, '#', 2) as cust_num,
-               date_trunc('month', o_orderdate) as order_month
-        from orders o join customer c on o.o_custkey = c.c_custkey
-        where o.o_orderkey % 500 = 3 order by o_orderkey
-    """,
     "q37_regex": """
         select c_mktsegment,
                count(case when c_name rlike '[0-9]{9}$' then 1 end)
@@ -307,37 +335,6 @@ SPARK_SQL: dict[str, str] = {
         group by grouping sets ((l_returnflag), (l_linestatus))
         order by rf, ls
     """,
-    "q49_array_ops": """
-        with per_nation as (
-          select n_name,
-                 array_sort(collect_set(s_suppkey % 10)) as buckets
-          from supplier join nation on s_nationkey = n_nationkey
-          group by n_name)
-        select a.n_name as na, b.n_name as nb,
-               cast(size(array_intersect(a.buckets, b.buckets)) as bigint)
-                 as n_common
-        from per_nation a join per_nation b on a.n_name < b.n_name
-        order by na, nb limit 20
-    """,
-    "q50_gap_fill": """
-        with daily as (
-          select date_trunc('day', ts) as d, count(*) as cnt
-          from events where event_type = 'purchase' group by 1
-        ), bounds as (select min(d) as lo, max(d) as hi from daily)
-        select gs.d, cast(coalesce(daily.cnt, 0) as bigint) as n
-        from (select explode(sequence(lo, hi, interval 1 day)) as d
-              from bounds) gs
-        left join daily on gs.d = daily.d
-        order by gs.d
-    """,
-    "q53_array_hof": """
-        select label, count(*) as n,
-               cast(round(cast(avg(array_max(embedding))
-                     as decimal(28,8)), 6) as double) as avg_max_comp,
-               cast(round(avg(size(filter(embedding, x -> x > 0))), 4)
-                 as double) as avg_n_pos
-        from embeddings group by label order by label
-    """,
     "q58_bigrams": """
         with t as (
           select doc_id, pos, tok
@@ -347,47 +344,6 @@ SPARK_SQL: dict[str, str] = {
         from t a join t b on a.doc_id = b.doc_id and b.pos = a.pos + 1
         where a.tok <> '' and b.tok <> ''
         group by bigram order by tf desc, bigram limit 15
-    """,
-    "q62_json_typed": """
-        select event_type,
-               cast(sum(p.k) as bigint) as sum_k,
-               count(case when p.k > 50 then 1 end) as n_high
-        from (select event_type,
-                     from_json(props, 'k INT, tag STRING') as p
-              from events)
-        group by event_type order by event_type
-    """,
-    "q63_ngram_jaccard": """
-        with sh as (
-          select doc_id,
-                 -- length guard: sequence(1,0) is DESCENDING in Spark
-                 -- (would fabricate shingles for <3-char docs);
-                 -- mirrors operators/llm.py char_ngram_set
-                 case when length(lower(text)) >= 3 then
-                   array_distinct(transform(
-                     sequence(1, length(lower(text)) - 2),
-                     i -> substring(lower(text), i, 3)))
-                 else cast(array() as array<string>) end as sh
-          from documents),
-        a as (select doc_id as src, sh as sh_a, size(sh) as na from sh
-              where doc_id % 100 = 0),
-        b as (select doc_id as dst, sh as sh_b, size(sh) as nb from sh)
-        select src, dst,
-               cast(round(cast(jac_raw as decimal(28,10)), 6) as double)
-                 as jac
-        from (
-          -- size prefilter (J >= t needs min/max sizes >= t) mirrors
-          -- llm.q63's cheap pre-intersect cut; results identical
-          -- |A∪B| = na + nb − |A∩B| (sets are distinct): no union
-          -- array is materialized, mirroring llm.q63
-          select src, dst,
-                 cast(size(array_intersect(sh_a, sh_b)) as double)
-                 / cast(na + nb - size(array_intersect(sh_a, sh_b))
-                        as double) as jac_raw
-          from b join a on dst <> src
-          where least(na, nb) * 5 >= greatest(na, nb) * 3)
-        where jac_raw >= 0.6
-        order by src, dst
     """,
     "q64_regex_tokens": """
         select lang, count(*) as n_docs,
@@ -500,24 +456,6 @@ SPARK_SQL: dict[str, str] = {
                      explode(sequence(1, size(ts), 24)) as start
               from ct)
         order by doc_id, chunk_id
-    """,
-    "q70_tfidf": """
-        with tk as (select doc_id, explode(split(lower(text), ' ')) as tok
-                    from documents),
-        tkf as (select * from tk where tok != ''),
-        tf as (select doc_id, tok, count(*) as tf from tkf
-               where doc_id % 10 = 0 group by doc_id, tok),
-        df as (select tok, count(distinct doc_id) as df from tkf
-               group by tok),
-        n as (select count(*) as n_docs from documents)
-        select doc_id, tok, tf, df, rn,
-               cast(round(cast(tf * n_docs / df as decimal(28,8)), 4)
-                 as double) as tfidf
-        from (select f.doc_id, f.tok, f.tf, d.df, n.n_docs,
-                     row_number() over (partition by f.doc_id
-                       order by f.tf * n.n_docs / d.df desc, f.tok) as rn
-              from tf f join df d using (tok) cross join n)
-        where rn <= 3 order by doc_id, rn
     """,
     "q71_quality_filter": """
         with pd as (
@@ -641,40 +579,6 @@ SPARK_SQL: dict[str, str] = {
                  as double) as avg_scale
         from v group by label order by label
     """,
-    "q77_content_hash_dedup": """
-        with h as (
-          select doc_id,
-                 md5(trim(regexp_replace(regexp_replace(lower(text),
-                   '[^a-z0-9 ]', ''), ' +', ' '))) as content_hash
-          from documents)
-        select doc_id, content_hash,
-               count(*) over w as n_same,
-               min(doc_id) over w as keeper,
-               cast(doc_id != min(doc_id) over w as bigint) as is_dup
-        from h window w as (partition by content_hash)
-        order by doc_id
-    """,
-    "q79_vocab_coverage": """
-        with tf as (select tok, count(*) as tf from (
-                      select explode(split(lower(text), ' ')) as tok
-                      from documents) where tok != '' group by tok),
-        r as (select tf, tok,
-                     row_number() over (order by tf desc, tok) as rnk
-              from tf),
-        c as (select rnk,
-                     cast(sum(tf) over (order by rnk
-                       rows between unbounded preceding and current row)
-                       as bigint) as cum
-              from r),
-        t as (select cast(sum(tf) as bigint) as total from tf)
-        select pct, min(rnk) as k_terms,
-               min_by(cum, rnk) as cum_tokens,
-               min(total) as total_tokens
-        from c cross join t
-        cross join (select explode(array(25, 50, 75, 90)) as pct)
-        where cum * 100 >= pct * total
-        group by pct order by pct
-    """,
     "q81_repetition_filter": """
         with pd as (
           select lang,
@@ -758,25 +662,6 @@ SPARK_SQL: dict[str, str] = {
         from j join cs on cs.cohort = j.cohort
         group by j.cohort, week_n
         order by j.cohort, week_n
-    """,
-    "q92_sequence_pack": """
-        with t as (select lang, doc_id,
-                     cast(size(filter(split(lower(text), ' '),
-                       x -> x != '')) as bigint) as n_tok
-                   from documents),
-        p as (select lang, doc_id, n_tok,
-                cast(floor(coalesce(sum(n_tok) over (
-                  partition by lang order by doc_id
-                  rows between unbounded preceding and 1 preceding),
-                  0) / 256) as bigint) as pack_id
-              from t)
-        select lang, pack_id, count(*) as n_docs,
-               sum(n_tok) as pack_tokens,
-               min(doc_id) as first_doc, max(doc_id) as last_doc,
-               cast(round(cast(cast(sum(n_tok) as double)
-                     / cast(256 as double)
-                     as decimal(28,10)), 6) as double) as fill_ratio
-        from p group by lang, pack_id order by lang, pack_id
     """,
     "q93_minhash_bands": """
         with tk as (select doc_id,
@@ -883,87 +768,6 @@ SPARK_SQL: dict[str, str] = {
                     as decimal(28,10)), 6) as double) as shared_ratio
         from s group by lang order by lang
     """,
-    "q109_cohort_ltv": """
-        with first as (
-          select o_custkey,
-                 date_trunc('month', min(o_orderdate)) as cohort
-          from orders group by o_custkey),
-        sz as (select cohort, cast(count(*) as bigint) as n_cohort
-               from first group by cohort),
-        j as (select f.cohort,
-                     cast((year(o.o_orderdate) - year(f.cohort)) * 12
-                          + (month(o.o_orderdate) - month(f.cohort))
-                       as bigint) as month_offset,
-                     o.o_custkey,
-                     cast(o.o_totalprice as decimal(28,2)) as p
-              from orders o join first f on f.o_custkey = o.o_custkey),
-        agg as (select cohort, month_offset,
-                       cast(count(distinct o_custkey) as bigint) as n_active,
-                       sum(p) as rev
-                from j group by cohort, month_offset),
-        cum as (select a.cohort, a.month_offset, a.n_active,
-                       cast(a.rev as double) as revenue,
-                       cast(sum(a.rev) over (
-                            partition by a.cohort order by a.month_offset
-                            rows between unbounded preceding
-                                     and current row) * 100 as bigint)
-                         as cum_cents,
-                       cast(s.n_cohort as bigint) as n_cohort
-                from agg a join sz s on s.cohort = a.cohort)
-        select cohort, month_offset, n_active, revenue,
-               cast((2 * cum_cents + n_cohort) div (2 * n_cohort)
-                 as double) / 100.0 as ltv_per_cust
-        from cum order by cohort, month_offset
-    """,
-    "q123_interval_union": """
-        with e as (
-          select user_id, event_id, unix_micros(ts) as s,
-                 unix_micros(ts) + 300000000 as en
-          from events),
-        flagged as (
-          select user_id, event_id, s, en,
-                 case when max(en) over w1 is null
-                        or s > max(en) over w1
-                      then 1 else 0 end as nf
-          from e
-          window w1 as (partition by user_id order by s, event_id
-                        rows between unbounded preceding
-                        and 1 preceding)),
-        isl as (
-          select user_id, s, en,
-                 sum(nf) over (partition by user_id
-                               order by s, event_id
-                               rows between unbounded preceding
-                               and current row) as island
-          from flagged),
-        agg as (
-          select user_id, island, min(s) as i_s, max(en) as i_e
-          from isl group by user_id, island)
-        select user_id,
-               cast(count(*) as bigint) as n_islands,
-               cast(sum(i_e - i_s) as bigint) as covered_us
-        from agg group by user_id order by user_id
-    """,
-    "q124_time_to_convert": """
-        with e as (
-          select user_id, event_type, unix_micros(ts) as t
-          from events
-          where event_type in ('signup', 'purchase')),
-        a as (
-          select user_id, event_type, t,
-                 min(case when event_type = 'signup' then t end)
-                   over (partition by user_id) as f
-          from e),
-        g as (
-          select user_id, min(t) as t_to, min(f) as t_f
-          from a
-          where event_type = 'purchase' and f is not null and t >= f
-          group by user_id)
-        select cast(floor((t_to - t_f) / 3600000000.0) as bigint)
-                 as hours_bucket,
-               cast(count(*) as bigint) as n_users
-        from g group by hours_bucket order by hours_bucket
-    """,
     "q126_token_diversity": """
         with tok as (
           select source as grp,
@@ -1018,74 +822,6 @@ SPARK_SQL: dict[str, str] = {
                n_val as next_val
         from f where side = 1 and n_ts is not null
         order by event_id
-    """,
-    "q128_gini_concentration": """
-        with spend as (
-          select o_custkey,
-                 sum(cast(o_totalprice as decimal(18,2))) as sp
-          from orders group by o_custkey),
-        ranked as (
-          select sp, row_number() over (order by sp, o_custkey) as rk
-          from spend),
-        tot as (
-          select cast(count(*) as bigint) as n, sum(sp) as s0
-          from spend),
-        stats as (
-          select min(n) as n_keys, min(s0) as s0m,
-                 sum(rk * sp) as s1,
-                 sum(case when rk > n - (n div 10) then sp end) as topd
-          from ranked cross join tot)
-        select n_keys,
-               cast(round(cast(
-                 cast(2 * s1 - (n_keys + 1) * s0m as double)
-                   / (cast(n_keys as double) * cast(s0m as double))
-                 as decimal(28,10)), 6) as double) as gini,
-               cast(round(cast(
-                 cast(topd as double) / cast(s0m as double)
-                 as decimal(28,10)), 6) as double) as top_decile_share
-        from stats
-    """,
-    "q131_dup_cluster_histogram": """
-        with h as (
-          select md5(trim(regexp_replace(regexp_replace(lower(text),
-                   '[^a-z0-9 ]', ''), ' +', ' '))) as content_hash
-          from documents),
-        clusters as (
-          select content_hash, cast(count(*) as bigint) as size
-          from h group by content_hash)
-        select size, cast(count(*) as bigint) as n_clusters,
-               cast(size * count(*) as bigint) as n_docs,
-               cast(greatest(size - 1, 0) * count(*) as bigint)
-                 as n_removable
-        from clusters group by size order by size
-    """,
-    "q132_funnel_latency": """
-        with v as (select user_id, min(ts) as t1 from events
-                   where event_type = 'view' group by user_id),
-        c as (select e.user_id, min(e.ts) as t2
-              from events e join v on v.user_id = e.user_id
-              where e.event_type = 'click' and e.ts > v.t1
-              group by e.user_id),
-        p as (select e.user_id, min(e.ts) as t3
-              from events e join c on c.user_id = e.user_id
-              where e.event_type = 'purchase' and e.ts > c.t2
-              group by e.user_id),
-        trans as (
-          select 'view>click' as transition,
-                 cast(unix_micros(c.t2) - unix_micros(v.t1) as double)
-                   / 1e6 as latency_s
-          from c join v using (user_id)
-          union all
-          select 'click>purchase',
-                 cast(unix_micros(p.t3) - unix_micros(c.t2) as double)
-                   / 1e6
-          from p join c using (user_id))
-        select transition, cast(count(*) as bigint) as n_users,
-               cast(round(cast(percentile(latency_s, 0.5)
-                 as decimal(28,6)), 4) as double) as median_s,
-               cast(round(cast(percentile(latency_s, 0.9)
-                 as decimal(28,6)), 4) as double) as p90_s
-        from trans group by transition order by transition
     """,
     "q133_chi_square": """
         with cells as (
@@ -1150,66 +886,6 @@ SPARK_SQL: dict[str, str] = {
         join v va on va.source = o.src_a
         join v vb on vb.source = o.src_b
         order by src_a, src_b
-    """,
-    "q135_anomaly_mad_ts": """
-        with daily as (
-            select date_trunc('day', ts) as day,
-                   cast(count(*) as bigint) as cnt
-            from events group by 1),
-        m as (select percentile(cnt, 0.5) as med from daily),
-        dev as (
-            select day, cnt, med, abs(cnt - med) as dev
-            from daily cross join m),
-        md as (select percentile(dev, 0.5) as mad from dev)
-        select day, cnt,
-               cast(round(cast(med as decimal(28,6)), 4) as double)
-                 as med,
-               cast(round(cast(mad as decimal(28,6)), 4) as double)
-                 as mad,
-               cast(round(cast(
-                    case when mad > 0 then (cnt - med) / mad
-                         else null end
-                    as decimal(28,8)), 6) as double) as score,
-               cast(case when mad > 0 and abs((cnt - med) / mad) > 3.5
-                    then 1 else 0 end as bigint) as is_anomaly
-        from dev cross join md order by day
-    """,
-    "q137_source_mix_budget": """
-        with per as (
-            select source, cast(count(*) as bigint) as n_docs,
-                   sum(cast(size(filter(split(text, ' '),
-                                        t -> t <> '')) as bigint))
-                     as tokens
-            from documents group by source),
-        s1 as (
-            select source, n_docs, tokens,
-                   cast(floor(sum(tokens) over () * 50 / 100)
-                        as bigint) as budget,
-                   least(tokens,
-                         cast(floor(
-                             cast(floor(sum(tokens) over ()
-                                        * 50 / 100) as bigint)
-                             / count(*) over ()) as bigint)) as alloc1
-            from per),
-        s2 as (
-            select source, n_docs, tokens, alloc1,
-                   budget - sum(alloc1) over () as leftover,
-                   tokens - alloc1 as cap,
-                   sum(tokens - alloc1) over () as cap_total
-            from s1),
-        s3 as (
-            select source, n_docs, tokens,
-                   alloc1 + case when cap_total > 0
-                       then least(cap, cast(floor(
-                            leftover * cap / cap_total) as bigint))
-                       else 0 end as alloc2
-            from s2)
-        select source, n_docs, tokens,
-               cast(alloc2 as bigint) as alloc_tokens,
-               cast(round(cast(
-                    cast(alloc2 as double) / cast(tokens as double)
-                    as decimal(28,8)), 6) as double) as sample_rate
-        from s3 order by source
     """,
     "q138_seasonal_dow": """
         with per as (
@@ -1338,24 +1014,6 @@ SPARK_SQL: dict[str, str] = {
           and (cast(cnt as double) - mean) / sqrt(var) > 2.0
         order by event_type, bucket
     """,
-    "q144_dedup_impact": """
-        with per_hash as (
-            select source,
-                   md5(trim(regexp_replace(regexp_replace(
-                       lower(text), '[^a-z0-9 ]', ''),
-                       ' +', ' '))) as h,
-                   cast(count(*) as bigint) as c
-            from documents group by 1, 2)
-        select source,
-               cast(sum(c) as bigint) as n_docs,
-               cast(count(*) as bigint) as n_unique,
-               cast(sum(c) - count(*) as bigint) as n_removable,
-               cast(round(cast(
-                    cast(sum(c) - count(*) as double)
-                    / cast(sum(c) as double)
-                    as decimal(28,10)), 6) as double) as dup_ratio
-        from per_hash group by source order by source
-    """,
     "q145_substring_dedup": """
         with base as (
             select doc_id, source,
@@ -1459,42 +1117,6 @@ SPARK_SQL: dict[str, str] = {
                     / cast(count(*) as double)
                     as decimal(28,10)), 6) as double) as pii_doc_ratio
         from per_doc group by source order by source
-    """,
-    "q147_token_length_profile": """
-        with per_doc as (
-            select source,
-                   cast(size(filter(split(lower(text), ' '),
-                        t -> t <> '')) as bigint) as n_toks
-            from documents),
-        tot as (
-            select source, cast(count(*) as bigint) as n_docs,
-                   cast(sum(n_toks) as bigint) as total_tokens
-            from per_doc group by source),
-        ranked as (
-            select source, n_toks,
-                   row_number() over (partition by source
-                                      order by n_toks) as rn,
-                   count(*) over (partition by source) as n
-            from per_doc),
-        picks as (
-            select source,
-                   max(case when rn = greatest(cast(floor(
-                       (25*n+99)/100) as bigint), cast(1 as bigint))
-                       then n_toks end) as p25_tokens,
-                   max(case when rn = greatest(cast(floor(
-                       (50*n+99)/100) as bigint), cast(1 as bigint))
-                       then n_toks end) as p50_tokens,
-                   max(case when rn = greatest(cast(floor(
-                       (90*n+99)/100) as bigint), cast(1 as bigint))
-                       then n_toks end) as p90_tokens,
-                   max(case when rn = greatest(cast(floor(
-                       (99*n+99)/100) as bigint), cast(1 as bigint))
-                       then n_toks end) as p99_tokens
-            from ranked group by source)
-        select t.source, t.n_docs, t.total_tokens,
-               p.p25_tokens, p.p50_tokens, p.p90_tokens, p.p99_tokens
-        from tot t join picks p on t.source = p.source
-        order by t.source
     """,
     "q148_benchmark_attribution": """
         with benches as (
@@ -1693,138 +1315,6 @@ SPARK_SQL: dict[str, str] = {
                  as tokens_per_char
         from per_doc group by source order by source
     """,
-    # Provenance dedup twin (q153): same planted domain grain and
-    # syndicated residue class, Spark regexp_replace (implicit 'g').
-    "q153_provenance_dedup": """
-        with planted as (
-            select concat(source, '.d', cast(doc_id % 3 as string))
-                     as domain,
-                   case when doc_id % 37 = 0
-                        then concat('syndicated boilerplate item ',
-                                    cast(doc_id % 5 as string))
-                        else text end as text
-            from documents),
-        per_hash as (
-            select domain,
-                   md5(trim(regexp_replace(regexp_replace(
-                       lower(text), '[^a-z0-9 ]', ''),
-                       ' +', ' '))) as h,
-                   cast(count(*) as bigint) as c
-            from planted group by 1, 2),
-        hd as (
-            select h, cast(count(*) as bigint) as nd
-            from per_hash group by h)
-        select domain,
-               cast(sum(c) as bigint) as n_docs,
-               cast(count(*) as bigint) as n_unique,
-               cast(sum(c) - count(*) as bigint) as n_removable,
-               cast(sum(case when nd >= 2 then 1 else 0 end)
-                 as bigint) as n_mirrored,
-               cast(round(cast(
-                    cast(sum(case when nd >= 2 then 1 else 0 end)
-                         as double)
-                    / cast(count(*) as double)
-                    as decimal(28,10)), 6) as double) as mirror_ratio
-        from per_hash join hd using (h)
-        group by domain order by domain
-    """,
-    # BM25 (rational-idf) twin (q154): Spark HOF spellings, identical
-    # expression association as the DataFrame door.
-    "q154_bm25_topk": """
-        with per_doc as (
-            select doc_id,
-                   cast(size(toks) as bigint) as dl,
-                   cast(size(filter(toks, t -> t = 'spark'))
-                     as bigint) as tf0,
-                   cast(size(filter(toks, t -> t = 'join'))
-                     as bigint) as tf1,
-                   cast(size(filter(toks, t -> t = 'fast'))
-                     as bigint) as tf2
-            from (select doc_id,
-                         filter(split(lower(text), ' '),
-                                t -> t != '') as toks
-                  from documents)),
-        stats as (
-            select cast(count(*) as bigint) as n_corpus,
-                   cast(sum(dl) as bigint) as total_dl,
-                   cast(sum(case when tf0 > 0 then 1 else 0 end)
-                     as bigint) as df0,
-                   cast(sum(case when tf1 > 0 then 1 else 0 end)
-                     as bigint) as df1,
-                   cast(sum(case when tf2 > 0 then 1 else 0 end)
-                     as bigint) as df2
-            from per_doc),
-        scored as (
-            select doc_id, dl, tf0, tf1, tf2,
-                   (cast(n_corpus - df0 as double) + 0.5D)
-                     / (cast(df0 as double) + 0.5D)
-                     * (cast(tf0 as double) * 2.2D)
-                     / (cast(tf0 as double) + 1.2D
-                        * (1.0D - 0.75D + 0.75D * cast(dl as double)
-                           / (cast(total_dl as double)
-                              / cast(n_corpus as double))))
-                 + (cast(n_corpus - df1 as double) + 0.5D)
-                     / (cast(df1 as double) + 0.5D)
-                     * (cast(tf1 as double) * 2.2D)
-                     / (cast(tf1 as double) + 1.2D
-                        * (1.0D - 0.75D + 0.75D * cast(dl as double)
-                           / (cast(total_dl as double)
-                              / cast(n_corpus as double))))
-                 + (cast(n_corpus - df2 as double) + 0.5D)
-                     / (cast(df2 as double) + 0.5D)
-                     * (cast(tf2 as double) * 2.2D)
-                     / (cast(tf2 as double) + 1.2D
-                        * (1.0D - 0.75D + 0.75D * cast(dl as double)
-                           / (cast(total_dl as double)
-                              / cast(n_corpus as double))))
-                   as raw
-            from per_doc cross join stats),
-        snapped as (
-            select doc_id, dl, tf0, tf1, tf2,
-                   cast(round(cast(raw as decimal(28,10)), 6)
-                     as double) as score
-            from scored)
-        select cast(row_number() over
-                    (order by score desc, doc_id) as bigint) as rank,
-               doc_id, dl,
-               tf0 as tf_0, tf1 as tf_1, tf2 as tf_2, score
-        from snapped
-        order by score desc, doc_id limit 20
-    """,
-    # Keep-longest survivorship twin (q156): Spark regexp_replace
-    # (implicit 'g') and HOF token count, same planted clusters.
-    "q156_dedup_keepers": """
-        with planted as (
-            select doc_id,
-                   case when doc_id % 23 = 0
-                        then concat('boiler plate item ',
-                                    cast(doc_id % 4 as string),
-                                    case when doc_id % 3 = 0
-                                         then ' !! ?? ..' else '' end)
-                        else text end as text
-            from documents),
-        per_doc as (
-            select doc_id,
-                   md5(trim(regexp_replace(regexp_replace(
-                       lower(text), '[^a-z0-9 ]', ''),
-                       ' +', ' '))) as h,
-                   cast(size(filter(split(text, ' '),
-                        t -> t != '')) as bigint) as n_toks
-            from planted),
-        ranked as (
-            select doc_id, h, n_toks,
-                   cast(count(*) over (partition by h) as bigint)
-                     as cluster_size,
-                   row_number() over
-                     (partition by h
-                      order by n_toks desc, doc_id) as rn
-            from per_doc)
-        select doc_id, h, cluster_size, n_toks,
-               cast(case when rn = 1 then 1 else 0 end as bigint)
-                 as kept
-        from ranked where cluster_size >= 2
-        order by doc_id
-    """,
     # Shingle compressibility twin (q157): Spark posexplode over the
     # same k=8 md5 windows.
     "q157_shingle_compressibility": """
@@ -1952,42 +1442,6 @@ SPARK_SQL: dict[str, str] = {
                     as decimal(28,10)), 6) as double) as kept_ratio
         from scored cross join thr
         group by source, thr order by source, thr
-    """,
-    # Arrival regularity (q166): unix_micros spelling of epoch_us.
-    "q166_arrival_regularity": """
-        with d as (
-            select user_id, unix_micros(ts) as us from events),
-        lagd as (
-            select user_id,
-                   us - lag(us) over (partition by user_id
-                                      order by us) as dd
-            from d),
-        per_user as (
-            select user_id,
-                   cast(count(*) + 1 as bigint) as n_events,
-                   cast(count(*) as bigint) as n_deltas,
-                   cast(sum(cast(dd as decimal(19,0)))
-                     as decimal(38,0)) as s,
-                   cast(sum(cast(dd as decimal(19,0))
-                            * cast(dd as decimal(19,0)))
-                     as decimal(38,0)) as ss
-            from lagd where dd is not null
-            group by user_id
-            having count(*) + 1 >= 5 and sum(dd) > 0
-               and count(*) >= 2)
-        select user_id, n_events,
-               cast(round(cast(cast(s as double)
-                    / cast(n_deltas as double)
-                    as decimal(28,4)), 1) as double) as mean_delta_us,
-               cast(round(cast(
-                    cast(cast(n_deltas as decimal(38,0))
-                         * (cast(n_deltas as decimal(38,0)) * ss
-                            - s * s) as double)
-                    / cast((cast(n_deltas as decimal(38,0)) - 1)
-                           * s * s as double)
-                    as decimal(28,10)), 6) as double) as cv2
-        from per_user
-        order by cv2 asc, user_id limit 10
     """,
     # Bounded temporal reach (q158): Spark datediff(end, start)
     # spelling of DuckDB's 3-arg date_diff('day', ...).
@@ -2133,166 +1587,6 @@ SPARK_SQL: dict[str, str] = {
                  as n_distinct_fp
         from prof group by source order by source
     """,
-    # RA link prediction (q171): Spark `div` spelling of the exact
-    # integer weight; identical bigint-sum ordering.
-    "q171_resource_allocation": """
-        with pairs as (
-            select distinct o.o_custkey as c, l.l_suppkey as s
-            from orders o join lineitem l
-              on l.l_orderkey = o.o_orderkey),
-        cdeg as (select c, count(*) as dz from pairs group by c),
-        wp as (
-            select p.c, p.s,
-                   cast(1000000000000L div dz as bigint) as w
-            from pairs p join cdeg on cdeg.c = p.c),
-        scored as (
-            select a.s as s1, b.s as s2,
-                   cast(count(*) as bigint) as cn,
-                   cast(sum(a.w) as bigint) as ra_w
-            from wp a join wp b on a.c = b.c and a.s < b.s
-            group by 1, 2)
-        select s1, s2, cn,
-               cast(round(cast(cast(ra_w as double)
-                    / cast(1e12 as double)
-                    as decimal(28,10)), 6) as double) as ra_score
-        from scored
-        order by ra_w desc, s1, s2
-        limit 50
-    """,
-    # Dedup threshold curve (q172): Spark HOF shingles (with the
-    # sequence(1,0)-descending guard) + explode()d grid.
-    "q172_dedup_threshold_curve": """
-        with sh as (
-          select doc_id,
-                 case when length(lower(text)) >= 3 then
-                   array_distinct(transform(
-                     sequence(1, length(lower(text)) - 2),
-                     i -> substring(lower(text), i, 3)))
-                 else cast(array() as array<string>) end as sh
-          from documents),
-        sz as (select doc_id, size(sh) as n from sh),
-        ex as (select doc_id, explode(sh) as g from sh),
-        exa as (select doc_id as src, g from ex
-                where doc_id % 100 = 0),
-        exb as (select doc_id as dst, g from ex
-                where doc_id % 100 != 0),
-        inter as (select a.src, b.dst, count(*) as i
-                  from exa a join exb b on b.g = a.g
-                  group by 1, 2),
-        j as (select i.src, i.dst,
-                     cast(i.i as double)
-                     / cast(sa.n + sb.n - i.i as double) as jac
-              from inter i
-              join sz sa on sa.doc_id = i.src
-              join sz sb on sb.doc_id = i.dst
-              where least(sa.n, sb.n) * 2 >= greatest(sa.n, sb.n)),
-        p as (select src, dst, jac from j where jac >= 0.5),
-        g as (select explode(array(cast(0.5 as double),
-                                   cast(0.6 as double),
-                                   cast(0.7 as double),
-                                   cast(0.8 as double),
-                                   cast(0.9 as double)))
-                       as threshold),
-        nn as (select cast(count(*) as bigint) as n_new
-               from documents where doc_id % 100 != 0)
-        select threshold,
-               cast(count(*) as bigint) as n_pairs,
-               cast(count(distinct dst) as bigint) as n_docs_removed,
-               cast(round(cast(
-                    cast(count(distinct dst) as double)
-                    / cast(max(n_new) as double)
-                    as decimal(28,10)), 6) as double) as removal_ratio
-        from p cross join g cross join nn
-        where jac >= threshold
-        group by threshold order by threshold
-    """,
-    # All-pairs Jaccard (q176): the same NAIVE inverted-index shape
-    # as the DuckDB oracle, in Spark spellings — still independent of
-    # the DataFrame door's prefix filter.
-    "q176_allpairs_jaccard": """
-        with sh as (
-          select doc_id,
-                 case when length(lower(text)) >= 3 then
-                   array_distinct(transform(
-                     sequence(1, length(lower(text)) - 2),
-                     i -> substring(lower(text), i, 3)))
-                 else cast(array() as array<string>) end as sh
-          from documents where doc_id % 20 = 0),
-        sz as (select doc_id, size(sh) as n from sh
-               where size(sh) > 0),
-        ex as (select doc_id, explode(sh) as g from sh),
-        inter as (select x.doc_id as a, y.doc_id as b,
-                         count(*) as i
-                  from ex x join ex y
-                    on y.g = x.g and x.doc_id < y.doc_id
-                  group by 1, 2),
-        j as (select t.a, t.b, t.i, sa.n + sb.n - t.i as u
-              from inter t
-              join sz sa on sa.doc_id = t.a
-              join sz sb on sb.doc_id = t.b)
-        select a, b,
-               cast(round(cast(cast(i as double) / cast(u as double)
-                    as decimal(28,10)), 6) as double) as jac
-        from j where i * 5 >= u * 3
-        order by a, b
-    """,
-    # Negative sampling (q177): explode()d rank grid; same bigint
-    # hash arithmetic.
-    "q177_negative_sampling": """
-        with edges as (
-            select distinct o.o_custkey as c, l.l_suppkey as s
-            from orders o join lineitem l
-              on l.l_orderkey = o.o_orderkey),
-        ns as (select count(*) as n_supp from supplier),
-        cand as (
-            select c, s as s_pos, r.rank,
-                   cast(1 + (s - 1 + r.rank * 2654435761)
-                        % n_supp as bigint) as s_neg
-            from edges cross join ns
-            cross join (select explode(array(1, 2, 3)) as rank) r
-            where c % 50 = 0)
-        select cand.c, cand.s_pos, cand.rank, cand.s_neg,
-               cast(case when e2.s is null then 0 else 1 end
-                 as bigint) as is_true_edge
-        from cand left join edges e2
-          on e2.c = cand.c and e2.s = cand.s_neg
-        order by cand.c, cand.s_pos, cand.rank
-    """,
-    # Source overlap (q179): Spark regexp_replace is global by
-    # default; same naive self-join shape as the DuckDB oracle.
-    "q179_source_overlap": """
-        with planted as (
-            select source,
-                   case when doc_id % 7 = 0
-                        then concat('shared boilerplate ',
-                                    cast(doc_id % 5 as string))
-                        else text end as text
-            from documents),
-        sh as (
-            select distinct source as src,
-                   md5(trim(regexp_replace(regexp_replace(
-                       lower(text), '[^a-z0-9 ]', ''),
-                       ' +', ' '))) as h
-            from planted),
-        per_src as (select src, count(*) as n_hashes
-                    from sh group by src),
-        pairs as (
-            select x.src as a, y.src as b, count(*) as n_shared
-            from sh x join sh y
-              on y.h = x.h and x.src < y.src
-            group by 1, 2)
-        select a, b, cast(n_shared as bigint) as n_shared,
-               cast(na.n_hashes as bigint) as n_a,
-               cast(nb.n_hashes as bigint) as n_b,
-               cast(round(cast(
-                    cast(n_shared as double)
-                    / cast(least(na.n_hashes, nb.n_hashes) as double)
-                    as decimal(28,10)), 6) as double) as overlap
-        from pairs
-        join per_src na on na.src = pairs.a
-        join per_src nb on nb.src = pairs.b
-        order by a, b
-    """,
     # Per-dim embedding profile (q173): posexplode ordinality in the
     # Spark dialect; same decimal sums and IEEE operand order.
     "q173_embedding_dim_profile": """
@@ -2344,3 +1638,7 @@ SPARK_SQL: dict[str, str] = {
         from h order by asset_id
     """,
 }
+
+#: name -> Spark SQL (run over the Engine's registered temp views)
+SPARK_SQL: dict[str, str] = {
+    **{n: to_spark(oracle_sql()[n]) for n in DERIVED}, **HAND_WRITTEN}

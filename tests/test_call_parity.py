@@ -112,7 +112,7 @@ CASES = {
         lambda s: _graph(s).connected_components(max_iter=50)),
     "coreness": (
         "CALL coreness(edges => 'cp_edges')",
-        lambda s: _graph(s).coreness_hindex()),
+        lambda s: _graph(s).coreness()),
     "label_propagation": (
         "CALL label_propagation(edges => 'cp_edges')",
         lambda s: _graph(s).label_propagation(max_iter=5)),

@@ -803,7 +803,17 @@ def test_coreness_consistent_with_k_core(spark):
         assert via_coreness == via_kcore, k
 
 
-def test_coreness_hindex_equals_level_peeling(spark):
+def _networkx_coreness(g):
+    import networkx as nx
+
+    ref = nx.Graph()
+    ref.add_nodes_from(r["id"] for r in g.vertices.collect())
+    ref.add_edges_from((r["src"], r["dst"]) for r in g.edges.collect()
+                       if r["src"] != r["dst"])
+    return nx.core_number(ref)
+
+
+def test_coreness_equals_networkx_on_small_graphs(spark):
     shapes = [
         [(i, j) for i in range(1, 6) for j in range(1, 6) if i < j],  # K5
         [(1, 2), (2, 3), (3, 4)],                                     # path
@@ -813,18 +823,28 @@ def test_coreness_hindex_equals_level_peeling(spark):
     ]
     for edges in shapes:
         g = _g(spark, edges)
-        assert {r["id"]: r["coreness"]
-                for r in g.coreness_hindex().collect()} == _coreness(g), edges
+        assert _coreness(g) == _networkx_coreness(g), edges
 
 
-def test_coreness_hindex_matches_on_fixture_graph(spark):
+def test_coreness_equals_networkx_on_fixture_graph(spark):
     import __spark_entry__ as em
     from tests.conftest import SF_DIR
 
     g = em._order_graph(spark, SF_DIR)
-    lv = {r["id"]: r["coreness"] for r in g.coreness().collect()}
-    hi = {r["id"]: r["coreness"] for r in g.coreness_hindex().collect()}
-    assert lv == hi
+    assert _coreness(g) == _networkx_coreness(g)
+
+
+def test_coreness_raises_when_max_iter_ends_before_the_fixpoint(spark):
+    # K4 plus a tail: the first superstep lowers vertex 4 (degree 4,
+    # coreness 3) and vertex 5 (degree 2, coreness 1); the second
+    # lowers nothing
+    k4 = [(i, j) for i in range(1, 5) for j in range(1, 5) if i < j]
+    g = _g(spark, k4 + [(4, 5), (5, 6)])
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        g.coreness(max_iter=1)
+    assert {r["id"]: r["coreness"]
+            for r in g.coreness(max_iter=2).collect()} == {
+        1: 3, 2: 3, 3: 3, 4: 3, 5: 1, 6: 1}
 
 
 def test_ktruss_local_finish_equals_distributed(spark):

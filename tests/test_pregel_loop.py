@@ -61,8 +61,12 @@ def _read_rdds(df) -> set[int]:
     lambda g: g.label_propagation(),
     lambda g: g.shortest_paths([1, 10]),
     lambda g: g.k_core(2),
-    lambda g: g.coreness_hindex(),
-], ids=["pagerank", "cc", "lpa", "sssp", "kcore", "coreness_hindex"])
+    lambda g: g.coreness(),
+    lambda g: g.ktruss(3),
+    lambda g: g.ktruss(3, local_finish_edges=0),
+    lambda g: g.betweenness_centrality([1, 10]),
+], ids=["pagerank", "cc", "lpa", "sssp", "kcore", "coreness", "ktruss",
+        "ktruss_distributed", "betweenness"])
 def test_loop_leaves_only_the_returned_state_cached(spark, k4, algo):
     before = _persistent_rdds(spark)
     out = algo(k4)
