@@ -10,6 +10,12 @@ coalescing and skew-join splitting, so ``spark.sql.shuffle.partitions``
 is a ceiling, not a tuning knob that would need re-derivation per
 deployment. On a 1000-executor cluster the same code runs with a higher
 ceiling (e.g. 2000) and AQE still right-sizes each exchange.
+
+Below 128 MiB of input, ``Engine.tune_for_data_size`` switches to the
+interactive posture: AQE off and a fixed shuffle width derived from the
+measured input — one partition per 4 MiB, at most one per core, so
+sf0.001/sf0.01 run every shuffle (and every graph superstep) on one
+partition.
 """
 
 from __future__ import annotations
@@ -234,28 +240,39 @@ class Engine:
                            interactive_threshold: int = 128 << 20) -> None:
         """Size shuffle parallelism to the measured input volume.
 
-        Below ~128 MiB every shuffle is a handful of MB: 32-way fan-out
-        and AQE's stage-barrier re-planning are pure scheduling latency
-        (measured at sf0.1 = 17 MiB: core-30 total 18.8 s with AQE+32
-        partitions vs 11.1 s with fixed 8 and AQE off). Above the
-        threshold the defaults stand — AQE coalescing/skew-splitting is
-        the win once shuffles carry real volume. The line was 2 GiB
-        through round 4; SCALECHECK's sf1 run (172 MiB input) showed
-        that is too coarse: the graph self-joins shuffle tens of
+        Below ~128 MiB every shuffle is a handful of MB: AQE's
+        stage-barrier re-planning is pure scheduling latency (sf0.1,
+        17 MiB: core-30 total 18.8 s with AQE and 32 partitions vs
+        11.1 s with a fixed 8 and AQE off), so AQE goes off and the
+        width follows the input — one partition per 4 MiB (the cluster
+        ceiling, 32, spread over the threshold), at least 1, at most one
+        per core: ``clamp(ceil(bytes * 32 / threshold), 1, cores)``.
+        sf0.001 and sf0.01 run at 1, where a graph superstep is one
+        stage of one task (edges and state are both ``SinglePartition``,
+        so the join and the message aggregate need no Exchange); sf0.1
+        runs at 4 on 4 cores. The width must grow with the input: at
+        sf0.1 on 4 vCPU a fixed 1 was slower than 4 and 8 (pagerank
+        3.4–3.8 s vs 2.2–2.8 s and 2.6–3.1 s; q25 2.0–2.1 s vs 1.1–1.4 s
+        and 1.4–1.6 s).
+
+        Above the threshold the defaults stand — AQE coalescing/skew-
+        splitting is the win once shuffles carry real volume, and the
+        derived width meets the cluster ceiling there. The line was
+        2 GiB through round 4; SCALECHECK's sf1 run (172 MiB input)
+        showed that is too coarse: the graph self-joins shuffle tens of
         millions of rows there, and 8 fixed partitions starved 32 cores
         (q24 48 s latency-mode vs 25 s cluster posture, q25 39 s vs
-        25 s). 128 MiB keeps the measured latency win where it was
-        measured and returns to cluster posture as soon as shuffle
-        volume can dominate barriers.
+        25 s).
         """
         _INTERACTIVE_SESSIONS.discard(self.spark._jsparkSession)
-        if self.input_bytes() < interactive_threshold:
+        nbytes = self.input_bytes()
+        if nbytes < interactive_threshold:
             _INTERACTIVE_SESSIONS.add(self.spark._jsparkSession)
+            ceiling = int(_DEFAULT_CONF["spark.sql.shuffle.partitions"])
+            width = min(max(1, -(-nbytes * ceiling // interactive_threshold)),
+                        self.spark.sparkContext.defaultParallelism)
             self.spark.conf.set("spark.sql.adaptive.enabled", "false")
-            self.spark.conf.set(
-                "spark.sql.shuffle.partitions",
-                os.environ.get("SPARK_GRAFT_LATENCY_PARTITIONS", "8"),
-            )
+            self.spark.conf.set("spark.sql.shuffle.partitions", str(width))
             # sub-GB cached tables: skip columnar-cache compression —
             # decompression on every cached scan costs more than the
             # memory it saves at this size (set before any persist()).

@@ -1459,22 +1459,46 @@ class Graph:
         """
         if not sources:
             raise ValueError("betweenness needs at least one source")
-        if source_batch is not None and source_batch < len(sources):
-            parts: DataFrame | None = None
+        if source_batch is None or source_batch >= len(sources):
+            dep, _ = self._brandes_dependencies(sources, max_depth)
+        else:
+            dep = None  # running per-vertex sum, a checkpoint
             for i in range(0, len(sources), source_batch):
-                bc = self.betweenness_centrality(
-                    sources[i:i + source_batch], max_depth=max_depth,
-                    scale=1.0).localCheckpoint(eager=True)
-                parts = bc if parts is None else (
-                    parts.unionByName(bc)
-                    .groupBy("id")
-                    .agg(F.sum("betweenness").alias("betweenness"))
-                    .localCheckpoint(eager=True)
-                )
-            return parts.select(
+                part, deltas = self._brandes_dependencies(
+                    sources[i:i + source_batch], max_depth)
+                if part is None:
+                    continue
+                summed = flat_checkpoint(
+                    (part if dep is None else dep.unionByName(part))
+                    .groupBy("v").agg(F.sum("dep").alias("dep")))
+                for ck in deltas + ([dep] if dep is not None else []):
+                    _release(ck)
+                dep = summed
+        if dep is None:  # no source reached anything
+            return self.vertices.select(
+                "id", F.lit(0.0).alias("betweenness")
+            )
+        bc = dep.groupBy(F.col("v").alias("id")).agg(
+            F.sum("dep").alias("dep")
+        )
+        return (
+            self.vertices.select("id")
+            .join(bc, "id", "left")
+            .select(
                 "id",
-                (F.col("betweenness") * F.lit(scale))
-                .alias("betweenness"))
+                (F.coalesce("dep", F.lit(0.0)) * F.lit(scale))
+                .alias("betweenness"),
+            )
+        )
+
+    def _brandes_dependencies(self, sources: list[int], max_depth: int
+                              ) -> tuple[DataFrame | None, list[DataFrame]]:
+        """Both Brandes phases for ``sources`` → ``(dep, deltas)``:
+        ``dep`` holds (v, dep) rows, one per (source, non-source
+        vertex) pair reached, to be summed per vertex (None when no
+        source reached anything); ``deltas`` are the checkpoints
+        ``dep`` reads, to release once it has been consumed. Every
+        other checkpoint is released before returning."""
         e = self.edges.select("src", "dst").distinct().persist()
         init = (
             self.vertices.select("id")
@@ -1511,6 +1535,7 @@ class Graph:
             frontier = nxt
 
         acc: DataFrame | None = None
+        deltas: list[DataFrame] = []
         delta = levels[-1].withColumn("delta", F.lit(0.0))
         for d in range(len(levels) - 2, -1, -1):
             cur = levels[d]
@@ -1542,27 +1567,13 @@ class Graph:
             if d > 0:  # depth-0 rows are the sources themselves
                 part = delta.select("v", F.col("delta").alias("dep"))
                 acc = part if acc is None else acc.unionByName(part)
+                deltas.append(delta)
             else:
                 spent.append(delta)
         e.unpersist()
         for ck in spent + levels:  # the result reads only the deltas
             _release(ck)
-        if acc is None:  # no source reached anything
-            return self.vertices.select(
-                "id", F.lit(0.0).alias("betweenness")
-            )
-        bc = acc.groupBy(F.col("v").alias("id")).agg(
-            F.sum("dep").alias("dep")
-        )
-        return (
-            self.vertices.select("id")
-            .join(bc, "id", "left")
-            .select(
-                "id",
-                (F.coalesce("dep", F.lit(0.0)) * F.lit(scale))
-                .alias("betweenness"),
-            )
-        )
+        return acc, deltas
 
     def betweenness_sampled(self, eps: float = 0.05, delta: float = 0.1,
                             max_depth: int = 20,

@@ -221,13 +221,36 @@ def test_tune_for_data_size_small_input(spark):
         # sf0.001 is far below the interactive threshold → latency mode
         eng.tune_for_data_size()
         assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
         # above-threshold inputs leave the cluster-scale defaults alone
         spark.conf.set("spark.sql.adaptive.enabled", "true")
         spark.conf.set("spark.sql.shuffle.partitions", "32")
         eng.tune_for_data_size(interactive_threshold=nbytes)  # nbytes !< nbytes
         assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
         assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", before_aqe)
+        spark.conf.set("spark.sql.shuffle.partitions", before_sp)
+
+
+def test_tuned_width_follows_the_input(spark):
+    """The interactive width is one shuffle partition per 4 MiB of input
+    (the cluster ceiling of 32 spread over the threshold), at least 1
+    and at most one per core."""
+    eng = Engine(spark, SF_DIR, register_views=False)
+    nbytes = eng.input_bytes()
+    cores = spark.sparkContext.defaultParallelism
+    assert cores >= 2
+    before_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    before_sp = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        eng.tune_for_data_size()  # 0.5 MiB: under one 4 MiB share
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
+        eng.tune_for_data_size(interactive_threshold=nbytes + 1)
+        assert spark.conf.get("spark.sql.shuffle.partitions") \
+            == str(min(32, cores))
+        eng.tune_for_data_size(interactive_threshold=nbytes * 16)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "2"
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", before_aqe)
         spark.conf.set("spark.sql.shuffle.partitions", before_sp)

@@ -9,6 +9,7 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__ as entrymod
+from puregraphdb_spark.engine import _DEFAULT_CONF
 from puregraphdb_spark.plans import (
     broadcast_join_count, count_exchanges, has_pushed_filter,
 )
@@ -164,6 +165,11 @@ def test_final_sort_paths(spark):
     assert "rangepartitioning" not in p.lower()
 
     saved = dict(registry._SIZES)
+    # at 10 TiB the session runs at the cluster ceiling, not at a tuned
+    # sf0.001 width of 1 (where one range partition needs no exchange)
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions",
+                   _DEFAULT_CONF["spark.sql.shuffle.partitions"])
     try:
         for t in registry.TABLES:
             registry._SIZES[(SF_DIR, t)] = 10 << 40  # pretend 10 TiB
@@ -172,6 +178,7 @@ def test_final_sort_paths(spark):
     finally:
         registry._SIZES.clear()
         registry._SIZES.update(saved)
+        spark.conf.set("spark.sql.shuffle.partitions", width)
 
 
 def test_final_sort_emits_totally_ordered_rows(spark):

@@ -7,7 +7,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from puregraphdb_spark.engine import Engine
 from puregraphdb_spark.operators.graph import Graph
+from tests.conftest import SF_DIR
 
 LONG_MAX = (1 << 63) - 1
 
@@ -65,8 +67,9 @@ def _read_rdds(df) -> set[int]:
     lambda g: g.ktruss(3),
     lambda g: g.ktruss(3, local_finish_edges=0),
     lambda g: g.betweenness_centrality([1, 10]),
+    lambda g: g.betweenness_centrality([1, 2, 10], source_batch=1),
 ], ids=["pagerank", "cc", "lpa", "sssp", "kcore", "coreness", "ktruss",
-        "ktruss_distributed", "betweenness"])
+        "ktruss_distributed", "betweenness", "betweenness_batched"])
 def test_loop_leaves_only_the_returned_state_cached(spark, k4, algo):
     before = _persistent_rdds(spark)
     out = algo(k4)
@@ -107,6 +110,38 @@ def test_one_job_per_superstep(spark):
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
     jobs = len(sc.statusTracker().getJobIdsForGroup("pregel-one-job"))
     assert 1 + 10 <= jobs <= 1 + 10 + 1
+    assert out.filter(F.col("component") != 0).count() == 0
+
+
+def test_superstep_is_one_stage_at_width_one(spark):
+    """In the tuned posture on sf0.001 the shuffle width is 1: edges and
+    state are both one partition, so the join and the message aggregate
+    need no Exchange and every superstep after the first (which builds
+    the initial state) runs as one stage."""
+    g = _path(spark, 10)
+    sc = spark.sparkContext
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions",
+            "spark.sql.inMemoryColumnarStorage.compressed",
+            "spark.sql.constraintPropagation.enabled")
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    Engine(spark, SF_DIR, register_views=False).tune_for_data_size()
+    sc.setJobGroup("pregel-one-stage", "cc on a path, width 1")
+    try:
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
+        out = g.connected_components()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    tracker = sc.statusTracker()
+    stages = [len(tracker.getJobInfo(j).stageIds) for j in
+              sorted(tracker.getJobIdsForGroup("pregel-one-stage"))]
+    # the edge checkpoint, the first superstep, then nine more
+    assert len(stages) >= 11
+    assert stages[2:] == [1] * (len(stages) - 2), stages
     assert out.filter(F.col("component") != 0).count() == 0
 
 

@@ -125,6 +125,15 @@ class Arrivals:
                    for d in os.listdir(os.path.join(self.ckpt, "state", "0")))
 
 
+def tune_to_width_2(spark) -> None:
+    """The interactive posture at a batch width of 2, so that a state
+    width of 1 differs from it: a threshold of 16 times the input makes
+    ceil(bytes * 32 / threshold) = 2."""
+    eng = Engine(spark, SF_DIR, register_views=False)
+    eng.tune_for_data_size(interactive_threshold=eng.input_bytes() * 16)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "2"
+
+
 def managers(q) -> set[str]:
     """Classes of the checkpoint managers of ``q``'s offset, commit and
     file-source logs (the source keeps its log in a private field)."""
@@ -164,7 +173,7 @@ def assert_sink_equals_batch(spark, arr: Arrivals) -> None:
 def test_tuned_session_starts_with_one_state_partition(posture, events,
                                                        tmp_path):
     spark = posture
-    Engine(spark, SF_DIR, register_views=False).tune_for_data_size()
+    tune_to_width_2(spark)
     assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
     assert sw.state_partitions(spark) == 1
     arr = Arrivals(tmp_path)
@@ -173,7 +182,7 @@ def test_tuned_session_starts_with_one_state_partition(posture, events,
     assert arr.recorded_partitions(0) == 1
     assert arr.state_dirs() == 1
     # the batch side keeps the tuned width
-    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "2"
 
 
 def test_untuned_session_keeps_its_shuffle_width(posture, events,
@@ -200,12 +209,12 @@ def test_aqe_off_without_tuning_is_not_interactive(posture):
     spark.conf.set("spark.sql.shuffle.partitions", "6")
     assert not is_interactive(spark)
     assert sw.state_partitions(spark) == 6
-    eng.tune_for_data_size()
+    tune_to_width_2(spark)
     assert is_interactive(spark)
     assert sw.state_partitions(spark) == 1
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     assert not is_interactive(spark)
-    assert sw.state_partitions(spark) == 8
+    assert sw.state_partitions(spark) == 2
 
 
 def test_failed_start_restores_session_width(posture, events, tmp_path):
@@ -393,7 +402,7 @@ def test_restart_keeps_the_frozen_count(posture, events, tmp_path):
     arr.run(spark, exact_dedup_window)
     assert arr.recorded_partitions(0) == frozen
 
-    Engine(spark, SF_DIR, register_views=False).tune_for_data_size()
+    tune_to_width_2(spark)
     assert sw.state_partitions(spark) == 1
     arr.arrive(second.unionByName(first.limit(50)))  # 50 re-sent rows
     arr.flush(events)
@@ -403,7 +412,7 @@ def test_restart_keeps_the_frozen_count(posture, events, tmp_path):
     assert all(arr.recorded_partitions(b) == frozen
                for b in range(1, last + 1))
     assert arr.state_dirs() == frozen
-    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "2"
     assert_sink_equals_batch(spark, arr)
 
 
