@@ -244,9 +244,11 @@ class Engine:
         stage-barrier re-planning is pure scheduling latency (sf0.1,
         17 MiB: core-30 total 18.8 s with AQE and 32 partitions vs
         11.1 s with a fixed 8 and AQE off), so AQE goes off and the
-        width follows the input — one partition per 4 MiB (the cluster
-        ceiling, 32, spread over the threshold), at least 1, at most one
-        per core: ``clamp(ceil(bytes * 32 / threshold), 1, cores)``.
+        width follows the input — one partition per 4 MiB (32 shares of
+        the threshold, the default cluster ceiling), at least 1, at most
+        one per core: ``clamp(ceil(bytes * 32 / threshold), 1, cores)``.
+        The 32 is fixed: ``SPARK_GRAFT_SHUFFLE`` moves only the cluster
+        ceiling, not the width of small inputs.
         sf0.001 and sf0.01 run at 1, where a graph superstep is one
         stage of one task (edges and state are both ``SinglePartition``,
         so the join and the message aggregate need no Exchange); sf0.1
@@ -257,7 +259,7 @@ class Engine:
 
         Above the threshold the defaults stand — AQE coalescing/skew-
         splitting is the win once shuffles carry real volume, and the
-        derived width meets the cluster ceiling there. The line was
+        derived width meets the default cluster ceiling there. The line was
         2 GiB through round 4; SCALECHECK's sf1 run (172 MiB input)
         showed that is too coarse: the graph self-joins shuffle tens of
         millions of rows there, and 8 fixed partitions starved 32 cores
@@ -268,8 +270,10 @@ class Engine:
         nbytes = self.input_bytes()
         if nbytes < interactive_threshold:
             _INTERACTIVE_SESSIONS.add(self.spark._jsparkSession)
-            ceiling = int(_DEFAULT_CONF["spark.sql.shuffle.partitions"])
-            width = min(max(1, -(-nbytes * ceiling // interactive_threshold)),
+            # 32 shares of the threshold, the default cluster ceiling: a
+            # literal, so that a cluster's larger SPARK_GRAFT_SHUFFLE
+            # ceiling does not also widen small inputs
+            width = min(max(1, -(-nbytes * 32 // interactive_threshold)),
                         self.spark.sparkContext.defaultParallelism)
             self.spark.conf.set("spark.sql.adaptive.enabled", "false")
             self.spark.conf.set("spark.sql.shuffle.partitions", str(width))

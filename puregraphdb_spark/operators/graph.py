@@ -2082,6 +2082,15 @@ def count_triangles(canonical_edges: DataFrame,
                 F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("v"),
             )
         )
+    else:
+        # Broadcast path: the adjacency's one shuffle runs at full core
+        # width, not the (narrow, input-sized) session width — the
+        # collect_set and the intersect probe after it are the
+        # compute-bound stages, and a narrow width leaves cores idle
+        # (measured sf0.1: 1.33 s → 0.97 s at 8-wide agg on 32 cores;
+        # sf0.01 on 4 cores: 0.62 s at the session's width 1 → 0.55 s).
+        par = canonical_edges.sparkSession.sparkContext.defaultParallelism
+        canonical_edges = canonical_edges.repartition(par, "u")
     # collect_set both DEDUPS and groups in one shuffle — callers may
     # pass a raw (u<v) pair stream without a separate distinct().
     adj = canonical_edges.groupBy("u").agg(
@@ -2089,16 +2098,7 @@ def count_triangles(canonical_edges: DataFrame,
     )
     # The probe stream is the adjacency itself exploded: each (u, nu, v)
     # row IS a distinct edge and already carries N⁺(u) — no u-side join.
-    # Broadcast path: round-robin the |V|-row adjacency to full core
-    # width first — the intersect probe is the compute-bound stage, and
-    # inheriting the (narrow) agg width would leave cores idle; the
-    # round-robin also spreads heavy-adjacency vertices evenly
-    # (measured sf0.1: 1.33 s → 0.97 s at 8-wide agg on 32 cores).
-    probe_src = adj
-    if broadcast_adjacency:
-        par = canonical_edges.sparkSession.sparkContext.defaultParallelism
-        probe_src = adj.repartition(par)
-    probe = probe_src.select(
+    probe = adj.select(
         "u", F.col("nbrs").alias("nu"), F.explode("nbrs").alias("v")
     )
     av = adj.select(F.col("u").alias("a_v"), F.col("nbrs").alias("nv"))
@@ -2765,8 +2765,8 @@ def _co_supply_adjacency(spark: SparkSession, sf_dir: str,
                 F.col("l_suppkey").alias("s"))
     )
     adj = raw.groupBy("c").agg(F.sort_array(F.collect_set("s")).alias("ss"))
-    # compute-bound expansion: widen past the narrow agg output (the
-    # count_triangles round-robin rationale)
+    # compute-bound expansion: widen past the narrow agg output to the
+    # cores (as count_triangles widens its adjacency shuffle)
     return adj.repartition(spark.sparkContext.defaultParallelism)
 
 

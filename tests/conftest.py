@@ -29,6 +29,33 @@ def spark():
     yield s
 
 
+#: The session confs ``Engine.tune_for_data_size`` sets.
+TUNED_CONFS = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions",
+               "spark.sql.inMemoryColumnarStorage.compressed",
+               "spark.sql.constraintPropagation.enabled")
+
+
+@pytest.fixture
+def untuned_after(spark):
+    """The shared session, put back after the test as it was before:
+    for tests that tune it, directly or through the CLI's ``main()``.
+    The confs tuning sets are restored (unset if they were unset) and
+    the session leaves the interactive set unless it was in it, so later
+    modules keep the session's own posture."""
+    from puregraphdb_spark import engine
+
+    saved = {k: spark.conf.get(k, None) for k in TUNED_CONFS}
+    was_interactive = spark._jsparkSession in engine._INTERACTIVE_SESSIONS
+    yield spark
+    for k, v in saved.items():
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
+    if not was_interactive:
+        engine._INTERACTIVE_SESSIONS.discard(spark._jsparkSession)
+
+
 @pytest.fixture(scope="session")
 def oracle():
     con = duckdb.connect()

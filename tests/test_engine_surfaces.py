@@ -211,54 +211,44 @@ def test_bucketed_write_requires_table_name(spark):
         write_partitioned(nation, "/tmp/x", bucket_by=(4, ["n_nationkey"]))
 
 
-def test_tune_for_data_size_small_input(spark):
+def test_tune_for_data_size_small_input(untuned_after):
+    spark = untuned_after
     eng = Engine(spark, SF_DIR, register_views=False)
     nbytes = eng.input_bytes()
     assert nbytes > 0  # Hadoop FS resolution works on local paths
-    before_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    before_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        # sf0.001 is far below the interactive threshold → latency mode
-        eng.tune_for_data_size()
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
-        # above-threshold inputs leave the cluster-scale defaults alone
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-        eng.tune_for_data_size(interactive_threshold=nbytes)  # nbytes !< nbytes
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", before_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", before_sp)
+    # sf0.001 is far below the interactive threshold → latency mode
+    eng.tune_for_data_size()
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
+    # above-threshold inputs leave the cluster-scale defaults alone
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    eng.tune_for_data_size(interactive_threshold=nbytes)  # nbytes !< nbytes
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
 
 
-def test_tuned_width_follows_the_input(spark):
+def test_tuned_width_follows_the_input(untuned_after):
     """The interactive width is one shuffle partition per 4 MiB of input
-    (the cluster ceiling of 32 spread over the threshold), at least 1
-    and at most one per core."""
+    (32 shares of the threshold), at least 1 and at most one per core."""
+    spark = untuned_after
     eng = Engine(spark, SF_DIR, register_views=False)
     nbytes = eng.input_bytes()
     cores = spark.sparkContext.defaultParallelism
-    assert cores >= 2
-    before_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    before_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        eng.tune_for_data_size()  # 0.5 MiB: under one 4 MiB share
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
-        eng.tune_for_data_size(interactive_threshold=nbytes + 1)
-        assert spark.conf.get("spark.sql.shuffle.partitions") \
-            == str(min(32, cores))
-        eng.tune_for_data_size(interactive_threshold=nbytes * 16)
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "2"
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", before_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", before_sp)
+    eng.tune_for_data_size()  # 0.5 MiB: under one 4 MiB share
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
+    eng.tune_for_data_size(interactive_threshold=nbytes + 1)
+    assert spark.conf.get("spark.sql.shuffle.partitions") \
+        == str(min(32, cores))
+    eng.tune_for_data_size(interactive_threshold=nbytes * 16)
+    assert spark.conf.get("spark.sql.shuffle.partitions") \
+        == str(min(2, cores))
 
 
-def test_cli_door_runs_sql_and_call(spark, capsys):
+def test_cli_door_runs_sql_and_call(untuned_after, capsys):
     """CLI main(): SQL and CALL statements over a data dir, CSV out.
-    Runs in-process against the shared session (getOrCreate reuses it)."""
+    Runs in-process against the shared session (getOrCreate reuses it),
+    which ``main()`` tunes; the fixture undoes that for later tests."""
     from puregraphdb_spark.__main__ import main
 
     rc = main([

@@ -9,7 +9,6 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__ as entrymod
-from puregraphdb_spark.engine import _DEFAULT_CONF
 from puregraphdb_spark.plans import (
     broadcast_join_count, count_exchanges, has_pushed_filter,
 )
@@ -64,10 +63,10 @@ def test_q16_part_broadcasts(q):
 
 def test_q24_single_wide_shuffle(q):
     df = q["q24_graph_triangles"]
-    # co-located self-join (no shuffle) -> collect_set agg (1 wide
-    # exchange) -> core-width round-robin of the |V|-row adjacency
-    # (cheap, widens the compute-bound intersect probe) -> broadcast
-    # adjacency probe; plus the 2 load-time repartitions at most
+    # co-located self-join (no shuffle) -> core-width hash exchange on
+    # u feeding the collect_set agg (1 wide exchange; it widens the
+    # compute-bound agg and intersect probe) -> broadcast adjacency
+    # probe; plus the 2 load-time repartitions at most
     assert count_exchanges(df) <= 4
     assert broadcast_join_count(df) >= 1
 
@@ -165,11 +164,6 @@ def test_final_sort_paths(spark):
     assert "rangepartitioning" not in p.lower()
 
     saved = dict(registry._SIZES)
-    # at 10 TiB the session runs at the cluster ceiling, not at a tuned
-    # sf0.001 width of 1 (where one range partition needs no exchange)
-    width = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-                   _DEFAULT_CONF["spark.sql.shuffle.partitions"])
     try:
         for t in registry.TABLES:
             registry._SIZES[(SF_DIR, t)] = 10 << 40  # pretend 10 TiB
@@ -178,7 +172,6 @@ def test_final_sort_paths(spark):
     finally:
         registry._SIZES.clear()
         registry._SIZES.update(saved)
-        spark.conf.set("spark.sql.shuffle.partitions", width)
 
 
 def test_final_sort_emits_totally_ordered_rows(spark):

@@ -10,8 +10,6 @@ from __future__ import annotations
 import os
 import re
 
-from puregraphdb_spark.engine import _DEFAULT_CONF
-
 
 def test_every_query_has_a_plans_row():
     import __spark_entry__ as entrymod
@@ -77,13 +75,8 @@ def test_signature_plan_shapes_match_plans_doc(spark):
         )
     }
     qs = entrymod.queries()
-    # tools/plan_audit.py's posture: AQE off at the session default
-    # width (a tuned sf0.001 session's width of 1 elides exchanges)
     aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
-    width_before = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions",
-                   _DEFAULT_CONF["spark.sql.shuffle.partitions"])
     try:
         mismatches = []
         for name in SIGNATURE:
@@ -98,4 +91,3 @@ def test_signature_plan_shapes_match_plans_doc(spark):
         )
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
-        spark.conf.set("spark.sql.shuffle.partitions", width_before)

@@ -113,29 +113,21 @@ def test_one_job_per_superstep(spark):
     assert out.filter(F.col("component") != 0).count() == 0
 
 
-def test_superstep_is_one_stage_at_width_one(spark):
+def test_superstep_is_one_stage_at_width_one(untuned_after):
     """In the tuned posture on sf0.001 the shuffle width is 1: edges and
     state are both one partition, so the join and the message aggregate
     need no Exchange and every superstep after the first (which builds
     the initial state) runs as one stage."""
+    spark = untuned_after
     g = _path(spark, 10)
     sc = spark.sparkContext
-    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions",
-            "spark.sql.inMemoryColumnarStorage.compressed",
-            "spark.sql.constraintPropagation.enabled")
-    saved = {k: spark.conf.get(k, None) for k in keys}
     Engine(spark, SF_DIR, register_views=False).tune_for_data_size()
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
     sc.setJobGroup("pregel-one-stage", "cc on a path, width 1")
     try:
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
         out = g.connected_components()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     tracker = sc.statusTracker()
     stages = [len(tracker.getJobInfo(j).stageIds) for j in
               sorted(tracker.getJobIdsForGroup("pregel-one-stage"))]

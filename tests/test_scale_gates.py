@@ -83,22 +83,17 @@ def test_final_sort_row_preserving_flips_at_one_eighth(spark, sized):
     )
 
 
-def test_tune_for_data_size_flips_at_threshold(spark):
+def test_tune_for_data_size_flips_at_threshold(untuned_after):
     from puregraphdb_spark.engine import Engine
 
+    spark = untuned_after
     eng = Engine(spark, SF_DIR, register_views=False)
     inp = eng.input_bytes()
-    saved = spark.conf.get("spark.sql.adaptive.enabled")
-    saved_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        eng.tune_for_data_size(interactive_threshold=inp)  # input == thr
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-        eng.tune_for_data_size(interactive_threshold=inp + 1)
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", saved)
-        spark.conf.set("spark.sql.shuffle.partitions", saved_sp)
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    eng.tune_for_data_size(interactive_threshold=inp)  # input == thr
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    eng.tune_for_data_size(interactive_threshold=inp + 1)
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
 
 
 def test_q24_adjacency_gate_flips_at_32mib(spark, sized):

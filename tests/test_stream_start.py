@@ -128,7 +128,8 @@ class Arrivals:
 def tune_to_width_2(spark) -> None:
     """The interactive posture at a batch width of 2, so that a state
     width of 1 differs from it: a threshold of 16 times the input makes
-    ceil(bytes * 32 / threshold) = 2."""
+    ceil(bytes * 32 / threshold) = 2 (given two cores, as the tier-1
+    session's local[nproc] has)."""
     eng = Engine(spark, SF_DIR, register_views=False)
     eng.tune_for_data_size(interactive_threshold=eng.input_bytes() * 16)
     assert spark.conf.get("spark.sql.shuffle.partitions") == "2"
