@@ -64,11 +64,3 @@ def unscaled_sum_round(col: Column, scale: int = 2, grid: int = 4) -> Column:
     m = (th - F.pmod(th, F.lit(d))) / F.lit(float(d))
     return (m / F.lit(float(10 ** scale))).cast("double")
 
-
-def oracle_round(expr: str, scale: int = 2, grid: int = 4) -> str:
-    """The DuckDB-side spelling of decimal_round (keep in lockstep)."""
-    return f"round(cast({expr} as decimal(28,{grid})), {scale})::DOUBLE"
-
-
-def oracle_sum_round(expr: str, scale: int = 2, grid: int = 4) -> str:
-    return f"round(sum(cast({expr} as decimal(28,{grid}))), {scale})::DOUBLE"

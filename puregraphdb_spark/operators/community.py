@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from puregraphdb_spark.functions.numeric import decimal_round
+from puregraphdb_spark.operators.graph import _release
 
 _EPS = 1e-12
 
@@ -353,6 +354,7 @@ def louvain(edges: DataFrame, weight_col: str | None = None,
     global_assign: DataFrame | None = None
     history: list[float] = []
     q_global = None
+    first_sym = sym  # a checkpoint; later levels' sym are parquet reads
     try:
         for _level in range(max_levels):
             deg = _level_degrees(sym, selfw).localCheckpoint(eager=True)
@@ -370,38 +372,46 @@ def louvain(edges: DataFrame, weight_col: str | None = None,
                 cand = cand.localCheckpoint(eager=True)
                 q_new = _level_modularity(sym, selfw, cand, m)
                 if q_new > q + _EPS:
+                    _release(state)
                     state = cand
                     q = q_new
                     history.append(q)
                     fails = 0
                     moved_any = True
                 else:
+                    _release(cand)
                     fails += 1
                 sweep += 1
+            _release(deg)
             # compose this level's mapping into the global assignment
             if global_assign is None:
                 global_assign = state
             else:
                 lvl = state.select(F.col("id").alias("community"),
                                    F.col("community").alias("new_c"))
+                superseded = global_assign
                 global_assign = (
                     global_assign.join(lvl, "community")
                     .select("id", F.col("new_c").alias("community"))
                     .localCheckpoint(eager=True)
                 )
-            if not moved_any or (q_global is not None and q <= q_global + _EPS):
-                break
+                _release(superseded)
+            # the last level does not contract: that would be a full
+            # distributed write/read of the community graph that
+            # nothing reads (round-7 review finding #5)
+            last = (not moved_any or _level == max_levels - 1
+                    or (q_global is not None and q <= q_global + _EPS))
             q_global = q
-            if _level == max_levels - 1:
-                # last level: contracting would be a full distributed
-                # write/read of the community graph that nothing reads
-                # (round-7 review finding #5)
+            if not last:
+                sym_raw, selfw_raw = _contract(sym, selfw, state)
+                sym = _roundtrip(sym_raw, f"sym-{_level + 1}")
+                selfw = _roundtrip(selfw_raw, f"selfw-{_level + 1}")
+                ids = sym.select(F.col("src").alias("id")).distinct(
+                ).unionByName(selfw.select("id")).distinct()
+            if state is not global_assign:
+                _release(state)
+            if last:
                 break
-            sym_raw, selfw_raw = _contract(sym, selfw, state)
-            sym = _roundtrip(sym_raw, f"sym-{_level + 1}")
-            selfw = _roundtrip(selfw_raw, f"selfw-{_level + 1}")
-            ids = sym.select(F.col("src").alias("id")).distinct().unionByName(
-                selfw.select("id")).distinct()
 
         # stable labels: community := min member id
         labels = global_assign.groupBy("community").agg(
@@ -411,6 +421,8 @@ def louvain(edges: DataFrame, weight_col: str | None = None,
             .select("id", F.col("label").alias("community"))
             .localCheckpoint(eager=True)
         )
+        _release(global_assign)
+        _release(first_sym)
     finally:
         # remove the level round-trip files (ours even under a caller
         # work_dir — the uuid subdir) on success AND on failure; on

@@ -3117,16 +3117,16 @@ def temporal_reach(edges: DataFrame, sources: DataFrame,
     and the EARLIEST time any time-respecting journey arrives there
     (sources themselves are not emitted unless re-reached by edges).
 
-    Scale: k rounds of (frontier ⋈ edges on src) + min-combine — the
-    Pregel earliest-arrival shape; the frontier carries ONE scalar per
-    vertex and messages partial-aggregate map-side. Label-correcting:
-    a later round can LOWER an arrival (multi-hop journey through an
-    early edge chain), so state merges by min each round.
+    Scale: at most k supersteps of ``Graph.pregel``, each (state ⋈
+    edges on src) + min-combine — the Pregel earliest-arrival shape;
+    the state carries ONE scalar per vertex and messages
+    partial-aggregate map-side. Label-correcting: a later superstep
+    can LOWER an arrival (multi-hop journey through an early edge
+    chain), so state merges by min. The loop stops after the first
+    superstep in which no arrival appeared or went down: the rounds
+    are then at a fixpoint, so the rows equal those of k rounds.
     """
-    state = sources.select(
-        F.col("id"), F.lit(None).cast("double").alias("arrival"))
-    e = edges.select("src", "dst", F.col("ts").cast("double").alias("ts"))
-    for _ in range(k):
+    def step(e: DataFrame, state: DataFrame) -> DataFrame:
         msgs = (
             e.join(state, e.src == state.id)
             .filter(F.col("arrival").isNull()
@@ -3136,8 +3136,9 @@ def temporal_reach(edges: DataFrame, sources: DataFrame,
             .groupBy("id")
             .agg(F.min("cand").alias("cand"))
         )
-        state = (
-            state.join(msgs, "id", "full_outer")
+        return (
+            state.withColumn("__had", F.lit(True))
+            .join(msgs, "id", "full_outer")
             .select(
                 "id",
                 F.when(
@@ -3147,7 +3148,19 @@ def temporal_reach(edges: DataFrame, sources: DataFrame,
                 ).otherwise(
                     F.least("arrival", "cand")
                 ).alias("arrival"),
+                F.col("arrival").alias("__old"),
+                "__had",
             )
         )
-        state = state.localCheckpoint(eager=False)
+
+    e = edges.select("src", "dst", F.col("ts").cast("double").alias("ts"))
+    state = Graph(sources, e).pregel(
+        e,
+        lambda _: sources.select(
+            "id", F.lit(None).cast("double").alias("arrival")),
+        step,
+        changed=F.col("__had").isNull()
+        | ~F.col("arrival").eqNullSafe(F.col("__old")),
+        max_iter=k,
+    )
     return state.filter(F.col("arrival").isNotNull())

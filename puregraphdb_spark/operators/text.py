@@ -32,21 +32,6 @@ _STOPWORDS = {
 _BPE_SPLIT = r"(?=[^\w\s])|(?<=[^\w\s])|\s+"
 
 
-def language_scores(text_col: str | F.Column) -> F.Column:
-    """Map language → stopword-hit count (the raw n-gram evidence)."""
-    toks = tokens(text_col)
-    return F.map_from_arrays(
-        F.array(*[F.lit(lang) for lang in _STOPWORDS]),
-        F.array(*[
-            F.size(F.array_intersect(
-                F.array_distinct(toks),
-                F.array(*[F.lit(w) for w in words]),
-            ))
-            for words in _STOPWORDS.values()
-        ]),
-    )
-
-
 def detect_language(text_col: str | F.Column | None = None, *,
                     dtoks_col: F.Column | None = None) -> F.Column:
     """argmax language by stopword hits; 'und' (undetermined) when no

@@ -68,7 +68,7 @@ def _scan_partitions(spark: SparkSession) -> int:
         par = min(par, int(spark.conf.get("spark.sql.shuffle.partitions")))
     except (TypeError, ValueError):
         pass  # non-numeric conf (foreign session) → cores-wide default
-    return int(os.environ.get("SPARK_GRAFT_SCAN_PARTITIONS", par))
+    return par
 
 
 def load_table(spark: SparkSession, data_dir: str, name: str) -> DataFrame:

@@ -1,14 +1,14 @@
 """Shared SQL text fragments composed into more than one query.
 
 ADVICE r12: q163's oracle duplicated q160's entire scored-relation
-SQL verbatim (and again in the Spark-dialect twins), so four copies
-of the bigram-model CTE chain had to stay byte-identical — an edit to
-one would silently decouple q163's selection curve from q160's
-scores. The chain now lives HERE once per dialect and is composed
-into both queries in both dialects; the `scored` CTE carries the
-superset of columns (num/den for q160's micro average, n_trans/score
-for both) and each consumer projects what it needs — unused CTE
-columns are pruned by either engine's optimizer.
+SQL verbatim, so the copies of the bigram-model CTE chain had to stay
+byte-identical — an edit to one would silently decouple q163's
+selection curve from q160's scores. The chain now lives HERE once and
+is composed into both oracles (the SQL door derives their Spark text
+with ``sql_library.to_spark``); the `scored` CTE carries the superset
+of columns (num/den for q160's micro average, n_trans/score for both)
+and each consumer projects what it needs — unused CTE columns are
+pruned by either engine's optimizer.
 
 The fragment ends after the closing paren of `scored as (...)`: q160
 appends its final `select`; q163 appends `, thr as (...) select`.
@@ -17,11 +17,11 @@ appends its final `select`; q163 appends `, thr as (...) select`.
 # ----------------------------------------------------------------- #
 # Synthesized multimodal manifest (q168 asset inventory + q170
 # payload dedup): the CTE mirror of operators/multimodal.py
-# _doc_asset_manifest — one copy per dialect, composed into both
-# oracles so the plant can never drift between family members.
-# DuckDB has no md5(BLOB) (found at the q168 gate), so the payload
-# stays VARCHAR there (same UTF-8 bytes; Spark hashes the cast
-# binary) — consumers call md5(payload_text) / octet_length(encode()).
+# _doc_asset_manifest — one copy, composed into both oracles (their
+# Spark text is derived by sql_library.to_spark) so the plant can
+# never drift between family members. DuckDB has no md5(BLOB) (found
+# at the q168 gate), so the payload stays VARCHAR (the same UTF-8
+# bytes) — consumers call md5(payload_text) / octet_length(encode()).
 # ----------------------------------------------------------------- #
 
 ASSET_MANIFEST_CTE_DUCKDB = """\
@@ -37,22 +37,6 @@ with manifest as (
                                         cast(doc_id % 3 as string))
                             else text end as payload_text
                 from documents)"""
-
-ASSET_MANIFEST_CTE_SPARKSQL = """\
-with manifest as (
-            select doc_id as asset_id,
-                   element_at(array('image','audio','video'),
-                              cast(doc_id % 3 + 1 as int)) as modality,
-                   element_at(array('image/png','audio/wav',
-                                    'video/mp4'),
-                              cast(doc_id % 3 + 1 as int))
-                     as media_type,
-                   case when doc_id % 13 = 0 then null
-                        when doc_id % 37 = 0
-                        then concat('shared-asset-',
-                                    cast(doc_id % 3 as string))
-                        else text end as payload_text
-            from documents)"""
 
 
 # ----------------------------------------------------------------- #
@@ -272,8 +256,8 @@ with planted as (
             from feat)"""
 
 
-# DuckDB dialect: list_filter/string_split + unnest(generate_series)
-# bigram formation (1-based list indexing).
+# list_filter/string_split + unnest(generate_series) bigram formation
+# (1-based list indexing).
 LM_SCORED_CTES_DUCKDB = """\
 with planted as (
                 select doc_id, source,
@@ -312,50 +296,6 @@ with planted as (
                          / cast(sum(m * cu) as double) as score
                 from per_doc_bg join model using (w1, w2)
                 group by 1, 2)"""
-
-# Spark SQL dialect: filter/split + explode(transform(slice))
-# bigram formation (0-based array indexing inside the lambda).
-LM_SCORED_CTES_SPARKSQL = """\
-with planted as (
-            select doc_id, source,
-                   case when doc_id % 41 = 0
-                        then concat(text, ' zq',
-                                    cast(doc_id % 7 as string),
-                                    ' xv', cast(doc_id % 5 as string))
-                        else text end as text
-            from documents),
-        tok as (
-            select doc_id, source,
-                   filter(split(lower(text), ' '), t -> t != '')
-                     as toks
-            from planted),
-        bg as (
-            select doc_id, source, bgs.w1 as w1, bgs.w2 as w2
-            from (select doc_id, source,
-                         explode(transform(
-                             slice(toks, 1, size(toks) - 1),
-                             (w, i) -> struct(w as w1,
-                                              toks[i + 1] as w2)))
-                           as bgs
-                  from tok where size(toks) >= 2)),
-        per_doc_bg as (
-            select doc_id, source, w1, w2,
-                   cast(count(*) as bigint) as m
-            from bg group by 1, 2, 3, 4),
-        model as (
-            select w1, w2, cast(sum(m) as bigint) as cb,
-                   cast(sum(sum(m)) over (partition by w1)
-                     as bigint) as cu
-            from per_doc_bg group by w1, w2),
-        scored as (
-            select doc_id, source,
-                   cast(sum(m * cb) as bigint) as num,
-                   cast(sum(m * cu) as bigint) as den,
-                   cast(sum(m) as bigint) as n_trans,
-                   cast(sum(m * cb) as double)
-                     / cast(sum(m * cu) as double) as score
-            from per_doc_bg join model using (w1, w2)
-            group by 1, 2)"""
 
 
 # Per-doc langid prediction (round 14, shared by q182's oracle; the

@@ -5,15 +5,20 @@ surface with plain SQL strings, not just the DataFrame and CALL doors.
 One SQL text per query: for every name in ``DERIVED`` the Spark text is
 ``to_spark`` of the oracle text (``__spark_entry__.oracle_sql``).
 ``HAND_WRITTEN`` keeps the rest, which differ in real dialect features:
-``time_bucket``, ASOF JOIN, ``list_sum``, ``isodow``, 1-based ``l[i]``
-indexing, alias use in WHERE, two-argument ``grouping`` and the like.
-No name is in both.
+``time_bucket``, ASOF JOIN, ``list_sum``, ``isodow``,
+``generate_subscripts``, ``list_cosine_similarity``, three-argument
+``date_diff``, two-argument ``grouping`` and the like. No name is in
+both.
 
-The rule table's contract: ``to_spark`` renames functions and rewrites
-a few forms outside single-quoted literals and comments, and touches
-nothing else. Each rule says when it is exact; where that condition can
-be read from the text and fails, ``to_spark`` raises ``ValueError``
-rather than return text that could compute something else.
+The rule table's contract: ``to_spark`` renames functions and types,
+rewrites list literals, 1-based ``x[i]`` indexes, ``x[a:b]`` slices,
+``//``, FROM-list ``unnest`` and a few call forms, outside single-quoted
+literals and comments, and touches nothing else. Each rule says when it
+is exact; where that condition can be read from the text and fails,
+``to_spark`` raises ``ValueError`` rather than return text that could
+compute something else. Where it can only be read from the data (an
+index out of range, a slice that runs backwards), the Spark text raises
+at run time rather than return a different value.
 
 Every entry is parity-tested bit-for-bit against its DataFrame
 implementation (tests/test_sql_library.py), and DuckDB still runs the
@@ -29,37 +34,51 @@ import re
 
 from __spark_entry__ import oracle_sql
 from puregraphdb_spark.sql_fragments import (
-    ASSET_MANIFEST_CTE_SPARKSQL,
     LANGID_PRED_CTE_SPARKSQL,
-    LM_SCORED_CTES_SPARKSQL,
     TEXT_PROFILE_CTES_SPARKSQL,
 )
 
 #: DuckDB function -> Spark function; each comment says when it is exact
 _RENAMES = {
     "len": "size",  # on lists (on a string DuckDB's len is its length)
-    "unnest": "explode",  # in a select list: one row per element
+    "unnest": "explode",  # one row per element (`lateral` in a FROM list)
     "list_filter": "filter",  # with one-parameter lambdas
     "list_transform": "transform",  # one-parameter lambdas (2nd is 1-based)
     "list_distinct": "array_distinct",  # where counted: order, NULLs differ
     "list_intersect": "array_intersect",  # where counted: order differs
     "list_max": "array_max",  # on lists without NULLs
+    "list_min": "array_min",  # always: both skip NULLs
     "list_sort": "array_sort",  # on lists without NULLs
+    "array_to_string": "array_join",  # always: both skip NULLs
     "epoch_us": "unix_micros",  # on TIMESTAMP (the Engine reads it as UTC)
     "quantile_cont": "percentile",  # always: both interpolate linearly
     "json_extract_string": "get_json_object",  # `$.key` to a scalar
     "list": "collect_list",  # always (DuckDB's inline ORDER BY fails)
     "arg_min": "min_by",  # always (ties pick an arbitrary row in both)
 }
+#: DuckDB type -> Spark type
+_TYPES = {
+    "varchar": "string",  # always
+    "hugeint": "decimal(38,0)",  # below 10^38 (above, Spark raises: ANSI)
+}
 #: the calls rewritten with their arguments, by ``_form``
-_FORMS = ("string_split", "list_slice", "regexp_replace", "generate_series")
+_FORMS = ("string_split", "list_slice", "regexp_replace", "generate_series",
+          "encode")
+#: words after which a `[` opens a list literal, not an index
+_KEYWORDS = {"select", "distinct", "all", "when", "then", "else", "and",
+             "or", "not", "in", "is", "as", "on", "by", "where", "having"}
 
 #: held out of the rewrite: single-quoted literals and `--` comments
 _HELD = re.compile(r"'(?:[^']|'')*'|--[^\n]*")
 _HOLE = re.compile(r"\x00(\d+)\x00")
-#: what the rewrite acts on: a call, a `[`, `//` or the type `varchar`
-_TOKEN = re.compile(r"\b([a-z_]+)\s*\(|\[|//|\bvarchar\b", re.I)
+#: what the rewrite acts on: a call, a `[`, `//` or a type of ``_TYPES``
+_TOKEN = re.compile(r"\b([a-z_]+)\s*\(|\[|//|\b(?:%s)\b" % "|".join(_TYPES),
+                    re.I)
 _DEPTH = {"(": 1, "[": 1, ")": -1, "]": -1}
+#: what separates arguments, and a slice's bounds (not a `::` cast)
+_COMMA, _COLON = re.compile(","), re.compile(r"(?<!:):(?!:)")
+#: what follows the arguments of an `unnest` in a FROM list
+_TABLE_ALIAS = re.compile(r"\s*as\s+\w+\s*\(", re.I)
 
 
 def to_spark(duckdb_sql: str) -> str:
@@ -80,22 +99,40 @@ def _rewrite(sql: str, held: list[str]) -> str:
         token, name = m.group(0).lower(), (m.group(1) or "").lower()
         if token == "//":  # exact on integers: both truncate toward 0
             out.append(" div ")
-        elif token == "varchar":  # always, as a type name
-            out.append("string")
-        elif token == "[":
-            # a `[` after a name, `)` or `]` indexes: 1-based in DuckDB,
-            # 0-based in Spark; any other is a list literal (always exact)
-            if re.search(r"[\w)\]\x00]\s*$", sql[:m.start()]):
-                raise ValueError("1-based list index: " + _show(
-                    sql[max(0, m.start() - 20):pos], held))
+        elif token in _TYPES:
+            out.append(_TYPES[token])
+        elif token == "[" and not _indexes(sql[:m.start()]):
+            # a list literal (always exact)
             end, _ = _close(sql, m.start())
             out.append(f"array({_rewrite(sql[pos:end], held)})")
+            pos = end + 1
+        elif token == "[":
+            end, parts = _close(sql, m.start(), _COLON)
+            done = "".join(out)
+            start = _operand(done, held)
+            out, x = [done[:start]], done[start:].strip()
+            parts = [_rewrite(p, held).strip() for p in parts]
+            if parts == [""]:  # `T[]` as a type (always)
+                out.append(f"array<{x.lower()}>")
+            elif len(parts) == 1:
+                # 1-based in both; where DuckDB gives NULL (index out of
+                # range or 0, a string operand) Spark gives NULL or raises
+                out.append(f"element_at({x}, cast({parts[0]} as int))")
+            elif len(parts) == 2:
+                out.append(_slice(x, *parts))
+            else:
+                raise ValueError("no exact Spark form: "
+                                 + _show(x + sql[m.start():end + 1], held))
             pos = end + 1
         elif name in _FORMS:
             end, args = _close(sql, pos - 1)
             out.append(_form(name, [_rewrite(a, held) for a in args], held))
             pos = end + 1
         else:
+            # a FROM-list `unnest(x) as g(c)` joins laterally (always exact)
+            if name == "unnest" and _TABLE_ALIAS.match(
+                    sql, _close(sql, pos - 1)[0] + 1):
+                out.append("lateral ")
             out.append(_RENAMES[name] + "(" if name in _RENAMES
                        else m.group(0))
     return "".join(out) + sql[pos:]
@@ -112,6 +149,8 @@ def _form(name: str, args: list[str], held: list[str]) -> str:
     # exact from begin 1 (DuckDB's 3rd argument is an end, Spark's a length)
     if name == "list_slice" and n == 3 and args[1].strip() == "1":
         return f"slice({joined})"
+    if name == "list_slice" and n == 3:
+        return _slice(*(a.strip() for a in args))
     # with 'g' (else DuckDB replaces once), for patterns RE2 and Java read alike
     if name == "regexp_replace" and n == 4 and lit[3] == "'g'":
         return f"regexp_replace({','.join(args[:3])})"
@@ -122,19 +161,56 @@ def _form(name: str, args: list[str], held: list[str]) -> str:
     # exact when the step runs from start toward stop (else Spark raises)
     if name == "generate_series" and n == 3:
         return f"sequence({joined})"
+    # always: DuckDB's one-argument encode is UTF-8
+    if name == "encode" and n == 1:
+        return f"encode({joined}, 'UTF-8')"
     raise ValueError("no exact Spark form: "
                      + _show(f"{name}({joined})", held))
 
 
-def _close(sql: str, start: int) -> tuple[int, list[str]]:
+def _slice(x: str, a: str, b: str) -> str:
+    """DuckDB's ``x[a:b]`` (``list_slice(x, a, b)``): exact where
+    ``a >= 1`` and ``b >= a - 1``, and raises elsewhere (DuckDB reads a
+    begin of 0 as 1 and counts a negative one from the end, and is
+    empty where ``b < a - 1``, where Spark's length is negative)."""
+    return (f"if(({a}) >= 1 and ({b}) >= ({a}) - 1, "
+            f"slice({x}, {a}, ({b}) - ({a}) + 1), "
+            f"raise_error('list_slice: begin below 1 or end below begin'))")
+
+
+def _indexes(before: str) -> bool:
+    """Whether a `[` after ``before`` indexes (or types) what precedes
+    it, rather than open a list literal."""
+    m = re.search(r"(\w+|[)\]\x00])\s*$", before)
+    return bool(m) and m.group(1).lower() not in _KEYWORDS
+
+
+def _operand(done: str, held: list[str]) -> int:
+    """Where the operand that ends ``done`` starts: a dotted name, a
+    call or a bracketed group. Raises ``ValueError`` for any other."""
+    end = len(done.rstrip())
+    if done[end - 1:end] == ")":
+        depth = 0
+        for i in range(end - 1, -1, -1):
+            depth -= _DEPTH.get(done[i], 0)
+            if depth == 0:
+                return re.search(r"\w*$", done[:i]).start()
+    elif m := re.search(r"(?<![\w.\x00])[a-z_][\w.]*$", done[:end], re.I):
+        return m.start()
+    raise ValueError("list index of an operand the rules cannot read: "
+                     + _show(done[-20:], held))
+
+
+def _close(sql: str, start: int,
+           sep: re.Pattern = _COMMA) -> tuple[int, list[str]]:
     """Index of the bracket closing the one at ``start``, and the
-    top-level comma-separated pieces between them, whitespace kept."""
+    top-level pieces between them split at ``sep``, whitespace kept."""
     depth, parts, begin = 0, [], start + 1
     for i in range(start, len(sql)):
         depth += _DEPTH.get(sql[i], 0)
         if depth == 0:
             return i, parts + [sql[begin:i]]
-        if depth == 1 and sql[i] == ",":
+        if depth == 1 and sep.match(sql, i):
             parts.append(sql[begin:i])
             begin = i + 1
     raise ValueError(f"unbalanced brackets: {sql[start:start + 40]!r}")
@@ -148,16 +224,22 @@ def _show(sql: str, held: list[str]) -> str:
 #: queries whose Spark text is ``to_spark`` of the oracle text
 DERIVED = tuple("""
     q22_json_extract q27_text_tokens q28_text_stats q35_string_date
-    q49_array_ops q50_gap_fill q53_array_hof q62_json_typed
-    q63_ngram_jaccard q70_tfidf q77_content_hash_dedup q79_vocab_coverage
-    q92_sequence_pack q109_cohort_ltv q123_interval_union
-    q124_time_to_convert q128_gini_concentration q131_dup_cluster_histogram
-    q132_funnel_latency q135_anomaly_mad_ts q137_source_mix_budget
-    q144_dedup_impact q147_token_length_profile q153_provenance_dedup
-    q154_bm25_topk q156_dedup_keepers q166_arrival_regularity
-    q171_resource_allocation q172_dedup_threshold_curve
-    q176_allpairs_jaccard q177_negative_sampling q179_source_overlap
-    q183_mann_whitney q186_ks_statistic
+    q49_array_ops q50_gap_fill q53_array_hof q62_json_typed q63_ngram_jaccard
+    q66_contamination q67_simhash_hamming q68_doc_chunks q70_tfidf
+    q76_embed_quantize q77_content_hash_dedup q79_vocab_coverage
+    q81_repetition_filter q84_winnow_fingerprint q92_sequence_pack
+    q102_boilerplate_shingles q109_cohort_ltv q123_interval_union
+    q124_time_to_convert q126_token_diversity q128_gini_concentration
+    q131_dup_cluster_histogram q132_funnel_latency q134_cross_source_shingles
+    q135_anomaly_mad_ts q137_source_mix_budget q141_split_contamination
+    q142_vocab_growth q144_dedup_impact q145_substring_dedup
+    q147_token_length_profile q148_benchmark_attribution q149_doc_stitching
+    q153_provenance_dedup q154_bm25_topk q156_dedup_keepers
+    q157_shingle_compressibility q160_lm_transition_score q163_selection_curve
+    q166_arrival_regularity q168_asset_profile q170_payload_dedup
+    q171_resource_allocation q172_dedup_threshold_curve q176_allpairs_jaccard
+    q177_negative_sampling q179_source_overlap q183_mann_whitney
+    q186_ks_statistic
 """.split())
 
 #: name -> Spark SQL the rule table cannot derive
@@ -371,41 +453,6 @@ HAND_WRITTEN: dict[str, str] = {
         group by win, event_type
         order by win, event_type
     """,
-    "q66_contamination": """
-        with ct as (select doc_id, split(lower(text), ' ') as ts
-                    from documents),
-        cg as (select doc_id as corpus_id,
-                      case when size(ts) >= 5 then
-                        array_distinct(transform(sequence(1, size(ts) - 4),
-                          i -> array_join(slice(ts, i, 5), ' ')))
-                      else cast(array() as array<string>) end as ng
-               from ct),
-        bt as (select doc_id,
-                      split(lower(substring(text, 10, 200)), ' ') as ts
-               from documents where doc_id % 97 = 0),
-        bg as (select distinct bench_id, gram from (
-                 select doc_id as bench_id,
-                        explode(case when size(ts) >= 5 then
-                          array_distinct(transform(sequence(1, size(ts) - 4),
-                            i -> array_join(slice(ts, i, 5), ' ')))
-                        else cast(array() as array<string>) end) as gram
-                 from bt)),
-        -- size staged BELOW the explode: in the same select it would
-        -- plan above the Generate and rebuild the array per gram
-        cx as (select corpus_id, n_ngrams, explode(ng) as gram
-               from (select corpus_id,
-                            cast(size(ng) as bigint) as n_ngrams, ng
-                     from cg))
-        select corpus_id, n_ngrams,
-               count(distinct cx.gram) as n_matched,
-               count(distinct bg.bench_id) as n_bench_docs,
-               cast(round(cast(cast(count(distinct cx.gram) as double)
-                       / n_ngrams as decimal(28,10)), 6) as double)
-                 as contam_ratio
-        from cx join bg on cx.gram = bg.gram
-        group by corpus_id, n_ngrams
-        order by corpus_id
-    """,
     "hypertable_rollup": """
         with ev as (select ts, event_type, value from events),
         finest as (
@@ -428,34 +475,6 @@ HAND_WRITTEN: dict[str, str] = {
                  cast(sum(n) as bigint), sum(sum_val_d)
           from finest group by 2, 3)
         order by granularity, bucket, event_type
-    """,
-    "q67_simhash_hamming": """
-        with q as (select vec_id as src, embedding as q_emb
-                   from embeddings where vec_id < 10),
-        c as (select vec_id as dst, embedding from embeddings)
-        select src, dst, ham, rn from (
-          select src, dst, ham,
-                 row_number() over (partition by src
-                                    order by ham, dst) as rn
-          from (select src, dst,
-                  cast(size(filter(zip_with(q_emb, embedding,
-                    (x, y) -> (x >= 0) != (y >= 0)), b -> b))
-                    as bigint) as ham
-                from c join q on dst != src))
-        where rn <= 5 order by src, rn
-    """,
-    "q68_doc_chunks": """
-        with ct as (select doc_id, split(lower(text), ' ') as ts
-                    from documents)
-        select doc_id,
-               cast(floor((start - 1) / 24) as bigint) as chunk_id,
-               cast(start as bigint) as start_pos,
-               cast(size(slice(ts, start, 32)) as bigint) as n_tokens,
-               md5(array_join(slice(ts, start, 32), ' ')) as chunk_hash
-        from (select doc_id, ts,
-                     explode(sequence(1, size(ts), 24)) as start
-              from ct)
-        order by doc_id, chunk_id
     """,
     "q71_quality_filter": """
         with pd as (
@@ -563,47 +582,6 @@ HAND_WRITTEN: dict[str, str] = {
               where bg.cab >= 5)
         order by ratio_raw desc, bigram limit 15
     """,
-    "q76_embed_quantize": """
-        with v as (
-          select label, cast(embedding as array<double>) as e,
-                 cast(127.0 as double)
-                 / greatest(array_max(transform(
-                     cast(embedding as array<double>), x -> abs(x))),
-                     1e-30) as scale
-          from embeddings)
-        select label, count(*) as n,
-               cast(round(cast(avg(array_max(transform(e,
-                       x -> abs(x - round(x * scale) / scale))))
-                     as decimal(28,10)), 6) as double) as avg_max_err,
-               cast(round(cast(avg(scale) as decimal(28,8)), 4)
-                 as double) as avg_scale
-        from v group by label order by label
-    """,
-    "q81_repetition_filter": """
-        with pd as (
-          select lang,
-                 cast(size(bigr) as bigint) as total,
-                 cast(array_max(transform(array_distinct(bigr),
-                   b -> size(filter(bigr, x -> x = b)))) as bigint) as top
-          from (select lang,
-                  case when size(ts) >= 2
-                       then transform(sequence(1, size(ts) - 1),
-                              i -> concat(element_at(ts, i), ' ',
-                                          element_at(ts, i + 1)))
-                       else cast(array() as array<string>) end as bigr
-                from (select lang,
-                        filter(split(lower(text), ' '), t -> t != '')
-                          as ts
-                      from documents)))
-        select lang, count(*) as n_docs,
-               cast(sum(case when total > 0 and
-                   cast(top as double) / cast(total as double) > 0.05
-                   then 1 else 0 end) as bigint) as n_flagged,
-               cast(round(cast(avg(case when total > 0 then
-                   cast(top as double) / cast(total as double) end)
-                 as decimal(28,10)), 6) as double) as avg_top_frac
-        from pd group by lang order by lang
-    """,
     "q82_cosine_pairs": """
         with q as (
           select vec_id as a, cast(embedding as array<double>) as a_emb,
@@ -629,19 +607,6 @@ HAND_WRITTEN: dict[str, str] = {
           from c join q on a < b)
         where cs >= 0.3
         order by a, b
-    """,
-    "q84_winnow_fingerprint": """
-        select doc_id, cast(size(wg) as bigint) as n_windows,
-               array_min(wg) as fingerprint
-        from (select doc_id,
-                case when size(ts) >= 4
-                     then transform(sequence(1, size(ts) - 3),
-                            i -> md5(array_join(slice(ts, i, 4), ' ')))
-                     else cast(array() as array<string>) end as wg
-              from (select doc_id,
-                      filter(split(lower(text), ' '), t -> t != '') as ts
-                    from documents))
-        order by doc_id
     """,
     "q88_retention": """
         with f as (select user_id, date_trunc('week', min(ts)) as cohort
@@ -747,53 +712,6 @@ HAND_WRITTEN: dict[str, str] = {
               join nation on n_nationkey = c_nationkey
         group by n_name order by n_name
     """,
-    "q102_boilerplate_shingles": """
-        with t as (
-            select doc_id, lang, split(text, ' ') as toks
-            from documents),
-        f as (select * from t where size(toks) >= 4),
-        g as (
-            select doc_id, lang, explode(transform(
-                     sequence(1, size(toks) - 3),
-                     i -> concat_ws(' ', slice(toks, i, 4)))) as sh
-            from f),
-        s as (select lang, sh, count(distinct doc_id) as nd
-              from g group by lang, sh)
-        select lang,
-               cast(count(*) as bigint) as n_shingles,
-               cast(sum(case when nd > 1 then 1 else 0 end)
-                    as bigint) as n_shared,
-               cast(round(cast(cast(sum(case when nd > 1 then 1 else 0 end)
-                    as double) / cast(count(*) as double)
-                    as decimal(28,10)), 6) as double) as shared_ratio
-        from s group by lang order by lang
-    """,
-    "q126_token_diversity": """
-        with tok as (
-          select source as grp,
-                 explode(split(lower(text), ' ')) as tok
-          from documents),
-        pt as (
-          select grp, tok, cast(count(*) as bigint) as ct
-          from tok where tok <> '' group by grp, tok),
-        ag as (
-          select grp,
-                 cast(sum(ct) as bigint) as n_tokens,
-                 cast(count(*) as bigint) as n_types,
-                 sum(cast(ct as decimal(19,0))
-                     * cast(ct as decimal(19,0))) as sq
-          from pt group by grp)
-        select grp as source, n_tokens, n_types,
-               cast(round(cast(
-                 cast(n_types as double) / cast(n_tokens as double)
-                 as decimal(28,10)), 6) as double) as type_token_ratio,
-               cast(round(cast(
-                 1.0d - cast(sq as double)
-                   / (cast(n_tokens as double)
-                      * cast(n_tokens as double))
-                 as decimal(28,10)), 6) as double) as simpson_index
-        from ag order by source
-    """,
     "q127_asof_forward": """
         with c as (
           select event_id, user_id, ts from events
@@ -861,32 +779,6 @@ HAND_WRITTEN: dict[str, str] = {
                  as decimal(28,10)), 6) as double) as cramers_v
         from terms
     """,
-    "q134_cross_source_shingles": """
-        with t as (select source, split(text, ' ') as toks
-                   from documents),
-        f as (select * from t where size(toks) >= 4),
-        g as (
-            select distinct source,
-                   concat_ws(' ', slice(toks, i, 4)) as sh
-            from f lateral view explode(sequence(1, size(toks) - 3))
-                 u as i),
-        v as (select source, cast(count(*) as bigint) as n_sh
-              from g group by source),
-        o as (
-            select a.source as src_a, b.source as src_b,
-                   cast(count(*) as bigint) as n_shared
-            from g a join g b on a.sh = b.sh and a.source < b.source
-            group by 1, 2)
-        select src_a, src_b, va.n_sh as n_a, vb.n_sh as n_b, n_shared,
-               cast(round(cast(
-                    cast(n_shared as double)
-                    / cast(va.n_sh + vb.n_sh - n_shared as double)
-                    as decimal(28,10)), 6) as double) as jaccard
-        from o
-        join v va on va.source = o.src_a
-        join v vb on vb.source = o.src_b
-        order by src_a, src_b
-    """,
     "q138_seasonal_dow": """
         with per as (
             select event_type,
@@ -901,82 +793,6 @@ HAND_WRITTEN: dict[str, str] = {
                            as double)
                     as decimal(28,8)), 6) as double) as dow_index
         from per order by event_type, isodow
-    """,
-    "q141_split_contamination": """
-        with assigned as (
-            select doc_id as doc,
-                   case when (doc_id * 2654435761) % 4294967296
-                             % 100 < 80 then 'train'
-                        when (doc_id * 2654435761) % 4294967296
-                             % 100 < 90 then 'val'
-                        else 'test' end as split,
-                   split(text, ' ') as toks
-            from documents),
-        f as (select * from assigned where size(toks) >= 4),
-        sh as (
-            select split, doc,
-                   concat_ws(' ', slice(toks, i, 4)) as sh
-            from f lateral view explode(sequence(1, size(toks) - 3))
-                 u as i),
-        train_vocab as (
-            select distinct sh from sh where split = 'train'),
-        held_sh as (
-            select distinct split, sh from sh where split <> 'train'),
-        sh_stats as (
-            select h.split,
-                   cast(count(*) as bigint) as n_shingles,
-                   cast(sum(case when t.sh is not null
-                            then 1 else 0 end) as bigint) as n_leaked
-            from held_sh h left join train_vocab t on h.sh = t.sh
-            group by h.split),
-        held_docs as (
-            select distinct split, doc from sh where split <> 'train'),
-        leaked_docs as (
-            select distinct s.split, s.doc
-            from sh s join train_vocab t on s.sh = t.sh
-            where s.split <> 'train'),
-        doc_stats as (
-            select hd.split,
-                   cast(count(*) as bigint) as n_docs,
-                   cast(sum(case when ld.doc is not null
-                            then 1 else 0 end) as bigint)
-                     as n_docs_leaked
-            from held_docs hd
-            left join leaked_docs ld
-              on hd.split = ld.split and hd.doc = ld.doc
-            group by hd.split)
-        select s.split, n_shingles, n_leaked,
-               cast(round(cast(
-                    cast(n_leaked as double)
-                    / cast(n_shingles as double)
-                    as decimal(28,10)), 6) as double)
-                 as shingle_leak_ratio,
-               n_docs, n_docs_leaked,
-               cast(round(cast(
-                    cast(n_docs_leaked as double)
-                    / cast(n_docs as double)
-                    as decimal(28,10)), 6) as double) as doc_leak_ratio
-        from sh_stats s join doc_stats d on s.split = d.split
-        order by s.split
-    """,
-    "q142_vocab_growth": """
-        with toks as (
-            select doc_id as doc, tok
-            from documents
-            lateral view explode(split(text, ' ')) t as tok
-            where tok <> ''),
-        firsts as (
-            select tok, min(doc) as first_doc from toks group by tok),
-        m as (select max(doc_id) as mx from documents),
-        pcts as (
-            select pct, mx
-            from m lateral view explode(sequence(10, 100, 10))
-                 p as pct)
-        select cast(pct as bigint) as pct,
-               cast(count(*) as bigint) as vocab_size
-        from firsts cross join pcts
-        where first_doc <= floor(mx * pct / 100)
-        group by pct order by pct
     """,
     "q143_seasonal_burst": """
         with per as (
@@ -1013,64 +829,6 @@ HAND_WRITTEN: dict[str, str] = {
         where var > 0
           and (cast(cnt as double) - mean) / sqrt(var) > 2.0
         order by event_type, bucket
-    """,
-    "q145_substring_dedup": """
-        with base as (
-            select doc_id, source,
-                   filter(split(lower(text), ' '), t -> t <> '') as toks
-            from documents),
-        st as (select doc_id, source, size(toks) as n_toks, toks
-               from base),
-        stf as (select * from st where n_toks >= 8),
-        sh as (
-            select doc_id, source, p0 + 1 as pos, sh
-            from stf
-            lateral view posexplode(transform(sequence(1, n_toks - 7),
-                i -> md5(array_join(slice(toks, i, 8), ' '))))
-              t as p0, sh),
-        dup as (select sh from sh group by sh
-                having min(doc_id) <> max(doc_id)),
-        dp as (select s.doc_id, s.source, s.pos
-               from sh s join dup d on s.sh = d.sh),
-        lg as (select doc_id, source, pos,
-                      lag(pos) over (partition by doc_id
-                                     order by pos) as prev
-               from dp),
-        isl as (select doc_id, source, pos,
-                       sum(case when pos - prev > 8 then 1 else 0 end)
-                         over (partition by doc_id order by pos
-                               rows between unbounded preceding
-                               and current row) as grp
-                from lg),
-        spans as (select doc_id, source,
-                         max(pos) - min(pos) + 8 as span_tokens
-                  from isl group by doc_id, source, grp),
-        per_doc as (select source, doc_id, count(*) as n_spans,
-                           sum(span_tokens) as covered,
-                           max(span_tokens) as mx
-                    from spans group by 1, 2),
-        tot as (select source, cast(count(*) as bigint) as n_docs,
-                       cast(sum(n_toks) as bigint) as total_tokens
-                from st group by source),
-        agg as (select source,
-                       cast(count(*) as bigint) as n_docs_with_repeat,
-                       cast(sum(n_spans) as bigint) as n_spans,
-                       cast(sum(covered) as bigint) as dup_tokens,
-                       cast(max(mx) as bigint) as max_span_tokens
-                from per_doc group by source)
-        select t.source, t.n_docs, t.total_tokens,
-               cast(coalesce(a.n_docs_with_repeat, 0) as bigint)
-                 as n_docs_with_repeat,
-               cast(coalesce(a.n_spans, 0) as bigint) as n_spans,
-               cast(coalesce(a.dup_tokens, 0) as bigint) as dup_tokens,
-               cast(coalesce(a.max_span_tokens, 0) as bigint)
-                 as max_span_tokens,
-               cast(round(cast(
-                    cast(coalesce(a.dup_tokens, 0) as double)
-                    / cast(t.total_tokens as double)
-                    as decimal(28,10)), 6) as double) as dup_token_ratio
-        from tot t left join agg a on a.source = t.source
-        order by t.source
     """,
     "q146_pii_scan": """
         with planted as (
@@ -1117,78 +875,6 @@ HAND_WRITTEN: dict[str, str] = {
                     / cast(count(*) as double)
                     as decimal(28,10)), 6) as double) as pii_doc_ratio
         from per_doc group by source order by source
-    """,
-    "q148_benchmark_attribution": """
-        with benches as (
-            select 'bench_a' as bench, substring(text, 10, 200) as text
-            from documents where doc_id % 97 = 0
-            union all
-            select 'bench_b', substring(text, 30, 200)
-            from documents where doc_id % 89 = 0
-            union all
-            select 'bench_c', substring(text, 50, 200)
-            from documents where doc_id % 83 = 0),
-        bt as (select bench, split(lower(text), ' ') as ts from benches),
-        bg as (select distinct bench, gram from (
-                 select bench,
-                        explode(case when size(ts) >= 5 then
-                          transform(sequence(1, size(ts) - 4),
-                            i -> array_join(slice(ts, i, 5), ' '))
-                        else cast(array() as array<string>) end) as gram
-                 from bt)),
-        ct as (select source, doc_id as doc, split(lower(text), ' ') as ts
-               from documents),
-        cg as (select source, doc,
-                      explode(case when size(ts) >= 5 then
-                        array_distinct(transform(sequence(1, size(ts) - 4),
-                          i -> array_join(slice(ts, i, 5), ' ')))
-                      else cast(array() as array<string>) end) as gram
-               from ct),
-        hits as (
-            select source, bench,
-                   cast(count(*) as bigint) as n_contaminated
-            from (select distinct cg.source, cg.doc, bg.bench
-                  from cg join bg on cg.gram = bg.gram)
-            group by source, bench),
-        totals as (select source, cast(count(*) as bigint) as n_docs
-                   from documents group by source),
-        grid as (select t.source, b.bench, t.n_docs
-                 from totals t
-                 cross join (select distinct bench from benches) b)
-        select g.source, g.bench, g.n_docs,
-               cast(coalesce(h.n_contaminated, 0) as bigint)
-                 as n_contaminated,
-               cast(round(cast(
-                    cast(coalesce(h.n_contaminated, 0) as double)
-                    / cast(g.n_docs as double)
-                    as decimal(28,10)), 6) as double) as contam_doc_ratio
-        from grid g left join hits h
-          on g.source = h.source and g.bench = h.bench
-        order by g.source, g.bench
-    """,
-    "q149_doc_stitching": """
-        with base as (
-            select doc_id as doc, source as src,
-                   filter(split(lower(text), ' '), t -> t <> '') as toks
-            from documents),
-        st as (select doc, src, size(toks) as n, toks
-               from base where size(toks) >= 6),
-        edges as (
-            select doc, src,
-                   md5(array_join(slice(toks, 1, 3), ' ')) as head,
-                   md5(array_join(slice(toks, n - 2, 3), ' ')) as tail
-            from st),
-        pairs as (
-            select t.src as src_from, h.src as src_to,
-                   t.doc as doc_from, h.doc as doc_to
-            from edges t join edges h on t.tail = h.head
-            where t.doc <> h.doc)
-        select src_from, src_to,
-               cast(count(*) as bigint) as n_pairs,
-               cast(count(distinct doc_from) as bigint) as n_from_docs,
-               cast(count(distinct doc_to) as bigint) as n_to_docs
-        from pairs group by src_from, src_to
-        order by src_from, src_to
     """,
     "q150_embedding_drift": """
         with ex as (
@@ -1315,51 +1001,6 @@ HAND_WRITTEN: dict[str, str] = {
                  as tokens_per_char
         from per_doc group by source order by source
     """,
-    # Shingle compressibility twin (q157): Spark posexplode over the
-    # same k=8 md5 windows.
-    "q157_shingle_compressibility": """
-        with st as (
-            select source,
-                   filter(split(lower(text), ' '), t -> t != '')
-                     as toks
-            from documents),
-        sh as (
-            select source,
-                   explode(transform(
-                       sequence(1, size(toks) - 7),
-                       i -> md5(array_join(slice(toks, i, 8), ' '))))
-                     as sh
-            from st where size(toks) >= 8),
-        per_sh as (
-            select source, sh, cast(count(*) as bigint) as c
-            from sh group by source, sh)
-        select source,
-               cast(sum(c) as bigint) as total_shingles,
-               cast(count(*) as bigint) as distinct_shingles,
-               cast(round(cast(
-                    cast(sum(c) - count(*) as double)
-                    / cast(sum(c) as double)
-                    as decimal(28,10)), 6) as double)
-                 as dup_shingle_ratio
-        from per_sh group by source order by source
-    """,
-    # LM transition score (q160): Spark HOF bigram formation, same
-    # rational arithmetic as the DataFrame door. The scored-relation
-    # CTE chain is the SHARED fragment (sql_fragments.py) composed
-    # into q160 AND q163 — edit it once, everywhere.
-    "q160_lm_transition_score": LM_SCORED_CTES_SPARKSQL + """
-        select source,
-               cast(count(*) as bigint) as n_docs,
-               cast(sum(n_trans) as bigint) as n_transitions,
-               cast(round(cast(cast(sum(num) as double)
-                    / cast(sum(den) as double)
-                    as decimal(28,10)), 6) as double) as micro_score,
-               cast(round(cast(min(score) as decimal(28,10)), 6)
-                 as double) as min_score,
-               cast(round(cast(max(score) as decimal(28,10)), 6)
-                 as double) as max_score
-        from scored group by source order by source
-    """,
     # Gopher-rule attribution (q162): Spark HOF spellings of the four
     # exact-integer rules.
     "q162_gopher_rules": """
@@ -1421,28 +1062,6 @@ HAND_WRITTEN: dict[str, str] = {
                     as decimal(28,10)), 6) as double) as reject_ratio
         from flags group by source order by source
     """,
-    # Selection curve (q163): q160's SHARED Spark-dialect scored
-    # relation (sql_fragments.py) swept over the explode()d grid.
-    "q163_selection_curve": LM_SCORED_CTES_SPARKSQL + """,
-        thr as (
-            select explode(array(cast(0.02 as double),
-                                 cast(0.03 as double),
-                                 cast(0.035 as double),
-                                 cast(0.04 as double))) as thr)
-        select source, thr,
-               cast(count(*) as bigint) as n_docs,
-               cast(sum(case when score >= thr then 1 else 0 end)
-                 as bigint) as n_docs_kept,
-               cast(sum(case when score >= thr then n_trans
-                             else 0 end) as bigint) as n_trans_kept,
-               cast(round(cast(
-                    cast(sum(case when score >= thr then 1 else 0 end)
-                         as double)
-                    / cast(count(*) as double)
-                    as decimal(28,10)), 6) as double) as kept_ratio
-        from scored cross join thr
-        group by source, thr order by source, thr
-    """,
     # Bounded temporal reach (q158): Spark datediff(end, start)
     # spelling of DuckDB's 3-arg date_diff('day', ...).
     "q158_temporal_reach2": """
@@ -1471,42 +1090,6 @@ HAND_WRITTEN: dict[str, str] = {
             select * from h1 union all select * from h2)
         select id, cast(min(arr) as double) as arrival_day
         from allh group by id order by id
-    """,
-    # Multimodal asset inventory (q168): Spark spellings — binary
-    # cast for payload bytes, element_at for the modality tables.
-    # Asset inventory (q168): the manifest CTE is the SHARED fragment
-    # (sql_fragments.py) composed into q168 AND q170; the binary cast
-    # happens at the consumer (fragment carries payload_text).
-    "q168_asset_profile": ASSET_MANIFEST_CTE_SPARKSQL + """,
-        per_payload as (
-            select modality, media_type,
-                   md5(cast(payload_text as binary)) as h,
-                   cast(count(*) as bigint) as c,
-                   cast(sum(coalesce(octet_length(
-                        cast(payload_text as binary)), 0)) as bigint)
-                     as b
-            from manifest
-            group by modality, media_type,
-                     md5(cast(payload_text as binary)))
-        select modality, media_type,
-               cast(sum(c) as bigint) as n_assets,
-               cast(sum(b) as bigint) as total_bytes,
-               cast(sum(case when h is not null then 1 else 0 end)
-                 as bigint) as n_distinct_payloads,
-               cast(sum(case when h is null then c else 0 end)
-                 as bigint) as n_missing,
-               cast(sum(case when h is not null then c else 0 end)
-                    - sum(case when h is not null then 1 else 0 end)
-                 as bigint) as n_removable,
-               cast(round(cast(
-                    cast(sum(case when h is not null then c
-                             else 0 end)
-                         - sum(case when h is not null then 1
-                               else 0 end) as double)
-                    / cast(sum(c) as double)
-                    as decimal(28,10)), 6) as double) as dup_ratio
-        from per_payload group by modality, media_type
-        order by modality, media_type
     """,
     # Vector hygiene (q169): Spark HOF spellings; same fold order.
     # NULL vectors are their own defect class (ADVICE r12).
@@ -1617,25 +1200,6 @@ HAND_WRITTEN: dict[str, str] = {
                     (vmax_raw - vmin_raw) / cast(255.0 as double)
                     as decimal(28,12)), 8) as double) as int8_scale
         from agg order by dim
-    """,
-    # Payload dedup (q170): shared manifest fragment; the window key
-    # is (modality, md5) exactly as the DataFrame door.
-    "q170_payload_dedup": ASSET_MANIFEST_CTE_SPARKSQL + """,
-        h as (
-            select asset_id, modality,
-                   md5(cast(payload_text as binary)) as payload_hash
-            from manifest)
-        select asset_id, modality, payload_hash,
-               cast(case when payload_hash is not null
-                    then count(*) over (partition by modality,
-                                        payload_hash)
-                    else 0 end as bigint) as cluster_size,
-               cast(case when payload_hash is not null
-                         and asset_id = min(asset_id)
-                             over (partition by modality,
-                                   payload_hash)
-                    then 1 else 0 end as bigint) as is_keeper
-        from h order by asset_id
     """,
 }
 

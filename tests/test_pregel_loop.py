@@ -8,7 +8,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from puregraphdb_spark.engine import Engine
-from puregraphdb_spark.operators.graph import Graph
+from puregraphdb_spark.operators.community import louvain
+from puregraphdb_spark.operators.graph import Graph, temporal_reach
 from tests.conftest import SF_DIR
 
 LONG_MAX = (1 << 63) - 1
@@ -68,8 +69,13 @@ def _read_rdds(df) -> set[int]:
     lambda g: g.ktruss(3, local_finish_edges=0),
     lambda g: g.betweenness_centrality([1, 10]),
     lambda g: g.betweenness_centrality([1, 2, 10], source_batch=1),
+    lambda g: louvain(g.edges),
+    lambda g: temporal_reach(
+        g.edges.withColumn("ts", F.col("src") * 10.0 + F.col("dst")),
+        g.vertices.filter(F.col("id") == 1)),
 ], ids=["pagerank", "cc", "lpa", "sssp", "kcore", "coreness", "ktruss",
-        "ktruss_distributed", "betweenness", "betweenness_batched"])
+        "ktruss_distributed", "betweenness", "betweenness_batched",
+        "louvain", "temporal_reach"])
 def test_loop_leaves_only_the_returned_state_cached(spark, k4, algo):
     before = _persistent_rdds(spark)
     out = algo(k4)

@@ -7,12 +7,13 @@ through ``Engine.sql``.
 
 from __future__ import annotations
 
+import duckdb
 import pandas as pd
 import pytest
 
 import __spark_entry__ as entrymod
 from puregraphdb_spark.engine import Engine
-from puregraphdb_spark.sql_library import SPARK_SQL
+from puregraphdb_spark.sql_library import SPARK_SQL, to_spark
 from tests.conftest import SF_DIR, assert_frames_match
 
 QUERIES = entrymod.queries()
@@ -53,3 +54,20 @@ def test_engine_sql_for(eng, spark):
     assert_frames_match(got, want)
     with pytest.raises(KeyError):
         eng.sql_for("not_a_query")
+
+
+def test_guarded_slice_is_exact_or_raises(eng):
+    """DuckDB's computed slice derives to a guarded Spark ``slice``:
+    equal to DuckDB where the guard holds, an error (not a list that
+    differs) where it does not."""
+    def both(sl):
+        sql = f"select l{sl} as s from (select [1, 2, 3] as l)"
+        return eng.sql(to_spark(sql)).collect()[0].s, duckdb.sql(
+            sql).fetchone()[0]
+
+    for sl in ("[2:3]", "[2:9]", "[2:1]", "[4:5]"):
+        got, want = both(sl)
+        assert list(got) == want, sl
+    for sl in ("[0:2]", "[3:1]"):
+        with pytest.raises(Exception, match="list_slice"):
+            both(sl)
