@@ -34,6 +34,7 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
+from puregraphdb_spark.jvm import jvm_class
 from puregraphdb_spark.sources.registry import load_table
 
 _FLAT_CHECKPOINT_WARNED = False
@@ -128,14 +129,12 @@ def flat_checkpoint(df: DataFrame) -> DataFrame:
         spark = ck.sparkSession
         jss = spark._jsparkSession
         rel = ck._jdf.queryExecution().analyzed()  # the LogicalRDD
-        none = spark._jvm.scala.Option.empty()
+        none = jvm_class(spark._jvm, "scala.Option").empty()
         flat = rel.copy(rel.output(), rel.rdd(), rel.outputPartitioning(),
                         rel.outputOrdering(), rel.isStreaming(),
                         rel.stream(), jss, none, none)
-        return DataFrame(
-            spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-                jss, flat),
-            spark)
+        dataset = jvm_class(spark._jvm, "org.apache.spark.sql.classic.Dataset")
+        return DataFrame(dataset.ofRows(jss, flat), spark)
     except Exception:  # pragma: no cover - version-dependent internal
         # ADVICE r7: the silent fallback reintroduces the BigInt-stats
         # planning blowup this function exists to fix (0.6 s → 190 s
@@ -157,8 +156,13 @@ def flat_checkpoint(df: DataFrame) -> DataFrame:
 
 def _release(checkpoint: DataFrame) -> None:
     """Drop the blocks of a ``flat_checkpoint`` result. Only for a
-    checkpoint nothing will read again."""
-    checkpoint._jdf.queryExecution().analyzed().rdd().unpersist(True)
+    checkpoint nothing will read again.
+
+    Calls ``SparkContext.unpersistRDD`` directly: ``RDD.unpersist`` makes
+    the same call, after logging a WARN per locally checkpointed RDD that
+    its lineage is gone, which is the point of releasing it."""
+    rdd = checkpoint._jdf.queryExecution().analyzed().rdd()
+    rdd.context().unpersistRDD(rdd.id(), True)
 
 
 def _local_ktruss_finish(edges: list[tuple], need: int) -> list[tuple]:
