@@ -26,6 +26,7 @@ lineage, so no plan grows past one superstep (SURVEY §3 EP3).
 
 from __future__ import annotations
 
+import functools
 import re
 import warnings
 from collections.abc import Callable
@@ -34,7 +35,6 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
-from puregraphdb_spark.jvm import jvm_class
 from puregraphdb_spark.sources.registry import load_table
 
 _FLAT_CHECKPOINT_WARNED = False
@@ -102,6 +102,16 @@ def _pred_column(pred: str, cols: dict[str, Column],
     }[op]
 
 
+@functools.cache
+def _checkpoint_classes(jvm):
+    """``scala.Option`` and ``classic.Dataset`` in the JVM behind ``jvm``,
+    resolved once per JVM view. py4j probes every dotted prefix of a name
+    as a class, so a resolution costs 0.6 ms (``scala.Option``) to 1.3 ms
+    (``classic.Dataset``) against 0.09 ms for a call on a held class, and
+    ``flat_checkpoint`` runs once per superstep."""
+    return jvm.scala.Option, jvm.org.apache.spark.sql.classic.Dataset
+
+
 def flat_checkpoint(df: DataFrame) -> DataFrame:
     """Eager localCheckpoint WITHOUT inherited statistics — the lineage
     cut for iterative DataFrame loops.
@@ -129,11 +139,11 @@ def flat_checkpoint(df: DataFrame) -> DataFrame:
         spark = ck.sparkSession
         jss = spark._jsparkSession
         rel = ck._jdf.queryExecution().analyzed()  # the LogicalRDD
-        none = jvm_class(spark._jvm, "scala.Option").empty()
+        option, dataset = _checkpoint_classes(spark._jvm)
+        none = option.empty()
         flat = rel.copy(rel.output(), rel.rdd(), rel.outputPartitioning(),
                         rel.outputOrdering(), rel.isStreaming(),
                         rel.stream(), jss, none, none)
-        dataset = jvm_class(spark._jvm, "org.apache.spark.sql.classic.Dataset")
         return DataFrame(dataset.ofRows(jss, flat), spark)
     except Exception:  # pragma: no cover - version-dependent internal
         # ADVICE r7: the silent fallback reintroduces the BigInt-stats

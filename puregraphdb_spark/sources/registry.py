@@ -7,13 +7,14 @@ reader, row-group statistics skipping, predicate pushdown and column
 pruning for free. Anything we wrapped around it (manual partitioning,
 eager caching) would only remove optimizer freedom.
 
-The one thing ``load_table`` does before the read is take the table's
-schema from its parquet footer on the driver (fixed schemas — SURVEY.md
-§1.2) and hand it to ``spark.read.schema(...)``. Spark's own schema
-inference runs a job even for one file, which would make registering
-the ten tables ten jobs before the first query. The footer read goes
-through the same Spark helpers and session flags as that job, so the
-schema and the plan are the same.
+The one thing ``load_table`` does before the read is take a one-file
+table's schema from its parquet footer on the driver (fixed schemas —
+SURVEY.md §1.2) and hand it to ``spark.read.schema(...)``. Spark's own
+schema inference runs a job even for one file, which would make
+registering the ten tables ten jobs before the first query. The footer
+read goes through the same Spark helpers and session flags as that job,
+so the schema and the plan are the same. A table stored as a directory
+keeps Spark's inference.
 
 At 100 TB the same entry point works unchanged: point ``data_dir`` at a
 directory tree partitioned by a natural key (e.g. ship month) and Spark
@@ -31,11 +32,6 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
-
-from puregraphdb_spark.jvm import jvm_class
-
-#: The Scala object holding Spark's parquet footer and schema helpers.
-_PARQUET_FORMAT = "org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat$"
 
 #: The canonical table set (driver registers the same names as DuckDB views).
 TABLES = (
@@ -87,46 +83,17 @@ def _scan_partitions(spark: SparkSession) -> int:
     return par
 
 
-def _is_listed(name: str) -> bool:
-    """Whether Spark's file listing keeps a directory entry of this name
-    (``HadoopFSUtils.shouldFilterOutPathName``): hidden and ``_`` names
-    are dropped, except the parquet summary files."""
-    hidden = ((name.startswith("_") and "=" not in name)
-              or name.startswith(".") or name.endswith("._COPYING_"))
-    return not hidden or name.startswith(("_common_metadata", "_metadata"))
-
-
-def _schema_file(statuses):
-    """The entry of a table directory that Spark's schema inference reads
-    (``ParquetUtils.inferSchema`` with mergeSchema off):
-    ``_common_metadata``, else ``_metadata``, else the first data file in
-    path order. None if the directory has a listed subdirectory (partition
-    discovery) or no file at all."""
-    files = {}
-    for status in statuses:
-        name = status.getPath().getName()
-        if not _is_listed(name):
-            continue
-        if status.isDirectory():
-            return None
-        files[name] = status
-    for summary in ("_common_metadata", "_metadata"):
-        if summary in files:
-            return files[summary]
-    data = sorted(n for n in files if n not in ("_common_metadata", "_metadata"))
-    return files[data[0]] if data else None
-
-
 def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
-    """The schema Spark's parquet inference gives ``path``, read on the
-    driver from the one footer that inference reads. It goes through
-    Spark's own ``ParquetFileFormat.readSchema``, which builds its schema
+    """The schema Spark's parquet inference gives the single file
+    ``path``, read on the driver from its footer. It goes through Spark's
+    own ``ParquetFileFormat.readSchema``, which builds its schema
     converter from the session conf just as the inference job does
     (``nanosAsLong``, the TIMESTAMP_NTZ rules), and reads the Spark schema
     a Spark writer stored in the footer, field metadata included.
 
-    None where only Spark's inference will do: schema merging is on, the
-    path does not exist, it is a partitioned directory, or the footer
+    None where Spark's inference is left to do it: schema merging is on,
+    the path does not exist, it is a directory (part files, or a
+    partitioned layout that needs partition discovery), or the footer
     does not read. The caller then reads without a schema, so any error
     is Spark's own."""
     if spark.conf.get("spark.sql.parquet.mergeSchema", "false").lower() == "true":
@@ -134,15 +101,13 @@ def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
     try:
         jvm, jss = spark._jvm, spark._jsparkSession
         conf = jss.sessionState().newHadoopConf()
-        hpath = jvm_class(jvm, "org.apache.hadoop.fs.Path")(path)
-        fs = hpath.getFileSystem(conf)
-        status = fs.getFileStatus(hpath)
+        hpath = jvm.org.apache.hadoop.fs.Path(path)
+        status = hpath.getFileSystem(conf).getFileStatus(hpath)
         if status.isDirectory():
-            status = _schema_file(fs.listStatus(hpath))
-            if status is None:
-                return None
-        parquet = getattr(jvm_class(jvm, _PARQUET_FORMAT), "MODULE$")
-        files = jvm_class(jvm, "org.apache.spark.api.python.PythonUtils").toSeq([status])
+            return None
+        parquet = getattr(getattr(jvm.org.apache.spark.sql.execution.datasources.parquet,
+                                  "ParquetFileFormat$"), "MODULE$")
+        files = jvm.org.apache.spark.api.python.PythonUtils.toSeq([status])
         footers = parquet.readParquetFootersInParallel(conf, files, False)
         schema = parquet.readSchema(footers, jss)
     except Py4JError:  # a missing or unreadable file, or no such helper
@@ -159,10 +124,11 @@ def load_table(spark: SparkSession, data_dir: str, name: str) -> DataFrame:
     Hadoop-compatible URI (s3://, hdfs://, file:/), matching the
     partitioned-directory 100-TB posture.
 
-    The schema comes from the parquet footer, read on the driver by
-    ``_footer_schema``, because Spark's inference would run one job per
-    table to read that same footer. The partitioned-directory fallback
-    keeps Spark's inference: partition discovery needs its file index.
+    For a one-file table the schema comes from its parquet footer, read
+    on the driver by ``_footer_schema``, because Spark's inference would
+    run one job per table to read that same footer. A directory (part
+    files, or the partitioned-directory fallback) keeps Spark's
+    inference, which lists it and discovers its partitions.
     """
     # The memo key includes the repartition width the CURRENT session
     # conf would pick: memoizing only on (session, dir, name) let the
@@ -239,11 +205,11 @@ def table_bytes(spark: SparkSession, data_dir: str, name: str) -> int:
     no data is read."""
     key = (data_dir, name)
     if key not in _SIZES:
-        hadoop_path = jvm_class(spark._jvm, "org.apache.hadoop.fs.Path")
+        jvm = spark._jvm
         conf = spark._jsc.hadoopConfiguration()
         total = 0
         for cand in (f"{name}.parquet", name):
-            path = hadoop_path(os.path.join(data_dir, cand))
+            path = jvm.org.apache.hadoop.fs.Path(os.path.join(data_dir, cand))
             fs = path.getFileSystem(conf)
             if fs.exists(path):
                 total = int(fs.getContentSummary(path).getLength())

@@ -69,7 +69,7 @@ def test_register_all_views_runs_no_job(fresh):
 
 def test_spark_written_directory_loads_with_inferred_schema(fresh, tmp_path):
     """A ``{name}.parquet/`` directory of Spark part files (plus the
-    ``_SUCCESS`` marker) loads from the first part file's footer, with
+    ``_SUCCESS`` marker) is left to Spark's inference, and loads with
     Spark's schema and the field metadata a Spark writer stores."""
     nation = load_table(fresh, SF_DIR, "nation").select(
         "n_nationkey", F.col("n_name").alias("n_name", metadata={"doc": "name"}))
@@ -77,11 +77,8 @@ def test_spark_written_directory_loads_with_inferred_schema(fresh, tmp_path):
     nation.repartition(3).write.parquet(path)
     assert os.path.exists(os.path.join(path, "_SUCCESS"))
 
-    assert registry._footer_schema(fresh, path) is not None
-    loaded = []
-    assert _jobs(fresh, "load-part-files",
-                 lambda: loaded.append(load_table(fresh, str(tmp_path), "nation"))) == 0
-    back = loaded[0]
+    assert registry._footer_schema(fresh, path) is None
+    back = load_table(fresh, str(tmp_path), "nation")
     assert back.schema == fresh.read.parquet(path).schema
     assert back.schema["n_name"].metadata == {"doc": "name"}
     assert sorted(back.collect()) == sorted(nation.collect())
@@ -91,8 +88,8 @@ def test_spark_written_directory_loads_with_inferred_schema(fresh, tmp_path):
 def test_partitioned_table_keeps_spark_inference(fresh, tmp_path, dirname):
     """A ``write_partitioned`` table is left to Spark's inference, which
     adds the partition column: under ``{name}/`` through the fallback
-    read, under ``{name}.parquet/`` because the footer path refuses a
-    directory with subdirectories."""
+    read, under ``{name}.parquet/`` because the footer path leaves every
+    directory to Spark."""
     orders = load_table(fresh, SF_DIR, "orders").withColumn(
         "o_year", F.year("o_orderdate"))
     write_partitioned(orders, str(tmp_path / dirname), partition_by=["o_year"])
